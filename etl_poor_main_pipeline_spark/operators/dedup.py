@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint_md5, shingles_expr, tokens_expr
+from ..session import barrier
 
 #: Mersenne prime 2^31-1 — the modulus for both the universal MinHash
 #: coefficients and the portable polynomial string hash. Every intermediate
@@ -343,7 +344,7 @@ def jaccard_token_sets(
     # token sets are xxhash64-hashed: the pairwise intersection only needs
     # set cardinalities, and bigint intersection measured ~2x faster than
     # string intersection (collision probability within a pair ~1e-13)
-    base = (
+    base = barrier(
         spread(df)
         .select(
             F.col(id_col),
@@ -370,7 +371,6 @@ def jaccard_token_sets(
                 " (acc, h) -> acc | shiftleft(1L, cast(pmod(h, 64) as int)))"
             ),
         )
-        .localCheckpoint(eager=False)
     )
     a = base.select(
         "*", F.explode(F.array(F.col("_bkt") - 1, F.col("_bkt"), F.col("_bkt") + 1)).alias("_jbkt")
@@ -522,7 +522,7 @@ def connected_components(
                 ).alias("component"),
             )
         )
-        new_labels = new_labels.localCheckpoint(eager=True)
+        new_labels = barrier(new_labels, eager=True)
         changed = (
             new_labels.alias("n")
             .join(labels.alias("o"), "node")

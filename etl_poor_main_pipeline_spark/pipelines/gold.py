@@ -34,9 +34,10 @@ def run(
 ) -> int:
     us = read_partition(spark, silver_table("US").path(lake_root), date_id)
     ca = read_partition(spark, silver_table("CA").path(lake_root), date_id)
+    # W2 empty-day guard (ref dashboard__north_america_weather.py:75-77)
+    # lives in both sinks below: each is one isEmpty() job, so it is not
+    # repeated here
     combined = union_all(ca, us).withColumn("region", F.lit("North America"))
-    if combined.isEmpty():  # W2 guard (ref dashboard__north_america_weather.py:75-77)
-        return 0
     if not jdbc_url and connect is None:
         # offline serving path: no JDBC target configured -> publish the
         # gold table to the lake instead (same idempotent partition

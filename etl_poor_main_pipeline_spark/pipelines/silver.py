@@ -53,11 +53,11 @@ def run(
             F.lit(date_id).alias("date_id"),
         )
     )
-    if out.isEmpty():  # W2 guard (ref analytics__us_weather.py:60-62)
-        return 0
     # observe() collects the row count (the reference's post-write log,
     # analytics__us_weather.py:92-96) plus data-quality null counters
-    # during the write itself — no second pass over bronze.
+    # during the write itself — no second pass over bronze. The W2 empty
+    # guard (ref analytics__us_weather.py:60-62) is the writer's own: it
+    # returns False instead of the metrics.
     metrics = write_partition_overwrite(
         out,
         silver_table(country),
@@ -66,4 +66,4 @@ def run(
         single_file=single_file,
         quality_cols=["temperature", "city"],
     )
-    return int(metrics["n_rows"])
+    return int(metrics["n_rows"]) if metrics else 0

@@ -23,6 +23,9 @@ asserts this claim against the live registry (no-oracle count == 0).
 
 from __future__ import annotations
 
+import importlib
+import pkgutil
+import re
 from dataclasses import dataclass
 from typing import Callable
 
@@ -38,7 +41,7 @@ from .functions.text import (
 )
 from .operators import dedup, similarity, text as text_ops
 from .operators.relational import temperature_category, truncate_str, union_all
-from .session import tune_session
+from .session import barrier, tune_session
 from .sources.read import load_table
 
 
@@ -1059,7 +1062,7 @@ def q_minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # materialize the (tiny) signature table so the banding self-join
     # doesn't recompute the map-side signature pipeline once per side
-    sigs = sigs.localCheckpoint(eager=False)
+    sigs = barrier(sigs)
     # b=10, r=6: S-curve threshold ~0.84 — P(candidate)=0.95 at s=0.8 but
     # only 0.15 at s=0.5, keeping candidate volume near the true-pair count
     # distinct=False: with the parallel verification the map-side intersect
@@ -1139,9 +1142,7 @@ def q_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the generated twin reproduces signatures, block buckets, and the
     Hamming verify. Production keeps the 64-bit xxhash64 fast path."""
     d = _t(spark, sf_dir, "documents")
-    sigs = dedup.simhash_signatures_portable(d, bits=60, id_cols=["doc_id"]).localCheckpoint(
-        eager=False
-    )
+    sigs = barrier(dedup.simhash_signatures_portable(d, bits=60, id_cols=["doc_id"]))
     out = dedup.simhash_near_dup_pairs(sigs, max_hamming=3, bits=60)
     return out.select("id_a", "id_b", F.col("hamming").cast("bigint").alias("hamming"))
 
@@ -1610,332 +1611,19 @@ REGISTRY: dict[str, QuerySpec] = {
 
 
 def _full_registry() -> dict[str, QuerySpec]:
-    from .registry_ext import REGISTRY_EXT
-    from .registry_ext2 import REGISTRY_EXT2
-    from .registry_ext3 import REGISTRY_EXT3
-    from .registry_ext4 import REGISTRY_EXT4
-    from .registry_ext5 import REGISTRY_EXT5
-    from .registry_ext6 import REGISTRY_EXT6
-    from .registry_ext7 import REGISTRY_EXT7
-    from .registry_ext8 import REGISTRY_EXT8
-    from .registry_ext9 import REGISTRY_EXT9
-    from .registry_ext10 import REGISTRY_EXT10
-    from .registry_ext11 import REGISTRY_EXT11
-    from .registry_ext12 import REGISTRY_EXT12
-    from .registry_ext13 import REGISTRY_EXT13
-    from .registry_ext14 import REGISTRY_EXT14
-    from .registry_ext15 import REGISTRY_EXT15
-    from .registry_ext16 import REGISTRY_EXT16
-    from .registry_ext17 import REGISTRY_EXT17
-    from .registry_ext18 import REGISTRY_EXT18
-    from .registry_ext19 import REGISTRY_EXT19
-    from .registry_ext20 import REGISTRY_EXT20
-    from .registry_ext21 import REGISTRY_EXT21
-    from .registry_ext22 import REGISTRY_EXT22
-    from .registry_ext23 import REGISTRY_EXT23
-    from .registry_ext24 import REGISTRY_EXT24
-    from .registry_ext25 import REGISTRY_EXT25
-    from .registry_ext26 import REGISTRY_EXT26
-    from .registry_ext27 import REGISTRY_EXT27
-    from .registry_ext28 import REGISTRY_EXT28
-    from .registry_ext29 import REGISTRY_EXT29
-    from .registry_ext30 import REGISTRY_EXT30
-    from .registry_ext31 import REGISTRY_EXT31
-    from .registry_ext32 import REGISTRY_EXT32
-    from .registry_ext33 import REGISTRY_EXT33
-    from .registry_ext34 import REGISTRY_EXT34
-    from .registry_ext35 import REGISTRY_EXT35
-    from .registry_ext36 import REGISTRY_EXT36
-    from .registry_ext37 import REGISTRY_EXT37
-    from .registry_ext38 import REGISTRY_EXT38
-    from .registry_ext39 import REGISTRY_EXT39
-    from .registry_ext40 import REGISTRY_EXT40
-    from .registry_ext41 import REGISTRY_EXT41
-    from .registry_ext42 import REGISTRY_EXT42
-    from .registry_ext43 import REGISTRY_EXT43
-    from .registry_ext44 import REGISTRY_EXT44
-    from .registry_ext45 import REGISTRY_EXT45
-    from .registry_ext46 import REGISTRY_EXT46
-    from .registry_ext47 import REGISTRY_EXT47
-    from .registry_ext48 import REGISTRY_EXT48
-    from .registry_ext49 import REGISTRY_EXT49
-    from .registry_ext50 import REGISTRY_EXT50
-    from .registry_ext51 import REGISTRY_EXT51
-    from .registry_ext52 import REGISTRY_EXT52
-    from .registry_ext53 import REGISTRY_EXT53
-    from .registry_ext54 import REGISTRY_EXT54
-    from .registry_ext55 import REGISTRY_EXT55
-    from .registry_ext56 import REGISTRY_EXT56
-    from .registry_ext57 import REGISTRY_EXT57
-    from .registry_ext58 import REGISTRY_EXT58
-    from .registry_ext59 import REGISTRY_EXT59
-    from .registry_ext60 import REGISTRY_EXT60
-    from .registry_ext61 import REGISTRY_EXT61
-    from .registry_ext62 import REGISTRY_EXT62
-    from .registry_ext63 import REGISTRY_EXT63
-    from .registry_ext64 import REGISTRY_EXT64
-    from .registry_ext65 import REGISTRY_EXT65
-    from .registry_ext66 import REGISTRY_EXT66
-    from .registry_ext67 import REGISTRY_EXT67
-    from .registry_ext68 import REGISTRY_EXT68
-    from .registry_ext69 import REGISTRY_EXT69
-    from .registry_ext70 import REGISTRY_EXT70
-    from .registry_ext71 import REGISTRY_EXT71
-    from .registry_ext72 import REGISTRY_EXT72
-    from .registry_ext73 import REGISTRY_EXT73
-    from .registry_ext74 import REGISTRY_EXT74
-    from .registry_ext75 import REGISTRY_EXT75
-    from .registry_ext76 import REGISTRY_EXT76
-    from .registry_ext77 import REGISTRY_EXT77
-    from .registry_ext78 import REGISTRY_EXT78
-    from .registry_ext79 import REGISTRY_EXT79
-    from .registry_ext80 import REGISTRY_EXT80
-    from .registry_ext81 import REGISTRY_EXT81
-    from .registry_ext82 import REGISTRY_EXT82
-    from .registry_ext83 import REGISTRY_EXT83
-    from .registry_ext84 import REGISTRY_EXT84
-    from .registry_ext85 import REGISTRY_EXT85
-    from .registry_ext86 import REGISTRY_EXT86
-    from .registry_ext87 import REGISTRY_EXT87
-    from .registry_ext88 import REGISTRY_EXT88
-    from .registry_ext89 import REGISTRY_EXT89
-    from .registry_ext90 import REGISTRY_EXT90
-    from .registry_ext91 import REGISTRY_EXT91
-    from .registry_ext92 import REGISTRY_EXT92
-    from .registry_ext93 import REGISTRY_EXT93
-    from .registry_ext94 import REGISTRY_EXT94
-    from .registry_ext95 import REGISTRY_EXT95
-    from .registry_ext96 import REGISTRY_EXT96
-    from .registry_ext97 import REGISTRY_EXT97
-    from .registry_ext98 import REGISTRY_EXT98
-    from .registry_ext99 import REGISTRY_EXT99
-    from .registry_ext100 import REGISTRY_EXT100
-    from .registry_ext101 import REGISTRY_EXT101
-    from .registry_ext102 import REGISTRY_EXT102
-    from .registry_ext103 import REGISTRY_EXT103
-    from .registry_ext104 import REGISTRY_EXT104
-    from .registry_ext105 import REGISTRY_EXT105
-    from .registry_ext106 import REGISTRY_EXT106
-    from .registry_ext107 import REGISTRY_EXT107
-    from .registry_ext108 import REGISTRY_EXT108
-    from .registry_ext109 import REGISTRY_EXT109
-    from .registry_ext111 import REGISTRY_EXT111
-    from .registry_ext112 import REGISTRY_EXT112
-    from .registry_ext113 import REGISTRY_EXT113
-    from .registry_ext114 import REGISTRY_EXT114
-    from .registry_ext115 import REGISTRY_EXT115
-    from .registry_ext116 import REGISTRY_EXT116
-    from .registry_ext117 import REGISTRY_EXT117
-    from .registry_ext118 import REGISTRY_EXT118
-    from .registry_ext119 import REGISTRY_EXT119
-    from .registry_ext120 import REGISTRY_EXT120
-    from .registry_ext121 import REGISTRY_EXT121
-    from .registry_ext122 import REGISTRY_EXT122
-    from .registry_ext123 import REGISTRY_EXT123
-    from .registry_ext124 import REGISTRY_EXT124
-    from .registry_ext125 import REGISTRY_EXT125
-    from .registry_ext126 import REGISTRY_EXT126
-    from .registry_ext127 import REGISTRY_EXT127
-    from .registry_ext128 import REGISTRY_EXT128
-    from .registry_ext129 import REGISTRY_EXT129
-    from .registry_ext130 import REGISTRY_EXT130
-    from .registry_ext131 import REGISTRY_EXT131
-    from .registry_ext132 import REGISTRY_EXT132
-    from .registry_ext133 import REGISTRY_EXT133
-    from .registry_ext134 import REGISTRY_EXT134
-    from .registry_ext135 import REGISTRY_EXT135
-    from .registry_ext136 import REGISTRY_EXT136
-    from .registry_ext137 import REGISTRY_EXT137
-    from .registry_ext138 import REGISTRY_EXT138
-    from .registry_ext139 import REGISTRY_EXT139
-    from .registry_ext140 import REGISTRY_EXT140
-    from .registry_ext141 import REGISTRY_EXT141
-    from .registry_ext142 import REGISTRY_EXT142
-    from .registry_ext143 import REGISTRY_EXT143
-    from .registry_ext144 import REGISTRY_EXT144
-    from .registry_ext145 import REGISTRY_EXT145
-    from .registry_ext146 import REGISTRY_EXT146
-    from .registry_ext147 import REGISTRY_EXT147
-    from .registry_ext148 import REGISTRY_EXT148
-    from .registry_ext149 import REGISTRY_EXT149
-    from .registry_ext150 import REGISTRY_EXT150
-    from .registry_ext151 import REGISTRY_EXT151
-    from .registry_ext152 import REGISTRY_EXT152
-    from .registry_ext153 import REGISTRY_EXT153
-    from .registry_ext154 import REGISTRY_EXT154
-    from .registry_ext155 import REGISTRY_EXT155
-    from .registry_ext156 import REGISTRY_EXT156
-    from .registry_ext157 import REGISTRY_EXT157
-    from .registry_ext158 import REGISTRY_EXT158
-    from .registry_ext159 import REGISTRY_EXT159
-    from .registry_ext160 import REGISTRY_EXT160
-    from .registry_ext161 import REGISTRY_EXT161
-    from .registry_ext162 import REGISTRY_EXT162
-    from .registry_ext163 import REGISTRY_EXT163
-
+    # every registry_ext<N> wave module contributes REGISTRY_EXT<N>; merge
+    # in wave order (bare registry_ext first) so the non-priority tail
+    # keeps its historical order
+    waves = [
+        m.name
+        for m in pkgutil.iter_modules(importlib.import_module(__package__).__path__)
+        if re.fullmatch(r"registry_ext\d*", m.name)
+    ]
+    waves.sort(key=lambda name: int(name[len("registry_ext"):] or 0))
     merged = dict(REGISTRY)
-    merged.update(REGISTRY_EXT)
-    merged.update(REGISTRY_EXT2)
-    merged.update(REGISTRY_EXT3)
-    merged.update(REGISTRY_EXT4)
-    merged.update(REGISTRY_EXT5)
-    merged.update(REGISTRY_EXT6)
-    merged.update(REGISTRY_EXT7)
-    merged.update(REGISTRY_EXT8)
-    merged.update(REGISTRY_EXT9)
-    merged.update(REGISTRY_EXT10)
-    merged.update(REGISTRY_EXT11)
-    merged.update(REGISTRY_EXT12)
-    merged.update(REGISTRY_EXT13)
-    merged.update(REGISTRY_EXT14)
-    merged.update(REGISTRY_EXT15)
-    merged.update(REGISTRY_EXT16)
-    merged.update(REGISTRY_EXT17)
-    merged.update(REGISTRY_EXT18)
-    merged.update(REGISTRY_EXT19)
-    merged.update(REGISTRY_EXT20)
-    merged.update(REGISTRY_EXT21)
-    merged.update(REGISTRY_EXT22)
-    merged.update(REGISTRY_EXT23)
-    merged.update(REGISTRY_EXT24)
-    merged.update(REGISTRY_EXT25)
-    merged.update(REGISTRY_EXT26)
-    merged.update(REGISTRY_EXT27)
-    merged.update(REGISTRY_EXT28)
-    merged.update(REGISTRY_EXT29)
-    merged.update(REGISTRY_EXT30)
-    merged.update(REGISTRY_EXT31)
-    merged.update(REGISTRY_EXT32)
-    merged.update(REGISTRY_EXT33)
-    merged.update(REGISTRY_EXT34)
-    merged.update(REGISTRY_EXT35)
-    merged.update(REGISTRY_EXT36)
-    merged.update(REGISTRY_EXT37)
-    merged.update(REGISTRY_EXT38)
-    merged.update(REGISTRY_EXT39)
-    merged.update(REGISTRY_EXT40)
-    merged.update(REGISTRY_EXT41)
-    merged.update(REGISTRY_EXT42)
-    merged.update(REGISTRY_EXT43)
-    merged.update(REGISTRY_EXT44)
-    merged.update(REGISTRY_EXT45)
-    merged.update(REGISTRY_EXT46)
-    merged.update(REGISTRY_EXT47)
-    merged.update(REGISTRY_EXT48)
-    merged.update(REGISTRY_EXT49)
-    merged.update(REGISTRY_EXT50)
-    merged.update(REGISTRY_EXT51)
-    merged.update(REGISTRY_EXT52)
-    merged.update(REGISTRY_EXT53)
-    merged.update(REGISTRY_EXT54)
-    merged.update(REGISTRY_EXT55)
-    merged.update(REGISTRY_EXT56)
-    merged.update(REGISTRY_EXT57)
-    merged.update(REGISTRY_EXT58)
-    merged.update(REGISTRY_EXT59)
-    merged.update(REGISTRY_EXT60)
-    merged.update(REGISTRY_EXT61)
-    merged.update(REGISTRY_EXT62)
-    merged.update(REGISTRY_EXT63)
-    merged.update(REGISTRY_EXT64)
-    merged.update(REGISTRY_EXT65)
-    merged.update(REGISTRY_EXT66)
-    merged.update(REGISTRY_EXT67)
-    merged.update(REGISTRY_EXT68)
-    merged.update(REGISTRY_EXT69)
-    merged.update(REGISTRY_EXT70)
-    merged.update(REGISTRY_EXT71)
-    merged.update(REGISTRY_EXT72)
-    merged.update(REGISTRY_EXT73)
-    merged.update(REGISTRY_EXT74)
-    merged.update(REGISTRY_EXT75)
-    merged.update(REGISTRY_EXT76)
-    merged.update(REGISTRY_EXT77)
-    merged.update(REGISTRY_EXT78)
-    merged.update(REGISTRY_EXT79)
-    merged.update(REGISTRY_EXT80)
-    merged.update(REGISTRY_EXT81)
-    merged.update(REGISTRY_EXT82)
-    merged.update(REGISTRY_EXT83)
-    merged.update(REGISTRY_EXT84)
-    merged.update(REGISTRY_EXT85)
-    merged.update(REGISTRY_EXT86)
-    merged.update(REGISTRY_EXT87)
-    merged.update(REGISTRY_EXT88)
-    merged.update(REGISTRY_EXT89)
-    merged.update(REGISTRY_EXT90)
-    merged.update(REGISTRY_EXT91)
-    merged.update(REGISTRY_EXT92)
-    merged.update(REGISTRY_EXT93)
-    merged.update(REGISTRY_EXT94)
-    merged.update(REGISTRY_EXT95)
-    merged.update(REGISTRY_EXT96)
-    merged.update(REGISTRY_EXT97)
-    merged.update(REGISTRY_EXT98)
-    merged.update(REGISTRY_EXT99)
-    merged.update(REGISTRY_EXT100)
-    merged.update(REGISTRY_EXT101)
-    merged.update(REGISTRY_EXT102)
-    merged.update(REGISTRY_EXT103)
-    merged.update(REGISTRY_EXT104)
-    merged.update(REGISTRY_EXT105)
-    merged.update(REGISTRY_EXT106)
-    merged.update(REGISTRY_EXT107)
-    merged.update(REGISTRY_EXT108)
-    merged.update(REGISTRY_EXT109)
-    merged.update(REGISTRY_EXT111)
-    merged.update(REGISTRY_EXT112)
-    merged.update(REGISTRY_EXT113)
-    merged.update(REGISTRY_EXT114)
-    merged.update(REGISTRY_EXT115)
-    merged.update(REGISTRY_EXT116)
-    merged.update(REGISTRY_EXT117)
-    merged.update(REGISTRY_EXT118)
-    merged.update(REGISTRY_EXT119)
-    merged.update(REGISTRY_EXT120)
-    merged.update(REGISTRY_EXT121)
-    merged.update(REGISTRY_EXT122)
-    merged.update(REGISTRY_EXT123)
-    merged.update(REGISTRY_EXT124)
-    merged.update(REGISTRY_EXT125)
-    merged.update(REGISTRY_EXT126)
-    merged.update(REGISTRY_EXT127)
-    merged.update(REGISTRY_EXT128)
-    merged.update(REGISTRY_EXT129)
-    merged.update(REGISTRY_EXT130)
-    merged.update(REGISTRY_EXT131)
-    merged.update(REGISTRY_EXT132)
-    merged.update(REGISTRY_EXT133)
-    merged.update(REGISTRY_EXT134)
-    merged.update(REGISTRY_EXT135)
-    merged.update(REGISTRY_EXT136)
-    merged.update(REGISTRY_EXT137)
-    merged.update(REGISTRY_EXT138)
-    merged.update(REGISTRY_EXT139)
-    merged.update(REGISTRY_EXT140)
-    merged.update(REGISTRY_EXT141)
-    merged.update(REGISTRY_EXT142)
-    merged.update(REGISTRY_EXT143)
-    merged.update(REGISTRY_EXT144)
-    merged.update(REGISTRY_EXT145)
-    merged.update(REGISTRY_EXT146)
-    merged.update(REGISTRY_EXT147)
-    merged.update(REGISTRY_EXT148)
-    merged.update(REGISTRY_EXT149)
-    merged.update(REGISTRY_EXT150)
-    merged.update(REGISTRY_EXT151)
-    merged.update(REGISTRY_EXT152)
-    merged.update(REGISTRY_EXT153)
-    merged.update(REGISTRY_EXT154)
-    merged.update(REGISTRY_EXT155)
-    merged.update(REGISTRY_EXT156)
-    merged.update(REGISTRY_EXT157)
-    merged.update(REGISTRY_EXT158)
-    merged.update(REGISTRY_EXT159)
-    merged.update(REGISTRY_EXT160)
-    merged.update(REGISTRY_EXT161)
-    merged.update(REGISTRY_EXT162)
-    merged.update(REGISTRY_EXT163)
+    for name in waves:
+        module = importlib.import_module(f".{name}", __package__)
+        merged.update(getattr(module, name.upper()))
     ordered = {name: merged.pop(name) for name in _SWEEP_PRIORITY}
     ordered.update(merged)
     return ordered

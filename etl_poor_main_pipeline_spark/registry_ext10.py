@@ -19,6 +19,7 @@ from .functions.text import (
     tokens_expr,
 )
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _EN_SW_SQL = "[" + ", ".join(f"'{w}'" for w in LANG_MARKERS["en"]) + "]"
 
@@ -133,7 +134,7 @@ def q_text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t(spark, sf_dir, "documents")
     toks = spread(d).select("doc_id", F.explode(tokens_expr("text")).alias("tok"))
-    toks = toks.localCheckpoint(eager=False)
+    toks = barrier(toks)
     freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
     tot = toks.agg(F.count(F.lit(1)).alias("total"))
     return (

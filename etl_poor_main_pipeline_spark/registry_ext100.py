@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _TOK = r"filter(split(lower(text), '\\s+'), t -> t <> '')"
 _DUCK_TOK = r"list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')"
@@ -64,9 +65,8 @@ def q_naive_bayes_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf_idf measurement); parallelism arrives at the first groupBy
     exchange."""
     d = _t(spark, sf_dir, "documents")
-    toks = (
+    toks = barrier(
         d.select("doc_id", "lang", F.explode(F.expr(_TOK)).alias("tok"))
-        .localCheckpoint(eager=False)
     )
     vocab = toks.agg(F.countDistinct("tok").cast("bigint").alias("v"))
     docs_total = d.agg(F.count(F.lit(1)).cast("bigint").alias("nd"))

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _TOK = r"filter(split(lower(text), '\\s+'), t -> t <> '')"
 _DUCK_TOK = r"list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')"
@@ -59,10 +60,9 @@ def q_greedy_max_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     greedy invariant makes that exactly the covered-vocabulary
     size."""
     d = _t(spark, sf_dir, "documents")
-    st = (
+    st = barrier(
         d.select("source", F.explode(F.expr(_TOK)).alias("tok"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     # Each round's winner is COLLECTED (1 row, bounded by LIMIT 1 — the
     # PQ-codebook idiom) so round r+1 filters on a LITERAL source list

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 
 # --------------------------------------------------------------------------
@@ -294,7 +295,7 @@ def q_pacf_yule_walker(spark: SparkSession, sf_dir: str) -> DataFrame:
     reuse so the recursion is bit-identical across engines. Degenerate
     guards: zero variance or |den| = 0 maps the coefficient to 0."""
     e = _t(spark, sf_dir, "events")
-    daily = (
+    daily = barrier(
         e.select(
             "event_type",
             F.expr("unix_micros(ts) div 86400000000").alias("day"),
@@ -308,7 +309,6 @@ def q_pacf_yule_walker(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("x")
         )
-        .localCheckpoint(eager=False)
     )
     mom = daily.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -479,7 +479,7 @@ def q_slope_one_loo_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly. The LOO protocol is honest: dev(i,j) aggregates over all
     users, predictions exclude the self-pair (i = j)."""
     e = _t(spark, sf_dir, "events")
-    ratings = (
+    ratings = barrier(
         e.groupBy("user_id", "event_type")
         .agg(
             F.floor(
@@ -491,7 +491,6 @@ def q_slope_one_loo_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("rc")
         )
-        .localCheckpoint(eager=False)
     )
     pairs = (
         ratings.alias("a")

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _TOK = r"filter(split(lower(text), '\\s+'), t -> t <> '')"
 _DUCK_TOK = r"list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')"
@@ -59,7 +60,7 @@ def q_successive_halving_bandit(spark: SparkSession, sf_dir: str) -> DataFrame:
     wrk = Window.partitionBy("source").orderBy(
         F.md5(F.col("doc_id").cast("string")), F.asc("doc_id")
     )
-    ranked = (
+    ranked = barrier(
         d.select(
             "source",
             "doc_id",
@@ -71,7 +72,6 @@ def q_successive_halving_bandit(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("reward"),
         )
         .withColumn("rk", F.row_number().over(wrk))
-        .localCheckpoint(eager=False)
     )
     alive = ranked.select("source").distinct()
     out = None
@@ -155,11 +155,11 @@ def q_cramers_v_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell term snaps nano before the integer sum and V = sqrt((S-1) /
     (min(r,c)-1)) folds once. Each pair is its own map-side-combinable
     cell reduction; output (pair, n, r, c, chi2_micro, v_micro)."""
-    d = _t(spark, sf_dir, "documents").select(
+    d = barrier(_t(spark, sf_dir, "documents").select(
         "lang",
         "source",
         F.expr("cast(n_chars div 100 as bigint)").alias("len_bucket"),
-    ).localCheckpoint(eager=False)
+    ))
 
     def pair_stats(a: str, b: str, name: str) -> DataFrame:
         cells = d.groupBy(F.col(a).alias("ka"), F.col(b).alias("kb")).agg(
@@ -268,7 +268,7 @@ def q_calinski_harabasz_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer fold, so the two-engine scatter split is exact. Output one
     row: n, k, b_micro, w_micro, ch_micro."""
     e = _t(spark, sf_dir, "embeddings")
-    ld = (
+    ld = barrier(
         e.select("label", F.posexplode(F.col("embedding").cast("array<double>")))
         .groupBy("label", "pos")
         .agg(
@@ -278,7 +278,6 @@ def q_calinski_harabasz_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
             .alias("ss"),
         )
-        .localCheckpoint(eager=False)
     )
     gdim = ld.groupBy("pos").agg(
         F.sum("nk").cast("bigint").alias("n"),

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _TOK = r"filter(split(lower(text), '\\s+'), t -> t <> '')"
 _DUCK_TOK = r"list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')"
@@ -55,9 +56,7 @@ def q_sir_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     the acceptance threshold folds through one exp() from exact ints.
     Output per source: docs, kept, acceptance rate, mean score."""
     d = _t(spark, sf_dir, "documents")
-    toks = d.select("doc_id", "source", F.explode(F.expr(_TOK)).alias("tok")).localCheckpoint(
-        eager=False
-    )
+    toks = barrier(d.select("doc_id", "source", F.explode(F.expr(_TOK)).alias("tok")))
     vocab = toks.agg(F.countDistinct("tok").cast("bigint").alias("v"))
     n_all = toks.agg(F.count(F.lit(1)).cast("bigint").alias("na"))
     n_tgt = toks.filter(F.col("source") == _SIR_TARGET).agg(
@@ -189,7 +188,7 @@ def q_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     are exact integers; z folds once. Output per type: n_days, s,
     var18 (18*variance, exact), z_micro."""
     e = _t(spark, sf_dir, "events")
-    daily = (
+    daily = barrier(
         e.select(
             "event_type",
             F.expr("unix_micros(ts) div 86400000000").alias("day"),
@@ -203,7 +202,6 @@ def q_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("x")
         )
-        .localCheckpoint(eager=False)
     )
     s = (
         daily.alias("a")
@@ -414,13 +412,12 @@ def q_anova_two_way(spark: SparkSession, sf_dir: str) -> DataFrame:
     df uses the general ncells - r - c + 1. Output one row per effect
     (lang, source, interaction): df, ss_micro, f_micro."""
     d = _t(spark, sf_dir, "documents")
-    cells = (
+    cells = barrier(
         d.groupBy("lang", "source")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("nc"),
             F.sum("n_chars").cast("bigint").alias("sc"),
         )
-        .localCheckpoint(eager=False)
     )
     sq = d.agg(F.sum(F.col("n_chars") * F.col("n_chars")).cast("bigint").alias("sqq"))
     grand = cells.agg(

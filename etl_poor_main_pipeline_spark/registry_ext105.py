@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _CHI2_95_DF4_MICRO = 9_487_729
 _CHI2_95_DF3_MICRO = 7_814_728
@@ -54,10 +55,10 @@ def q_levene_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms against exact bigint sums. Output one row: k, n,
     ss_between/ss_within micro, f_micro."""
     e = _t(spark, sf_dir, "events")
-    vals = e.select(
+    vals = barrier(e.select(
         "event_type",
         F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5)).cast("bigint").alias("vc"),
-    ).localCheckpoint(eager=False)
+    ))
     wrk = Window.partitionBy("event_type").orderBy("vc")
     wn = Window.partitionBy("event_type")
     med = (
@@ -184,7 +185,7 @@ def q_friedman_rank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wr = Window.partitionBy("user_id").orderBy("rc")
     wt = Window.partitionBy("user_id", "rc")
-    ranked = (
+    ranked = barrier(
         ratings.join(complete, "user_id", "leftsemi")
         .withColumn("rk", F.rank().over(wr))
         .withColumn("nt", F.count(F.lit(1)).over(wt))
@@ -193,7 +194,6 @@ def q_friedman_rank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             (2 * F.col("rk") + F.col("nt") - 1).cast("bigint").alias("h"),  # 2*midrank
         )
-        .localCheckpoint(eager=False)
     )
     per_j = ranked.groupBy("event_type").agg(
         F.sum("h").cast("bigint").alias("hsum"),
@@ -413,7 +413,7 @@ def q_ljung_box_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     per type: n_days, q_micro, reject flag at the chi2({m}) critical
     literal."""
     e = _t(spark, sf_dir, "events")
-    daily = (
+    daily = barrier(
         e.select(
             "event_type",
             F.expr("unix_micros(ts) div 86400000000").alias("day"),
@@ -426,7 +426,6 @@ def q_ljung_box_test(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " as bigint)"
             ).alias("x")
         )
-        .localCheckpoint(eager=False)
     )
     mom = daily.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 
 # --------------------------------------------------------------------------
@@ -55,11 +56,11 @@ def q_pr_auc_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort ever materializes. Each positive's cum_pos/rank snaps nano
     before one integer sum. Output one row: n, n_pos, ap_micro."""
     e = _t(spark, sf_dir, "events")
-    rows = e.select(
+    rows = barrier(e.select(
         "event_id",
         F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5)).cast("bigint").alias("vc"),
         F.when(F.col("event_type") == _AP_POS, 1).otherwise(0).cast("bigint").alias("y"),
-    ).localCheckpoint(eager=False)
+    ))
     cells = rows.groupBy("vc").agg(
         F.count(F.lit(1)).cast("bigint").alias("nb"),
         F.sum("y").cast("bigint").alias("pb"),
@@ -170,7 +171,7 @@ def q_kfold_cv_ridge_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically. Output per fold: n_test, slope_micro,
     intercept_micro, test mse (centi^2 units)."""
     d = _t(spark, sf_dir, "documents")
-    rows = d.select(
+    rows = barrier(d.select(
         F.expr(
             "cast(conv(substring(md5(cast(doc_id as string)), 1, 2), 16, 10) as bigint)"
             " % {k}".format(k=_CV_K)
@@ -178,7 +179,7 @@ def q_kfold_cv_ridge_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_chars").cast("bigint").alias("x"),
         F.expr(r"cast(size(filter(split(lower(text), '\\s+'), t -> t <> '')) as bigint)")
         .alias("yy"),
-    ).localCheckpoint(eager=False)
+    ))
     per_fold = rows.groupBy("fold").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("x").cast("bigint").alias("sx"),
@@ -347,12 +348,12 @@ def q_consistent_hash_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
     node of the grown ring: keys before, keys after, keys moved
     in."""
     d = _t(spark, sf_dir, "documents")
-    keys = d.select(
+    keys = barrier(d.select(
         "doc_id",
         F.expr(
             "cast(conv(substring(md5(cast(doc_id as string)), 1, 8), 16, 10) as bigint)"
         ).alias("h"),
-    ).localCheckpoint(eager=False)
+    ))
     a8 = _assign(spark, keys, _RING_NODES, "nd8")
     a9 = _assign(spark, keys, _RING_NODES + 1, "nd9")
     both = a8.join(a9, "doc_id")

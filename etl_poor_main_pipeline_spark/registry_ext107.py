@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _TOK = r"filter(split(lower(text), '\\s+'), t -> t <> '')"
 _DUCK_TOK = r"list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')"
@@ -53,7 +54,7 @@ def q_davies_bouldin_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     a second vector scan). Output one row: k, db_milli, plus the
     worst-separated pair for triage."""
     e = _t(spark, sf_dir, "embeddings")
-    ld = (
+    ld = barrier(
         e.select("label", F.posexplode(F.col("embedding").cast("array<double>")))
         .groupBy("label", "pos")
         .agg(
@@ -63,7 +64,6 @@ def q_davies_bouldin_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
             .alias("ss"),
         )
-        .localCheckpoint(eager=False)
     )
     # per-cluster RMS scatter: S_i = sqrt(sum_d (ss - s^2/nk) / nk)
     scat = (
@@ -413,7 +413,7 @@ def q_msttr_segmental_ttr(spark: SparkSession, sf_dir: str) -> DataFrame:
     followed by two grouped passes; every ratio snaps micro. Output
     per lang: full segments, msttr_micro, naive corpus TTR."""
     d = _t(spark, sf_dir, "documents")
-    toks = d.select(
+    toks = barrier(d.select(
         "doc_id",
         "lang",
         F.posexplode(F.expr(_TOK)),
@@ -422,7 +422,7 @@ def q_msttr_segmental_ttr(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         F.expr("cast(pos div {s} as bigint)".format(s=_MSTTR_SEG)).alias("seg"),
         F.col("col").alias("tok"),
-    ).localCheckpoint(eager=False)
+    ))
     segs = (
         toks.groupBy("doc_id", "lang", "seg")
         .agg(

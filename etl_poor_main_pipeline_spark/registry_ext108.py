@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 # chi-square critical values (0.95; shared literals so both engines
 # compare against the same milli grid)
@@ -200,12 +201,12 @@ def q_durbin_watson_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     widx = Window.partitionBy("event_type").orderBy("hr")
-    idx = hourly.select(
+    idx = barrier(hourly.select(
         "event_type",
         "hr",
         "x",
         (F.row_number().over(widx) - F.lit(1)).cast("bigint").alias("d"),
-    ).localCheckpoint(eager=False)
+    ))
     mom = idx.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("d").cast("bigint").alias("sd"),
@@ -452,13 +453,13 @@ def q_hurst_rescaled_range(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("x")
         )
     )
-    idx = hourly.select(
+    idx = barrier(hourly.select(
         "hr",
         "x",
         (F.row_number().over(Window.orderBy("hr")) - F.lit(1))
         .cast("bigint")
         .alias("i"),
-    ).localCheckpoint(eager=False)
+    ))
     scales = F.array(
         *[
             F.struct(

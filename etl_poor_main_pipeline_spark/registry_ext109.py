@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _HOUR_US = 3_600_000_000
 _PG_PERIODS = (6, 12, 24, 168)
@@ -76,7 +77,7 @@ def q_periodogram_fixed_periods(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigint dot products. Output per period: p, n_hours, power_micro,
     dominant flag."""
     e = _t(spark, sf_dir, "events")
-    hourly = (
+    hourly = barrier(
         e.select(
             F.expr(f"unix_micros(ts) div {_HOUR_US}").alias("hr"),
             F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5))
@@ -90,7 +91,6 @@ def q_periodogram_fixed_periods(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " + 0.5) as bigint)"
             ).alias("x")
         )
-        .localCheckpoint(eager=False)
     )
     mu = hourly.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -216,7 +216,7 @@ def q_pettitt_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     maximizing hour. Output one row: n_hours, k_stat, cp_hr, p_micro,
     significant_05."""
     e = _t(spark, sf_dir, "events")
-    hourly = (
+    hourly = barrier(
         e.select(
             F.expr(f"unix_micros(ts) div {_HOUR_US}").alias("hr"),
             F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5))
@@ -230,7 +230,6 @@ def q_pettitt_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " + 0.5) as bigint)"
             ).alias("x")
         )
-        .localCheckpoint(eager=False)
     )
     cells = hourly.groupBy("x").agg(F.count(F.lit(1)).cast("bigint").alias("t"))
     wpre = Window.orderBy("x").rowsBetween(Window.unboundedPreceding, -1)
@@ -364,10 +363,9 @@ def q_variance_ratio_random_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     whr = Window.orderBy("hr")
-    diffs = (
+    diffs = barrier(
         hourly.select("hr", "x", (F.col("x") - F.lag("x").over(whr)).alias("d"))
         .filter(F.col("d").isNotNull())
-        .localCheckpoint(eager=False)
     )
     wq = Window.orderBy("hr").rowsBetween(-(_VR_Q - 1), 0)
     qsums = diffs.select(

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from .operators import dedup
 from .registry import QuerySpec, _t
 from .registry_ext19 import _EDGE_SQL
+from .session import barrier
 
 _TOK = r"filter(split(lower(text), '\\s+'), t -> t <> '')"
 _DUCK_TOK = r"list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')"
@@ -59,12 +60,12 @@ def q_triangle_count_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     GCC = 3*T / sum_v deg_v*(deg_v-1)/2, micro-snapped. Output one row:
     n_nodes, n_edges, n_triangles, n_wedges, gcc_micro."""
     d = _t(spark, sf_dir, "documents")
-    pairs = (
+    pairs = barrier(
         dedup.jaccard_token_sets(
             d, threshold=0.8, block_cols=["lang"], length_window=16
         )
-        .select("id_a", "id_b")
-        .localCheckpoint()
+        .select("id_a", "id_b"),
+        eager=True,
     )
     und = pairs.select(F.col("id_a").alias("v"), F.col("id_b").alias("w")).unionAll(
         pairs.select(F.col("id_b").alias("v"), F.col("id_a").alias("w"))
@@ -74,20 +75,23 @@ def q_triangle_count_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.join(deg.select(F.col("v").alias("id_a"), F.col("dv").alias("da")), "id_a")
         .join(deg.select(F.col("v").alias("id_b"), F.col("dv").alias("db")), "id_b")
     )
-    oriented = withdeg.select(
-        F.expr(
-            "case when da < db or (da = db and id_a < id_b)"
-            " then id_a else id_b end"
-        ).alias("src"),
-        F.expr(
-            "case when da < db or (da = db and id_a < id_b)"
-            " then id_b else id_a end"
-        ).alias("dst"),
-        F.expr(
-            "case when da < db or (da = db and id_a < id_b)"
-            " then db else da end"
-        ).alias("ddst"),
-    ).localCheckpoint()
+    oriented = barrier(
+        withdeg.select(
+            F.expr(
+                "case when da < db or (da = db and id_a < id_b)"
+                " then id_a else id_b end"
+            ).alias("src"),
+            F.expr(
+                "case when da < db or (da = db and id_a < id_b)"
+                " then id_b else id_a end"
+            ).alias("dst"),
+            F.expr(
+                "case when da < db or (da = db and id_a < id_b)"
+                " then db else da end"
+            ).alias("ddst"),
+        ),
+        eager=True,
+    )
     o1 = oriented.select("src", F.col("dst").alias("b"), F.col("ddst").alias("degb"))
     o2 = oriented.select("src", F.col("dst").alias("c"), F.col("ddst").alias("degc"))
     wedge = (

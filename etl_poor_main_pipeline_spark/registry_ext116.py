@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _HOUR_US = 3_600_000_000
 _GC_A, _GC_B = "click", "purchase"  # does A Granger-cause B?
@@ -222,7 +223,7 @@ def q_cross_correlation_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
     The spine joins itself shifted by a LITERAL lag grid ({n} x spine,
     bounded); per-lag Pearson r from decimal-staged exact moments,
     milli-snapped. Output per lag: lag, n_pairs, r_milli."""
-    sp = _hourly_two_series(spark, sf_dir, _GC_A, _GC_B).localCheckpoint()
+    sp = barrier(_hourly_two_series(spark, sf_dir, _GC_A, _GC_B), eager=True)
     lags = spark.range(0, _CCF_MAX_LAG + 1).select(F.col("id").alias("lag"))
     a = sp.select(F.col("hr").alias("hra"), F.col("ya").alias("xa"))
     b = sp.select(F.col("hr").alias("hrb"), F.col("yb").alias("xb"))

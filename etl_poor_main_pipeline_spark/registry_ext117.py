@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _DAY_US = 86_400_000_000
 _AD_A, _AD_B = "click", "purchase"
@@ -297,13 +298,13 @@ def q_dau_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     days report their partial window (documented). Output per day: day,
     dau, wau, stickiness_micro."""
     e = _t(spark, sf_dir, "events")
-    ud = (
+    ud = barrier(
         e.select(
             F.expr(f"unix_micros(ts) div {_DAY_US}").alias("day"),
             F.col("user_id"),
         )
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        eager=True,
     )
     dau = ud.groupBy("day").agg(
         F.countDistinct("user_id").cast("bigint").alias("dau")

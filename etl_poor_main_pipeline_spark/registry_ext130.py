@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _DAY_US = 86_400_000_000
 _EVENT = "purchase"  # same time-to-first-purchase framing as log_rank
@@ -265,7 +266,7 @@ def q_cox_ph_newton_1cov(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter("dt > 0 and nt > 1")
         .select("d1", "dt", "n1", F.expr("nt - n1").alias("n0"), "nt")
     )
-    risk = risk.localCheckpoint(eager=False)  # K+1 passes over ~60 rows
+    risk = barrier(risk)  # K+1 passes over ~60 rows
     # p = S1/S0 with e^b snapped micro; per-day U/I terms snapped micro
     p = (
         "(cast(n1 as double) * eb / (cast(n0 as double)"

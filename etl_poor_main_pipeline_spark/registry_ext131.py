@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _DEC = "cast({x} as decimal(38,0))"
 _ITEMS = ("click", "error", "purchase", "signup", "view")
@@ -604,7 +605,7 @@ def q_bland_altman_limits(spark: SparkSession, sf_dir: str) -> DataFrame:
     hm = _half_means(spark, sf_dir).select(
         F.expr("y - x").cast("bigint").alias("d")
     )
-    hm = hm.localCheckpoint(eager=False)  # two passes over the user frame
+    hm = barrier(hm)  # two passes over the user frame
     m = hm.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("d").cast("bigint").alias("sd_sum"),

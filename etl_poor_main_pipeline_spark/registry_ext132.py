@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _DEC = "cast({x} as decimal(38,0))"
 _TOK = r"filter(split(text, '\\s+'), t -> t <> '')"
@@ -306,7 +307,7 @@ def q_bray_curtis_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     source ENUM (never all-pairs over documents). Output per pair:
     s1, s2, n1, n2, shared_min, bc_milli."""
     st = _src_tok(spark, sf_dir)
-    st = st.localCheckpoint(eager=False)  # reused by both join sides
+    st = barrier(st)  # reused by both join sides
     tots = st.groupBy("source").agg(F.sum("c").cast("bigint").alias("n"))
     a = st.select(
         F.col("source").alias("s1"), "tok", F.col("c").alias("c1")
@@ -373,7 +374,7 @@ def q_morisita_horn_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     audits report both). Cross-products carry in decimal(38,0)/HUGEINT.
     Output per pair: s1, s2, cross_sum, mh_milli."""
     st = _src_tok(spark, sf_dir)
-    st = st.localCheckpoint(eager=False)
+    st = barrier(st)
     tots = st.groupBy("source").agg(
         F.sum("c").cast("bigint").alias("n"),
         F.sum(F.expr(f"{_DEC.format(x='c')} * c")).alias("q"),

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _DAY_US = 86_400_000_000
 _DEC = "cast({x} as decimal(38,0))"
@@ -413,7 +414,7 @@ def q_sample_entropy_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter("y1 is not null and y2 is not null")
         .crossJoin(F.broadcast(mom.selectExpr("n", f"{rr} as r")))
     )
-    tmpl = tmpl.localCheckpoint(eager=False)  # both join sides reuse it
+    tmpl = barrier(tmpl)  # both join sides reuse it
     a = tmpl.selectExpr(
         "d as da", "yd as a0", "y1 as a1", "y2 as a2", "n", "r"
     )

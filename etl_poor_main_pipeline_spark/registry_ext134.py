@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _DEC = "cast({x} as decimal(38,0))"
 _MMD_A, _MMD_B = "click", "purchase"
@@ -74,7 +75,7 @@ def q_distance_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("xa", "yh")
         .agg(F.count(F.lit(1)).cast("bigint").alias("w"))
     )
-    cells = cells.localCheckpoint(eager=False)  # 3 self-join consumers
+    cells = barrier(cells)  # 3 self-join consumers
     n = cells.agg(F.sum("w").cast("bigint").alias("n"))
     c2 = cells.selectExpr("xa as xa2", "yh as yh2", "w as w2")
     # joint pair sums: S1 terms and per-cell row sums for x and y margins
@@ -226,7 +227,7 @@ def q_mmd_rbf_2samp(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.expr("1 - isa")).cast("bigint").alias("cb"),
         )
     )
-    cells = cells.localCheckpoint(eager=False)
+    cells = barrier(cells)
     c2 = cells.selectExpr("v as v2", "ca as ca2", "cb as cb2")
     two_s2 = float(2 * _MMD_SIGMA * _MMD_SIGMA)
     k = (

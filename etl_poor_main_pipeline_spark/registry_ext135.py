@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _DAY_US = 86_400_000_000
 _DEC = "cast({x} as decimal(38,0))"
@@ -162,7 +163,7 @@ def q_raking_ipf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
         .withColumn("wt", F.expr("cast(1000000 as bigint)"))
     )
-    cells = cells.localCheckpoint(eager=False)  # K sweeps re-aggregate it
+    cells = barrier(cells)  # K sweeps re-aggregate it
     tot = cells.agg(F.sum("n").cast("bigint").alias("nt"))
     for _ in range(_IPF_SWEEPS):
         # row sweep: scale each event_type row so its weighted share

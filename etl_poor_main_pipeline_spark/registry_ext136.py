@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _DEC = "cast({x} as decimal(38,0))"
 _IRLS_STEPS = 3
@@ -87,7 +88,9 @@ def _irls_query(tune: str, weight_expr: str, weight_sql: str):
     """Shared IRLS driver: 3 unrolled reweighted-mean steps over the
     centi-cell frame, starting from the cell median, with the given
     weight expression in terms of (u = x - mu in micro, k = tuning
-    constant in micro).
+    constant in micro). The Spark expression names |u| by an ``{au}``
+    format placeholder (``k_micro`` is a column); the SQL twin reads a
+    real ``au`` column.
 
     Round-14 shape: the centi cell frame is VALUE-DOMAIN bounded (a few
     hundred cells at any corpus size), so after the one corpus
@@ -140,7 +143,7 @@ def _irls_query(tune: str, weight_expr: str, weight_sql: str):
             )
             # per-cell micro weight with au = |x_micro - mu|, then the
             # exact decimal sums the old per-step aggregate computed
-            wm = f"cast({weight_expr.replace('au', f'abs(x.vc * 10000 - mu{s})')} as bigint)"
+            wm = f"cast({weight_expr.format(au=f'abs(x.vc * 10000 - mu{s})')} as bigint)"
             step = (
                 "aggregate(cw, struct(cast(0 as decimal(38,0)) as num,"
                 " cast(0 as decimal(38,0)) as den), (acc, x) -> struct("
@@ -225,8 +228,8 @@ def q_tukey_biweight_location(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _HUBER_W_SPARK = (
-    "if(au <= k_micro, 1000000L,"
-    " cast(floor(1e6 * cast(k_micro as double) / cast(au as double) + 0.5)"
+    "if({au} <= k_micro, 1000000L,"
+    " cast(floor(1e6 * cast(k_micro as double) / cast({au} as double) + 0.5)"
     " as bigint))"
 )
 _HUBER_W_SQL = (
@@ -235,9 +238,9 @@ _HUBER_W_SQL = (
     " + 0.5) AS BIGINT) END"
 )
 _BI_W_SPARK = (
-    "if(au >= k_micro, 0L,"
-    " cast(floor(1e6 * pow(1.0 - (cast(au as double) / cast(k_micro as double))"
-    " * (cast(au as double) / cast(k_micro as double)), 2.0) + 0.5) as bigint))"
+    "if({au} >= k_micro, 0L,"
+    " cast(floor(1e6 * pow(1.0 - (cast({au} as double) / cast(k_micro as double))"
+    " * (cast({au} as double) / cast(k_micro as double)), 2.0) + 0.5) as bigint))"
 )
 _BI_W_SQL = (
     "CASE WHEN au >= k_micro THEN 0"
@@ -271,7 +274,7 @@ def q_qn_scale_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("v")
         .agg(F.count(F.lit(1)).cast("bigint").alias("w"))
     )
-    cells = cells.localCheckpoint(eager=False)
+    cells = barrier(cells)
     c2 = cells.selectExpr("v as v2", "w as w2")
     diffs = (
         cells.join(c2, F.expr("v <= v2"))
@@ -365,7 +368,7 @@ def q_medcouple_skewness(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("v")
         .agg(F.count(F.lit(1)).cast("bigint").alias("w"))
     )
-    cells = cells.localCheckpoint(eager=False)
+    cells = barrier(cells)
     wv = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
     walk = cells.select(
         "v", "w", F.sum("w").over(wv).cast("bigint").alias("cum")

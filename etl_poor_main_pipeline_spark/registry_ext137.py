@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _DEC = "cast({x} as decimal(38,0))"
 _TOK = r"filter(split(text, '\\s+'), t -> t <> '')"
@@ -154,7 +155,7 @@ def q_data_constrained_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source")
         .agg(F.sum("n").cast("bigint").alias("t"))
     )
-    per_src = per_src.localCheckpoint(eager=False)  # reused by 3 reduces
+    per_src = barrier(per_src)  # reused by 3 reduces
     # temperature weights: w_s = T_s^tau / sum T^tau, micro-snapped
     pw = per_src.select(
         "source",
@@ -186,7 +187,7 @@ def q_data_constrained_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"least(alloc0, (t * {_EPOCH_CAP_MILLI}) div 1000) AS alloc1",
         f"cast(alloc0 > (t * {_EPOCH_CAP_MILLI}) div 1000 as int) AS capped",
     )
-    base = base.localCheckpoint(eager=False)
+    base = barrier(base)
     pool = base.agg(
         F.sum(F.expr("alloc0 - alloc1")).cast("bigint").alias("surplus"),
         F.sum(F.expr("if(capped = 0, alloc1, 0L)"))
@@ -490,7 +491,7 @@ def q_curriculum_pacing_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("toks").cast("bigint").alias("tokens"),
         )
     )
-    dec = dec.localCheckpoint(eager=False)  # tercile mass + plan reuse it
+    dec = barrier(dec)  # tercile mass + plan reuse it
     ter = dec.selectExpr(
         "decile",
         "docs",

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _DAY_US = 86_400_000_000
 _DEC = "cast({x} as decimal(38,0))"
@@ -151,7 +152,7 @@ def q_goodman_kruskal_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("w", "t")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     )
-    tab = tab.localCheckpoint(eager=False)  # 4 margin reduces reuse it
+    tab = barrier(tab)  # 4 margin reduces reuse it
     rowmax = tab.groupBy("w").agg(F.max("c").cast("bigint").alias("mw"))
     colmax = tab.groupBy("t").agg(F.max("c").cast("bigint").alias("mt"))
     colsum = tab.groupBy("t").agg(F.sum("c").cast("bigint").alias("st"))
@@ -410,7 +411,7 @@ def q_katz_centrality_types(spark: SparkSession, sf_dir: str) -> DataFrame:
             " as bigint) AS pm",
         )
     )
-    p = p.localCheckpoint(eager=False)  # K rounds reuse the 25-cell frame
+    p = barrier(p)  # K rounds reuse the 25-cell frame
     nodes = p.select(F.col("src").alias("t")).union(
         p.select(F.col("dst").alias("t"))
     ).distinct()
@@ -496,7 +497,7 @@ def q_closeness_centrality_types(
     edges = _type_edges(spark, sf_dir).select(
         "src", "dst"
     ).filter("src <> dst").distinct()
-    edges = edges.localCheckpoint(eager=False)
+    edges = barrier(edges)
     nodes = edges.select(F.col("src").alias("t")).union(
         edges.select(F.col("dst").alias("t"))
     ).distinct()

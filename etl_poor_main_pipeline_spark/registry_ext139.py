@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _DEC = "cast({x} as decimal(38,0))"
 _NEWTON_STEPS = 3
@@ -75,7 +76,7 @@ def q_weibull_fit_newton(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays finite). The parametric tail model next to the nonparametric
     pot_mean_excess. Output one row: n, k_milli, lambda_milli."""
     cells = _centi_cells(spark, sf_dir)
-    cells = cells.localCheckpoint(eager=False)  # K Newton passes
+    cells = barrier(cells)  # K Newton passes
     # x in VALUE units; ln x snapped to a micro BIGINT per cell so every
     # weighted sum below is EXACT integer/decimal (double sums would
     # depend on partition order and desync the Newton walk)
@@ -320,7 +321,7 @@ def q_expectile_90_irls(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-cell frame; mu micro-snaps per step. Output one row: n,
     mean_micro, expectile_micro."""
     cells = _centi_cells(spark, sf_dir)
-    cells = cells.localCheckpoint(eager=False)
+    cells = barrier(cells)
     base = cells.selectExpr("w", "vc * 10000 AS x")
     mu = base.agg(
         F.expr(

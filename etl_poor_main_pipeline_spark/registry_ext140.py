@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _DAY_US = 86_400_000_000
 _HOUR_US = 3_600_000_000
@@ -62,7 +63,7 @@ def q_cluster_robust_se(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("cast(user_id % 2 = 1 as int)").alias("x"),
         F.expr("cast(floor(value * 1e6 + 0.5) as bigint)").alias("y"),
     )
-    base = base.localCheckpoint(eager=False)  # coef pass + residual pass
+    base = barrier(base)  # coef pass + residual pass
     m = base.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("x").cast("bigint").alias("sx"),
@@ -219,7 +220,7 @@ def q_fe_within_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("h"),
         F.expr("cast(floor(value * 1e6 + 0.5) as bigint)").alias("y"),
     )
-    base = base.localCheckpoint(eager=False)  # 3 mean passes + final pass
+    base = barrier(base)  # 3 mean passes + final pass
     snap = (
         "cast(floor(cast(sum({c}) as double) / count(*) + 0.5) as bigint)"
     )
@@ -354,7 +355,7 @@ def q_trend_ols_newey_west(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("y")  # daily total in MILLI value units
         )
     )
-    daily = daily.localCheckpoint(eager=False)
+    daily = barrier(daily)
     m = daily.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.min("d").cast("bigint").alias("d0"),
@@ -540,7 +541,7 @@ def q_breusch_pagan_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("h"),
         F.expr("cast(floor(value * 1e6 + 0.5) as bigint)").alias("y"),
     )
-    base = base.localCheckpoint(eager=False)
+    base = barrier(base)
     m = base.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("h").cast("bigint").alias("sh"),

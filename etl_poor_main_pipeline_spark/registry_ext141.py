@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from .operators.scan_prefix import exclusive_prefix_sum
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _POS = "purchase"
 _HUGE = "cast({x} as decimal(38,0))"
@@ -68,7 +69,7 @@ def _median_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     inclusive). Returns a broadcastable 1-row frame
     (n, n_pos, thr, tp, fp, fn, tn)."""
     cells = _score_cells(spark, sf_dir)
-    cells = cells.localCheckpoint(eager=False)  # totals + threshold + confusion
+    cells = barrier(cells)  # totals + threshold + confusion
     tot = cells.agg(
         F.sum("nb").cast("bigint").alias("n"),
         F.sum("pb").cast("bigint").alias("n_pos"),
@@ -195,7 +196,7 @@ def q_ks_model_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
     one score. Output one row: n, n_pos, d_micro, vc_at_max (smallest
     cell achieving the max)."""
     cells = _score_cells(spark, sf_dir)
-    cells = cells.localCheckpoint(eager=False)  # totals + two scans + argmax
+    cells = barrier(cells)  # totals + two scans + argmax
     tot = cells.agg(
         F.sum("nb").cast("bigint").alias("n"),
         F.sum("pb").cast("bigint").alias("n_pos"),
@@ -215,7 +216,7 @@ def q_ks_model_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
             ") + 0.5) as bigint) AS dm",
         )
     )
-    diff = diff.localCheckpoint(eager=False)  # max pass + argmax pass
+    diff = barrier(diff)  # max pass + argmax pass
     dmax = diff.agg(F.max("dm").cast("bigint").alias("d_micro"))
     return (
         diff.crossJoin(F.broadcast(dmax))
@@ -267,7 +268,7 @@ def q_lift_capture_topdecile(spark: SparkSession, sf_dir: str) -> DataFrame:
     n, n_pos, k_target, thr_vc, n_top, pos_top, lift_micro,
     capture_micro."""
     cells = _score_cells(spark, sf_dir)
-    cells = cells.localCheckpoint(eager=False)  # totals + threshold + topset
+    cells = barrier(cells)  # totals + threshold + topset
     tot = cells.agg(
         F.sum("nb").cast("bigint").alias("n"),
         F.sum("pb").cast("bigint").alias("n_pos"),

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _DEC = "cast({x} as decimal(38,0))"
 _DAY_US = 86_400_000_000
@@ -85,7 +86,7 @@ def q_white_lm_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("h"),
         F.expr("cast(floor(value * 1e6 + 0.5) as bigint)").alias("y"),
     )
-    base = base.localCheckpoint(eager=False)  # coef pass + residual pass
+    base = barrier(base)  # coef pass + residual pass
     m = base.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("h").cast("bigint").alias("sh"),
@@ -304,7 +305,7 @@ def q_chow_break_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     double closed form — no residual pass, no snapping needed. Output
     one row: n_days, t_break, chow_milli."""
     daily = _daily(spark, sf_dir)
-    daily = daily.localCheckpoint(eager=False)  # spine pass + moment pass
+    daily = barrier(daily)  # spine pass + moment pass
     sp = daily.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.min("d").cast("bigint").alias("d0"),
@@ -420,7 +421,7 @@ def q_ramsey_reset_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer square — exact in both engines. Output one row: n_days,
     slope_milli, reset_milli."""
     daily = _daily(spark, sf_dir)
-    daily = daily.localCheckpoint(eager=False)  # 3 passes
+    daily = barrier(daily)  # 3 passes
     sp = daily.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.min("d").cast("bigint").alias("d0"),

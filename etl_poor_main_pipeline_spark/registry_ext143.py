@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _DEC = "cast({x} as decimal(38,0))"
 _DAY_US = 86_400_000_000
@@ -91,7 +92,7 @@ def _chart_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     means, micro), rbar (mean range, micro), and the snapped X̄/R
     control limits."""
     sub = _subgroups(spark, sf_dir)
-    sub = sub.localCheckpoint(eager=False)  # stats pass + flag pass
+    sub = barrier(sub)  # stats pass + flag pass
     stats = sub.agg(
         F.count(F.lit(1)).cast("bigint").alias("g"),
         F.sum("xm").cast("bigint").alias("sxm"),
@@ -210,7 +211,7 @@ def q_p_chart_limits(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("is_err").cast("bigint").alias("n_err"),
         )
     )
-    daily = daily.localCheckpoint(eager=False)  # pooled pass + limit pass
+    daily = barrier(daily)  # pooled pass + limit pass
     pooled = daily.agg(
         F.sum("n").cast("bigint").alias("nt"),
         F.sum("n_err").cast("bigint").alias("et"),
@@ -346,7 +347,7 @@ def q_western_electric_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("xm")
         )
     )
-    daily = daily.localCheckpoint(eager=False)  # stats pass + rules pass
+    daily = barrier(daily)  # stats pass + rules pass
     stats = daily.agg(
         F.count(F.lit(1)).cast("bigint").alias("nd"),
         F.sum("xm").cast("bigint").alias("sx"),

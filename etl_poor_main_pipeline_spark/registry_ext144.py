@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _DAY_US = 86_400_000_000
 _EVENT = "purchase"
@@ -96,7 +97,7 @@ def _risk_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("at"),
         )
     )
-    cells = cells.localCheckpoint(eager=False)  # bounded day-cell frame
+    cells = barrier(cells)  # bounded day-cell frame
     w = Window.orderBy(F.col("t").desc()).rowsBetween(
         Window.unboundedPreceding, 0
     )
@@ -234,7 +235,7 @@ def q_peto_peto_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     and micro-snapped per day. Output one row: n_users, oe_micro,
     v_micro, z_milli."""
     risk = _risk_cells(spark, sf_dir)
-    risk = risk.localCheckpoint(eager=False)  # ln-prefix + terms passes
+    risk = barrier(risk)  # ln-prefix + terms passes
     wln = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, 0)
     wrisk = risk.select(
         "t",
@@ -316,7 +317,7 @@ def q_actuarial_life_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("leave"),
         )
     )
-    iv = iv.localCheckpoint(eager=False)  # bounded week frame; 2 walks
+    iv = barrier(iv)  # bounded week frame; 2 walks
     tot = iv.agg(F.sum("leave").cast("bigint").alias("n_all"))
     wpre = Window.orderBy("week").rowsBetween(
         Window.unboundedPreceding, -1
@@ -447,7 +448,7 @@ def q_km_greenwood_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         " / (cast(nt as double) * cast(nt - dt as double)) + 0.5)"
         " as bigint) ELSE cast(0 as bigint) END AS gw",
     )
-    ev = ev.localCheckpoint(eager=False)  # bounded event-day frame
+    ev = barrier(ev)  # bounded event-day frame
     win = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, 0)
     cum = ev.select(
         "t",

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _DEC = "cast({x} as decimal(38,0))"
 #: stratum -> (2-hex-char md5 threshold, exact integer expansion 256/k)
@@ -121,7 +122,7 @@ def q_horvitz_thompson_total(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"CASE {wexp} ELSE 1 END AS wx",
         "substring(md5(cast(event_id as string)), 1, 2) AS b",
     )
-    base = base.localCheckpoint(eager=False)  # truth pass + sample pass
+    base = barrier(base)  # truth pass + sample pass
     truth = base.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_frame"),
         F.sum("ym").cast("bigint").alias("true_total"),
@@ -300,7 +301,7 @@ def q_systematic_sample_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "cast(floor(value * 1e6 + 0.5) as bigint) AS ym",
     )
-    base = base.localCheckpoint(eager=False)  # truth pass + sample pass
+    base = barrier(base)  # truth pass + sample pass
     truth = base.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_frame"),
         F.sum("ym").cast("bigint").alias("ty"),

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _DAY_US = 86_400_000_000
 _TS_LIMIT = 0.51  # Trigg's tracking-signal action limit for alpha=1/4
@@ -184,7 +185,7 @@ def q_theta_method_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     robust). Output one row: n_days, slope_micro, ses_micro,
     fc1_micro, fc7_micro."""
     daily = _daily_mean(spark, sf_dir)
-    daily = daily.localCheckpoint(eager=False)  # moment pass + fold pass
+    daily = barrier(daily)  # moment pass + fold pass
     mom = daily.selectExpr("d", "ymic").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.min("d").cast("bigint").alias("d0"),

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _DEC = "cast({x} as decimal(38,0))"
 _DAY_US = 86_400_000_000
@@ -61,7 +62,7 @@ def q_poisson_irls_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("d")
         .agg(F.count(F.lit(1)).cast("bigint").alias("y"))
     )
-    daily = daily.localCheckpoint(eager=False)  # K+2 passes
+    daily = barrier(daily)  # K+2 passes
     sp = daily.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.min("d").cast("bigint").alias("d0"),
@@ -253,7 +254,7 @@ def q_logistic_irls_value(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("yy").cast("bigint").alias("yc"),
         )
     )
-    cells = cells.localCheckpoint(eager=False)  # K+1 passes
+    cells = barrier(cells)  # K+1 passes
     tot = cells.agg(
         F.sum("nc").cast("bigint").alias("n"),
         F.sum("yc").cast("bigint").alias("n_pos"),

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _DEC = "cast({x} as decimal(38,0))"
 _KA_CODERS = 7
@@ -277,11 +278,11 @@ def q_scott_pi_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     pi = (4N·agree - Σn_v²) / (4N² - Σn_v²) in exact integers.
     Output one row: n_units, agree, pi_micro."""
     r = _ratings(spark, sf_dir)
-    r = r.localCheckpoint(eager=False)  # two coder slices + marginals
+    r = barrier(r)  # two coder slices + marginals
     r0 = r.where("c = 0").select("u", F.col("v").alias("v0"))
     r1 = r.where("c = 1").select("u", F.col("v").alias("v1"))
     both = r0.join(r1, "u")
-    both = both.localCheckpoint(eager=False)  # counts + marginals
+    both = barrier(both)  # counts + marginals
     nn = both.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum(F.expr("cast(v0 = v1 as bigint)")).cast("bigint")
@@ -350,7 +351,7 @@ def q_krippendorff_alpha_ordinal(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = _ratings(spark, sf_dir)
     mu = r.groupBy("u").agg(F.count(F.lit(1)).cast("bigint").alias("m"))
     rm = r.join(mu.where(F.col("m") >= 2), "u")
-    rm = rm.localCheckpoint(eager=False)  # marginals + pairs + units
+    rm = barrier(rm)  # marginals + pairs + units
     rank_case = "CASE " + " ".join(
         f"WHEN v = '{v}' THEN {k}" for v, k in _RANKS.items()
     ) + " END"
@@ -359,7 +360,7 @@ def q_krippendorff_alpha_ordinal(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("bigint").alias("nv"))
         .selectExpr("v", "nv", f"{rank_case} AS rk")
     )
-    marg = marg.localCheckpoint(eager=False)  # 3-way enum cross
+    marg = barrier(marg)  # 3-way enum cross
     # 25-cell distance matrix: between-sum over ranks in [min,max]
     dist = (
         marg.selectExpr("v AS va", "nv AS na", "rk AS ra")
@@ -376,7 +377,7 @@ def q_krippendorff_alpha_ordinal(spark: SparkSession, sf_dir: str) -> DataFrame:
             "(2 * bs - na - nb) * (2 * bs - na - nb) AS d2s",
         )
     )
-    dist = dist.localCheckpoint(eager=False)  # S join + E reduce
+    dist = barrier(dist)  # S join + E reduce
     s = (
         rm.alias("a")
         .join(

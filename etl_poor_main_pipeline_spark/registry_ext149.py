@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _DEC = "cast({x} as decimal(38,0))"
 _DAY_US = 86_400_000_000
@@ -219,7 +220,7 @@ def q_zip_mom_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"unix_micros(ts) div {_DAY_US}").alias("d"),
         F.expr("cast(event_type = 'purchase' as bigint)").alias("p"),
     )
-    base = base.localCheckpoint(eager=False)  # universe + nonzero passes
+    base = barrier(base)  # universe + nonzero passes
     uni = base.agg(
         F.countDistinct("user_id").cast("bigint").alias("u"),
         F.countDistinct("d").cast("bigint").alias("dd"),

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _DEC = "cast({x} as decimal(38,0))"
 _TOKN = r"cast(size(filter(split(text, '\\s+'), t -> t <> '')) as bigint)"
@@ -130,7 +131,7 @@ def q_dataloader_shard_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n").cast("bigint").alias("tokens"),
         )
     )
-    per = per.localCheckpoint(eager=False)  # mean pass + ratio pass
+    per = barrier(per)  # mean pass + ratio pass
     tot = per.agg(
         F.sum("tokens").cast("bigint").alias("tt"),
         F.count(F.lit(1)).cast("bigint").alias("w"),

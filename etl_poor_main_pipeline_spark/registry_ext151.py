@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _DEC = "cast({x} as decimal(38,0))"
 _DAY_US = 86_400_000_000
@@ -272,7 +273,7 @@ def q_ar2_yule_walker_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("y")
         )
     )
-    daily = daily.localCheckpoint(eager=False)  # lag pass + tail pass
+    daily = barrier(daily)  # lag pass + tail pass
     w = Window.orderBy("d")
     lagged = daily.select(
         "d",

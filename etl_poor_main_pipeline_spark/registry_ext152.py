@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _DEC = "cast({x} as decimal(38,0))"
 _PHI = "(1.0 / (1.0 + exp(-1.5976 * {z} - 0.070566 * {z} * {z} * {z})))"
@@ -134,7 +135,7 @@ def q_holm_bonferroni_correction(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-joins over the 35-cell frame. Output per cell: event_type,
     dow0, p_micro, p_holm_micro, reject_10."""
     fam = _test_family(spark, sf_dir)
-    fam = fam.localCheckpoint(eager=False)  # rank join + cummax join
+    fam = barrier(fam)  # rank join + cummax join
     m = fam.agg(F.count(F.lit(1)).cast("bigint").alias("m"))
     ranked = (
         fam.alias("a")
@@ -149,7 +150,7 @@ def q_holm_bonferroni_correction(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("a.event_type", "a.dow0", "a.p_micro")
         .agg(F.count(F.lit(1)).cast("bigint").alias("rk"))
     )
-    ranked = ranked.localCheckpoint(eager=False)  # cummax join
+    ranked = barrier(ranked)  # cummax join
     holm = (
         ranked.alias("x")
         .join(ranked.alias("y"), F.expr("y.rk <= x.rk"))
@@ -212,7 +213,7 @@ def q_benjamini_yekutieli_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     critical value (round-11 ADVICE fix). Output per cell:
     event_type, dow0, p_micro, crit_by_micro, reject_by."""
     fam = _test_family(spark, sf_dir)
-    fam = fam.localCheckpoint(eager=False)  # rank join + crit pass
+    fam = barrier(fam)  # rank join + crit pass
     m = fam.agg(F.count(F.lit(1)).cast("bigint").alias("m")).selectExpr(
         "m",
         # harmonic number c(m), nano-snapped reciprocals, exact sum

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _DEC = "cast({x} as decimal(38,0))"
 _DAY_US = 86_400_000_000
@@ -57,7 +58,7 @@ def q_generalized_esd_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("vc")
         .agg(F.count(F.lit(1)).cast("bigint").alias("w"))
     )
-    cur = cells.localCheckpoint(eager=False)
+    cur = barrier(cells)
     outs = []
     for i in range(1, _ESD_ROUNDS + 1):
         m = cur.agg(
@@ -92,9 +93,9 @@ def q_generalized_esd_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " AS r_milli",
             )
         )
-        pick = pick.localCheckpoint(eager=False)  # output + decrement
+        pick = barrier(pick)  # output + decrement
         outs.append(pick)
-        cur = (
+        cur = barrier(
             cur.crossJoin(
                 F.broadcast(pick.selectExpr("vc_removed AS vc_rm"))
             )
@@ -103,7 +104,6 @@ def q_generalized_esd_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "if(vc = vc_rm, w - 1, w) AS w",
             )
             .filter("w > 0")
-            .localCheckpoint(eager=False)
         )
     out = outs[0]
     for p in outs[1:]:
@@ -194,7 +194,7 @@ def q_cooks_distance_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     top 5 by snapped D with a day tiebreak. Output: day_t, e_milli,
     h_micro, cooks_d_milli."""
     daily = _daily_total(spark, sf_dir)
-    daily = daily.localCheckpoint(eager=False)  # moments + per-day pass
+    daily = barrier(daily)  # moments + per-day pass
     mom = daily.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.min("d").cast("bigint").alias("d0"),
@@ -304,7 +304,7 @@ def q_jackknife_slope_se(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output one row: n_days, b_full_micro, b_jack_mean_micro,
     se_jack_micro."""
     daily = _daily_total(spark, sf_dir)
-    daily = daily.localCheckpoint(eager=False)  # moments + LOO + reduce
+    daily = barrier(daily)  # moments + LOO + reduce
     mom = daily.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("d").cast("bigint").alias("sd_raw"),
@@ -433,7 +433,7 @@ def q_median_polish_2way(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("y")
         )
     )
-    cell = cell.localCheckpoint(eager=False)  # 2 sweeps x 2 directions
+    cell = barrier(cell)  # 2 sweeps x 2 directions
     # state: residual res (starts at y), row effects re, col effects ce,
     # grand g — all micro ints; lower median = element at (cnt+1) div 2
     # of the sorted list (exact for odd sizes, deterministic for even)
@@ -455,7 +455,7 @@ def q_median_polish_2way(spark: SparkSession, sf_dir: str) -> DataFrame:
         rm = state.groupBy("event_type").agg(
             F.expr(med.format(x="res")).cast("bigint").alias("rmed")
         )
-        state = (
+        state = barrier(
             state.join(F.broadcast(rm), "event_type")
             .selectExpr(
                 "event_type",
@@ -466,7 +466,6 @@ def q_median_polish_2way(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "ce",
                 "g",
             )
-            .localCheckpoint(eager=False)
         )
         # fold the median of row effects into the grand term
         gm = state.groupBy().agg(
@@ -475,7 +474,7 @@ def q_median_polish_2way(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " cast((count(distinct event_type) + 1) div 2 as int)).re"
             ).cast("bigint").alias("gmed")
         )
-        state = (
+        state = barrier(
             state.crossJoin(F.broadcast(gm))
             .selectExpr(
                 "event_type",
@@ -486,13 +485,12 @@ def q_median_polish_2way(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "ce",
                 "g + gmed AS g",
             )
-            .localCheckpoint(eager=False)
         )
         # column sweep: median over event_types within each dow
         cm = state.groupBy("dow0").agg(
             F.expr(med.format(x="res")).cast("bigint").alias("cmed")
         )
-        state = (
+        state = barrier(
             state.join(F.broadcast(cm), "dow0")
             .selectExpr(
                 "event_type",
@@ -503,7 +501,6 @@ def q_median_polish_2way(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "ce + cmed AS ce",
                 "g",
             )
-            .localCheckpoint(eager=False)
         )
         gm2 = state.groupBy().agg(
             F.expr(
@@ -511,7 +508,7 @@ def q_median_polish_2way(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " cast((count(distinct dow0) + 1) div 2 as int)).ce"
             ).cast("bigint").alias("gmed")
         )
-        state = (
+        state = barrier(
             state.crossJoin(F.broadcast(gm2))
             .selectExpr(
                 "event_type",
@@ -522,7 +519,6 @@ def q_median_polish_2way(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "ce - gmed AS ce",
                 "g + gmed AS g",
             )
-            .localCheckpoint(eager=False)
         )
     return state.selectExpr(
         "event_type",

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from .operators.scan_prefix import exclusive_prefix_sum
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _DEC = "cast({x} as decimal(38,0))"
 _PHI = "(1.0 / (1.0 + exp(-1.5976 * {z} - 0.070566 * {z} * {z} * {z})))"
@@ -50,7 +51,7 @@ def _cells_with_ranks(spark: SparkSession, sf_dir: str):
         .groupBy("vc")
         .agg(F.count(F.lit(1)).cast("bigint").alias("w"))
     )
-    cells = cells.localCheckpoint(eager=False)  # moments + prefix passes
+    cells = barrier(cells)  # moments + prefix passes
     m = cells.agg(
         F.sum("w").cast("bigint").alias("n"),
         F.sum(F.expr("w * vc")).cast("bigint").alias("s1"),
@@ -327,7 +328,7 @@ def q_gini_gain_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("y").cast("bigint").alias("p"),
         )
     )
-    cells = cells.localCheckpoint(eager=False)  # totals + prefix + argmax
+    cells = barrier(cells)  # totals + prefix + argmax
     tot = cells.agg(
         F.sum("w").cast("bigint").alias("n"),
         F.sum("p").cast("bigint").alias("n_pos"),

@@ -54,6 +54,7 @@ from pyspark.sql.window import Window
 
 from .operators.scan_prefix import exclusive_prefix_sum
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _DEC = "cast({x} as decimal(38,0))"
 _LP_A, _LP_B = "click", "purchase"
@@ -171,7 +172,7 @@ def q_anderson_darling_ksamp(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "vc")
         .agg(F.count(F.lit(1)).cast("bigint").alias("f"))
     )
-    gcells = gcells.localCheckpoint(eager=False)  # pooled + per-group passes
+    gcells = barrier(gcells)  # pooled + per-group passes
     cells = gcells.groupBy("vc").agg(F.sum("f").cast("bigint").alias("l"))
     pooled = exclusive_prefix_sum(cells, "vc", "l", out="nb")
     nj = gcells.groupBy("event_type").agg(F.sum("f").cast("bigint").alias("n_j"))
@@ -661,7 +662,7 @@ def q_fligner_killeen_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "vc")
         .agg(F.count(F.lit(1)).cast("bigint").alias("f"))
     )
-    vcells = vcells.localCheckpoint(eager=False)  # median + z-cell passes
+    vcells = barrier(vcells)  # median + z-cell passes
     w_g = (
         Window.partitionBy("event_type")
         .orderBy("vc")
@@ -682,7 +683,7 @@ def q_fligner_killeen_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "zc")
         .agg(F.sum("f").cast("bigint").alias("f"))
     )
-    gcells = gcells.localCheckpoint(eager=False)  # pooled + per-group passes
+    gcells = barrier(gcells)  # pooled + per-group passes
     scored = _scored_pooled_cells(
         gcells, p_num="2 * n + 3 + 2 * nb + l", p_den="4 * (n + 1)"
     )
@@ -741,7 +742,7 @@ def q_van_der_waerden_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "zc")
         .agg(F.count(F.lit(1)).cast("bigint").alias("f"))
     )
-    gcells = gcells.localCheckpoint(eager=False)  # pooled + per-group passes
+    gcells = barrier(gcells)  # pooled + per-group passes
     scored = _scored_pooled_cells(
         gcells, p_num="2 * nb + l + 1", p_den="2 * (n + 1)"
     )

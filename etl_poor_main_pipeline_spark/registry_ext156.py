@@ -42,6 +42,7 @@ from pyspark.sql.window import Window
 
 from .operators.scan_prefix import exclusive_prefix_sum
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _DEC = "cast({x} as decimal(38,0))"
 _DAY_US = 86_400_000_000
@@ -82,7 +83,7 @@ def _dk_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     day order), dknum = n·P_k - k·T (micro units, exact bigint), plus
     broadcast totals (n, T, and the exact centered sum of squares
     numerator css2 = n·Σx² - T² so s² = css2/n²/(n or n-1))."""
-    daily = _daily(spark, sf_dir).localCheckpoint(eager=False)
+    daily = barrier(_daily(spark, sf_dir))
     tot = daily.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("x").cast("bigint").alias("t"),
@@ -406,7 +407,7 @@ def q_blomqvist_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("yv"),
         )
     )
-    pairs = pairs.localCheckpoint(eager=False)  # two median walks + quadrants
+    pairs = barrier(pairs)  # two median walks + quadrants
 
     def lower_median(df: DataFrame, col: str) -> DataFrame:
         cells = df.groupBy(col).agg(F.count(F.lit(1)).cast("bigint").alias("f"))

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from .operators.scan_prefix import exclusive_prefix_sum
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _DEC = "cast({x} as decimal(38,0))"
 _DAY_US = 86_400_000_000
@@ -222,7 +223,7 @@ def _circular_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     minutes and the cell count f of the gap's LEFT endpoint (whose
     f-1 duplicate points contribute zero spacings). Output columns:
     gap (minutes, bigint), fz (zero-spacing multiplicity), n."""
-    cells = _minute_cells(spark, sf_dir).localCheckpoint(eager=False)
+    cells = barrier(_minute_cells(spark, sf_dir))
     ranked = exclusive_prefix_sum(
         cells.withColumn("one", F.lit(1).cast("bigint")), "mc", "one", out="r0"
     ).select("mc", "f", "r0")

@@ -50,6 +50,7 @@ from pyspark.sql.window import Window
 
 from .operators.scan_prefix import exclusive_prefix_sum
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _DEC = "cast({x} as decimal(38,0))"
 _DAY_US = 86_400_000_000
@@ -91,10 +92,9 @@ def q_hoeffding_d(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("y"),
         )
     )
-    joint = (
+    joint = barrier(  # marginals + dense grid passes
         pairs.groupBy("x", "y")
         .agg(F.count(F.lit(1)).cast("bigint").alias("w"))
-        .localCheckpoint(eager=False)  # marginals + dense grid passes
     )
     xm = joint.groupBy("x").agg(F.sum("w").cast("bigint").alias("fx"))
     xm = exclusive_prefix_sum(xm, "x", "fx", out="xb").selectExpr(

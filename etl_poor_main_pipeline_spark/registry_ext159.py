@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 
 from .operators.scan_prefix import exclusive_prefix_sum
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _DEC = "cast({x} as decimal(38,0))"
 _DAY_US = 86_400_000_000
@@ -271,13 +272,12 @@ def q_quesenberry_miller_spacings(
     single point. Exact integers: B·1440² = Σ gap² + Σ gap·gap_next·
     [f_next = 1]. Output one row: n, b_nano, n_b_micro (= n·B)."""
     e = _t(spark, sf_dir, "events")
-    cells = (
+    cells = barrier(
         e.select(
             F.expr(f"(unix_micros(ts) % {_DAY_US}) div 60000000").alias("mc")
         )
         .groupBy("mc")
         .agg(F.count(F.lit(1)).cast("bigint").alias("f"))
-        .localCheckpoint(eager=False)
     )
     ranked = exclusive_prefix_sum(
         cells.withColumn("one", F.lit(1).cast("bigint")), "mc", "one", out="r0"
@@ -304,7 +304,7 @@ def q_quesenberry_miller_spacings(
             "pmod(mc_next - mc, 1440) + if(mc_next = mc, 1440, 0) AS gap",
         )
     )
-    gaps = gaps.localCheckpoint(eager=False)  # squared + cross passes
+    gaps = barrier(gaps)  # squared + cross passes
     nxt_gap = gaps.crossJoin(
         F.broadcast(gaps.agg(F.max("r0").cast("bigint").alias("rmax2")))
     ).selectExpr(

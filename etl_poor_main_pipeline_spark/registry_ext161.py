@@ -67,6 +67,7 @@ from .operators.scan_prefix import (
 )
 from .registry import QuerySpec, _t
 from .registry_ext155 import _chi2_crit_micro
+from .session import barrier
 
 _WD_A, _WD_B = "click", "purchase"
 
@@ -102,7 +103,9 @@ def _wd_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "events").filter(
         F.col("event_type").isin(_WD_A, _WD_B)
     )
-    return (
+    # three prefix scans (idx/ca/cb) + the pooled/per-side reuse in
+    # bws would each recompute the events scan+agg otherwise
+    return barrier(
         e.select(
             F.expr("cast(floor(value * 100.0 + 0.5) as bigint)").alias("vc"),
             F.expr(f"cast(event_type = '{_WD_A}' as int)").alias("isa"),
@@ -112,9 +115,6 @@ def _wd_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("isa").cast("bigint").alias("ca"),
             F.sum(F.expr("1 - isa")).cast("bigint").alias("cb"),
         )
-        # three prefix scans (idx/ca/cb) + the pooled/per-side reuse in
-        # bws would each recompute the events scan+agg otherwise
-        .localCheckpoint(eager=False)
     )
 
 
@@ -129,7 +129,7 @@ def q_wasserstein_distance_2samp(
     decimal(38,0), divided once by n_a·n_b·100. Output one row: n_a,
     n_b, w1_micro (value units)."""
     cells = _wd_cells(spark, sf_dir)
-    fr = exclusive_prefix_sums(
+    fr = barrier(exclusive_prefix_sums(
         cells.withColumn("one", F.lit(1).cast("bigint")),
         "vc",
         {"one": "idx0", "ca": "pa", "cb": "pb"},
@@ -138,7 +138,7 @@ def q_wasserstein_distance_2samp(
         "idx0 + 1 AS idx",
         "pa + ca AS cuma",
         "pb + cb AS cumb",
-    ).localCheckpoint(eager=False)  # adjacency join + tot + terms
+    ))  # adjacency join + tot + terms
     nxt = fr.selectExpr("idx - 1 AS idx", "vc AS vc_next")
     tot = fr.agg(
         F.max("cuma").cast("bigint").alias("na"),
@@ -216,13 +216,13 @@ def q_bws_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     # to a cumsum, so the unfiltered per-side prefixes equal the old
     # filtered ones at every surviving cell): round 14 fold of the
     # former three passes / six broadcast builds.
-    fr = exclusive_prefix_sums(
+    fr = barrier(exclusive_prefix_sums(
         cells.withColumn("l", F.expr("ca + cb")),
         "vc",
         {"l": "nb0", "ca": "ia_a", "cb": "ia_b"},
     ).selectExpr(
         "vc", "ca", "cb", "2 * nb0 + l + 1 AS r2", "ia_a", "ia_b"
-    ).localCheckpoint(eager=False)  # feeds both per-side frames + mn
+    ))  # feeds both per-side frames + mn
     out = []
     for side, col, ia in (("a", "ca", "ia_a"), ("b", "cb", "ia_b")):
         out.append(
@@ -381,14 +381,13 @@ def q_dunn_posthoc_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     through a broadcast pair join (the tukey_hsd_pairs pattern).
     Output per pair: ti, tj, n_i, n_j, z_milli, reject_bonf05."""
     e = _t(spark, sf_dir, "events")
-    cells2 = (
+    cells2 = barrier(  # pooled prefix + grp join
         e.select(
             "event_type",
             F.expr("cast(floor(value * 100.0 + 0.5) as bigint)").alias("vc"),
         )
         .groupBy("vc", "event_type")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .localCheckpoint(eager=False)  # pooled prefix + grp join
     )
     pooled = exclusive_prefix_sum(
         cells2.groupBy("vc").agg(F.sum("c").cast("bigint").alias("l")),
@@ -616,14 +615,13 @@ def q_ridit_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     null (no tie correction — documented convention). Output per
     event_type: n_j, mean_ridit_micro, z_milli, reject_05."""
     e = _t(spark, sf_dir, "events")
-    cells2 = (
+    cells2 = barrier(  # pooled prefix + grp join
         e.select(
             "event_type",
             F.expr("cast(floor(value * 100.0 + 0.5) as bigint)").alias("vc"),
         )
         .groupBy("vc", "event_type")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .localCheckpoint(eager=False)  # pooled prefix + grp join
     )
     pooled = exclusive_prefix_sum(
         cells2.groupBy("vc").agg(F.sum("c").cast("bigint").alias("l")),
@@ -716,10 +714,10 @@ def q_sax_paa_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("x")
         )
     )
-    ranked = exclusive_prefix_sum(
+    ranked = barrier(exclusive_prefix_sum(
         daily.withColumn("one", F.lit(1).cast("bigint")), "d", "one",
         out="r0",
-    ).localCheckpoint(eager=False)  # mom pass + seg pass
+    ))  # mom pass + seg pass
     mom = ranked.agg(
         F.count(F.lit(1)).cast("bigint").alias("t"),
         F.sum("x").cast("bigint").alias("sx"),

@@ -69,6 +69,7 @@ from .operators.scan_prefix import exclusive_prefix_sum
 from .registry import QuerySpec, _t
 from .registry_ext155 import _chi2_crit_micro, _probit_sql
 from .registry_ext127 import _ORACLE_SM, q_stuart_maxwell_test
+from .session import barrier
 
 _DAY_US = 86_400_000_000
 _HALF_US = 43_200_000_000
@@ -151,7 +152,7 @@ def q_passing_bablok_regression(
     statistics picked from slope cells via one Blelloch prefix. Output
     one row: n_days, n_slopes, k_offset, slope_micro_x2,
     intercept_micro."""
-    daily = _pb_daily(spark, sf_dir).localCheckpoint(eager=False)
+    daily = barrier(_pb_daily(spark, sf_dir))
     a = daily.selectExpr("d AS d1", "x AS x1", "y AS y1")
     b = daily.selectExpr("d AS d2", "x AS x2", "y AS y2")
     slopes = (
@@ -164,9 +165,7 @@ def q_passing_bablok_regression(
     # query's single tree cost ~0.84s of Catalyst + AQE re-planning on
     # every run; two LogicalRDD barriers cut the re-planned tree to a
     # third (measured med 3.35 -> 2.36s interleaved, identical row)
-    pref = exclusive_prefix_sum(cells, "s", "c", out="nb").localCheckpoint(
-        eager=False
-    )
+    pref = barrier(exclusive_prefix_sum(cells, "s", "c", out="nb"))
     tot = pref.agg(
         F.max(F.expr("nb + c")).cast("bigint").alias("n"),
         F.sum(F.expr("if(s < -1000000, c, 0L)")).cast("bigint").alias("k"),
@@ -197,9 +196,9 @@ def q_passing_bablok_regression(
     rcells = resid.groupBy("n", "k", "b_x2", "a2").agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
     )
-    rpref = exclusive_prefix_sum(
+    rpref = barrier(exclusive_prefix_sum(
         rcells.selectExpr("a2", "c", "n", "k", "b_x2"), "a2", "c", out="nb"
-    ).localCheckpoint(eager=False)
+    ))
     rtot = rpref.agg(F.max(F.expr("nb + c")).cast("bigint").alias("m"))
     return (
         rpref.crossJoin(F.broadcast(rtot))
@@ -439,7 +438,7 @@ def q_chauvenet_criterion(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output one row: n_days, z_crit_milli, n_outliers, worst_day,
     worst_z_milli."""
     e = _t(spark, sf_dir, "events")
-    daily = (
+    daily = barrier(  # mom pass + z pass
         e.selectExpr(
             f"unix_micros(ts) div {_DAY_US} AS d",
             "cast(floor(value * 1e6 + 0.5) as bigint) AS vm",
@@ -451,7 +450,6 @@ def q_chauvenet_criterion(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " as bigint)"
             ).alias("x")
         )
-        .localCheckpoint(eager=False)  # mom pass + z pass
     )
     mom = daily.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -579,10 +577,10 @@ def q_fisher_g_periodicity(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("x")
         )
     )
-    ranked = exclusive_prefix_sum(
+    ranked = barrier(exclusive_prefix_sum(
         daily.withColumn("one", F.lit(1).cast("bigint")), "d", "one",
         out="r",
-    ).localCheckpoint(eager=False)
+    ))
     mom = ranked.agg(
         F.count(F.lit(1)).cast("bigint").alias("t"),
         F.sum("x").cast("bigint").alias("sx"),

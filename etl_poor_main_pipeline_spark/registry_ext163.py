@@ -52,6 +52,7 @@ from pyspark.sql import functions as F
 
 from .operators.scan_prefix import exclusive_prefix_sum
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _DAY_US = 86_400_000_000
 _HOUR_US = 3_600_000_000
@@ -178,10 +179,9 @@ def q_kr20_reliability(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers. Output one row: k_items, n_users, sum_pq_micro,
     var_total_micro, kr20_micro."""
     e = _t(spark, sf_dir, "events")
-    cnts = (
+    cnts = barrier(  # thresh pass + item pass
         e.groupBy("user_id", "event_type")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-        .localCheckpoint(eager=False)  # thresh pass + item pass
     )
     nusers = cnts.agg(
         F.countDistinct("user_id").cast("bigint").alias("n")
@@ -414,13 +414,12 @@ def q_schnabel_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimate (capture_recapture_chapman's K-occasion sibling). Output
     one row: n_weeks, n_marked_total, sum_cm, sum_r, n_hat_milli."""
     e = _t(spark, sf_dir, "events")
-    uw = (
+    uw = barrier(  # first-week pass + weekly pass
         e.selectExpr(
             "user_id",
             f"unix_micros(ts) div {_DAY_US} div 7 AS w",
         )
         .distinct()
-        .localCheckpoint(eager=False)  # first-week pass + weekly pass
     )
     first = uw.groupBy("user_id").agg(F.min("w").alias("fw"))
     weekly = (

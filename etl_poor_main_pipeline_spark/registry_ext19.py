@@ -10,9 +10,9 @@ Scale stances:
   Ranks are checkpointed per iteration: without lineage truncation the
   plan doubles per iteration and Catalyst re-optimization goes
   superlinear by iteration ~8 (the classic iterative-DataFrame trap).
-  ``localCheckpoint()`` by default (test SFs); pass ``checkpoint_dir``
-  for a reliable ``df.checkpoint()`` so executor loss doesn't force a
-  full recompute — the 100 TB posture.
+  Each checkpoint is a ``session.barrier``: local by default, reliable
+  ``df.checkpoint()`` once the deployment sets ``spark.checkpoint.dir``,
+  so executor loss doesn't force a full recompute — the 100 TB posture.
   Contribution sums run through decimal so the shuffle's reduce order
   can't perturb the fixed point (registry._dsum stance); both engines
   cast the *same* doubles to the *same* decimals, so the iteration stays
@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from .operators import dedup
 from .registry import QuerySpec, _t
+from .session import barrier
 
 # --------------------------------------------------------------------------
 # PageRank over the near-dup graph (X9 [EXT] iterative)
@@ -52,9 +53,7 @@ _EDGE_SQL = r"""
 """
 
 
-def q_pagerank_docs(
-    spark: SparkSession, sf_dir: str, checkpoint_dir: str | None = None
-) -> DataFrame:
+def q_pagerank_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[EXT] X9 PageRank (damping 0.85, 5 iterations) over the document
     near-dup graph: nodes = all documents, undirected edges = token-set
     Jaccard >= 0.8 pairs (the dedup_jaccard_pairs definition). Dangling
@@ -63,38 +62,27 @@ def q_pagerank_docs(
     hubs surface with rank ≫ 0.15/N, singletons sit at exactly 0.15/N
     after iteration 1.
 
-    Checkpoint tradeoff: with ``checkpoint_dir=None`` (test SFs) lineage
-    is truncated with ``localCheckpoint()`` — fast, but blocks are pinned
-    to executor memory/disk, so a lost executor forces recomputing the
-    whole Jaccard pipeline. At real scale pass a reliable dir (HDFS/object
-    store): ``sparkContext.setCheckpointDir`` + ``df.checkpoint()`` writes
-    the edges/ranks to fault-tolerant storage, so executor loss costs one
-    re-read, not a recompute — that is the 100 TB posture."""
-    if checkpoint_dir is not None:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    def _ckpt(df: DataFrame) -> DataFrame:
-        # lazy local checkpoints: lineage is truncated at the LOGICAL
-        # level immediately (plan growth stays bounded), but
-        # materialization folds into the final action — one job instead
-        # of one per round (round-14 A/B: 3.12 vs 3.42 s min-of-3, and
-        # the win held with the run order reversed)
-        if checkpoint_dir is not None:
-            return df.checkpoint()
-        return df.localCheckpoint(eager=False)
-
+    Checkpoint tradeoff: every lineage cut is a ``session.barrier``.
+    Without a checkpoint dir (test SFs) it is a lazy ``localCheckpoint``
+    — fast, and the per-round materialization folds into the final
+    action, but blocks are pinned to executor memory/disk, so a lost
+    executor forces recomputing the whole Jaccard pipeline. At real
+    scale the deployment sets ``spark.checkpoint.dir`` (HDFS/object
+    store) and every barrier becomes a reliable ``df.checkpoint()``:
+    executor loss costs one re-read, not a recompute — that is the
+    100 TB posture."""
     d = _t(spark, sf_dir, "documents")
     pairs = dedup.jaccard_token_sets(
         d, threshold=0.8, block_cols=["lang"], length_window=16
     ).select("id_a", "id_b")
     # one materialization: edges feed 5 iterations AND the degree agg;
     # recomputing the shingle/intersection pipeline 6x would dominate
-    edges = _ckpt(
+    edges = barrier(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionAll(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
     )
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).cast("double").alias("deg"))
-    edges_deg = _ckpt(edges.join(deg, "src"))
+    edges_deg = barrier(edges.join(deg, "src"))
 
     n = d.count()  # one scalar — the per-node teleport term needs it
     base = 0.15 / float(n)
@@ -120,7 +108,7 @@ def q_pagerank_docs(
                 ).alias("rank"),
             )
         )
-        ranks = _ckpt(ranks)  # truncate lineage: plan growth is the trap
+        ranks = barrier(ranks)  # truncate lineage: plan growth is the trap
     return ranks.select(
         "doc_id",
         F.floor(F.col("rank") * 1e9 + F.lit(0.5)).cast("bigint").alias("rank_nano"),

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from .operators.dedup import POLY_P, minhash_coeffs, poly_hash_expr, spread
 from .registry import QuerySpec, _t
+from .session import barrier
 
 # --------------------------------------------------------------------------
 # CDC snapshot diff
@@ -193,15 +194,15 @@ def q_count_min_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketches). Report the exact top-10 terms with their CM estimate;
     CM guarantees estimate >= exact, and the oracle reproduces the
     bucket arithmetic exactly (fixed-seed coefficient literals)."""
-    toks = (
+    toks = barrier(
         spread(_t(spark, sf_dir, "documents"))
         .select(
             F.explode(
                 F.filter(F.split(F.lower(F.col("text")), r"\s+"), lambda t: t != "")
             ).alias("term")
         )
-        .select("term", poly_hash_expr("term").alias("h"))
-        .localCheckpoint()  # feeds the sketch AND the exact top-k
+        .select("term", poly_hash_expr("term").alias("h")),
+        eager=True,  # feeds the sketch AND the exact top-k
     )
 
     def bucket(i: int) -> F.Column:

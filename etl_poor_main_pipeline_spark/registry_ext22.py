@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from .operators.dedup import POLY_P, minhash_coeffs, spread
 from .registry import QuerySpec, _t
+from .session import barrier
 
 # --------------------------------------------------------------------------
 # SemDeDup: semantic dedup over embedding clusters (X2/X3 [EXT])
@@ -70,7 +71,10 @@ def q_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     micro = "cast(floor(1000000.0D * (aggregate(zip_with(v, centroid, (x, y) -> x * y), 0.0D, (s, x) -> s + x) / (sqrt(aggregate(v, 0.0D, (s, x) -> s + x * x)) * sqrt(aggregate(centroid, 0.0D, (s, x) -> s + x * x)))) + 0.5D) as bigint)"
-    assigned = (
+    # assignment feeds BOTH pair sides and the final status join —
+    # materialize once instead of re-running the broadcast-assign
+    # scan three times (same posture as pagerank/triangle edges)
+    assigned = barrier(
         e.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
         .join(F.broadcast(cents))
         .withColumn("usim", F.expr(micro))
@@ -84,10 +88,6 @@ def q_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("rn") == 1)
         .select("vec_id", "cluster_id", "v")
-        # assignment feeds BOTH pair sides and the final status join —
-        # materialize once instead of re-running the broadcast-assign
-        # scan three times (same posture as pagerank/triangle edges)
-        .localCheckpoint(eager=False)
     )
     a = assigned.select(
         F.col("cluster_id"), F.col("vec_id").alias("id_a"), F.col("v").alias("va")

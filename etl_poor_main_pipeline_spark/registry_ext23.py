@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from .operators import dedup
 from .registry import QuerySpec, _t
 from .registry_ext19 import _EDGE_SQL
+from .session import barrier
 
 # --------------------------------------------------------------------------
 # Deterministic train/val/test split (X8 [EXT])
@@ -96,10 +97,9 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     families (dense cliques) from chance pairs. Edges are materialized
     once (localCheckpoint) and reused by all three join sides."""
     d = _t(spark, sf_dir, "documents")
-    pairs = (
+    pairs = barrier(
         dedup.jaccard_token_sets(d, threshold=0.8, block_cols=["lang"], length_window=16)
         .select("id_a", "id_b")
-        .localCheckpoint(eager=False)
     )
     e1 = pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
     e2 = pairs.select(F.col("id_a").alias("b"), F.col("id_b").alias("c"))

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from .operators import dedup
 from .registry import QuerySpec, _dsum, _dsum_sql, _t
 from .registry_ext19 import _EDGE_SQL as _EDGE_SQL_KC  # oracle edge-set reuse
+from .session import barrier
 
 # --------------------------------------------------------------------------
 # Point-in-time join against an SCD2 dimension (W/X9 [EXT])
@@ -129,23 +130,21 @@ def q_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dedup.jaccard_token_sets(
         d, threshold=0.8, block_cols=["lang"], length_window=16
     ).select("id_a", "id_b")
-    edges = (
+    edges = barrier(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionAll(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .localCheckpoint(eager=False)
     )
     for _ in range(_KCORE_ROUNDS):
         deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
         alive = deg.where(F.col("deg") >= _KCORE_K).select("src")
-        edges = (
+        # truncate the per-round lineage; lazy so the 6 per-round
+        # materialization jobs fold into the final action (A/B:
+        # neutral walls — 3.04 vs 3.10 s min-of-5 — kept for the
+        # family-wide one-job shape)
+        edges = barrier(
             edges.join(alive, "src")
             .join(alive.withColumnRenamed("src", "dst"), "dst")
             .select("src", "dst")
-            # truncate the per-round lineage; lazy so the 6 per-round
-            # materialization jobs fold into the final action (round-14
-            # A/B: neutral walls — 3.04 vs 3.10 s min-of-5 — kept for
-            # the family-wide one-job shape)
-            .localCheckpoint(eager=False)
         )
     return (
         edges.groupBy(F.col("src").alias("doc_id"))

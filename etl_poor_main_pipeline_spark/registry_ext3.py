@@ -11,6 +11,7 @@ from pyspark.sql.window import Window
 
 from .registry import QuerySpec, _dsum, _dsum_sql, _t
 from .functions.text import tokens_expr
+from .session import barrier
 
 
 def q_median_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -443,7 +444,7 @@ def q_dedup_char_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from .operators.dedup import spread
 
-    base = (
+    base = barrier(
         spread(d).select(
             "doc_id",
             "lang",
@@ -452,7 +453,6 @@ def q_dedup_char_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
             shingles.alias("sh"),
         )
         .withColumn("_nsh", F.size("sh"))
-        .localCheckpoint(eager=False)
     )
     a = base.select(
         "*", F.explode(F.array(F.col("_bkt") - 1, F.col("_bkt"), F.col("_bkt") + 1)).alias("_jbkt")

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from .operators.dedup import POLY_MULT, POLY_P, poly_hash_expr, spread
 from .registry import QuerySpec, _t
+from .session import barrier
 
 # --------------------------------------------------------------------------
 # PII redaction scrub (X6 [EXT])
@@ -169,7 +170,7 @@ def q_boilerplate_ngram_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("gram"),
         )
     )
-    grams = grams.localCheckpoint()  # feeds 3 consumers; explode once
+    grams = barrier(grams, eager=True)  # feeds 3 consumers; explode once
     boiler = (
         grams.groupBy("gram")
         .agg(F.countDistinct("doc_id").alias("nd"))
@@ -516,10 +517,10 @@ def q_hits_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     localCheckpoint between iterations to truncate lineage. Output: the
     per-event-type authority vector (micro-scaled)."""
     e = _t(spark, sf_dir, "events")
-    w = (
+    w = barrier(
         e.groupBy("user_id", "event_type")
-        .agg(F.count(F.lit(1)).cast("double").alias("w"))
-        .localCheckpoint()
+        .agg(F.count(F.lit(1)).cast("double").alias("w")),
+        eager=True,
     )
     auth = w.select("event_type").distinct().select(
         "event_type", F.lit(1.0).alias("a")
@@ -549,10 +550,10 @@ def q_hits_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
         asum = auth_raw.agg(
             F.sum(F.col("a").cast("decimal(38,16)")).cast("double").alias("s")
         )
-        auth = (
+        auth = barrier(
             auth_raw.crossJoin(F.broadcast(asum))
-            .select("event_type", (F.col("a") / F.col("s")).alias("a"))
-            .localCheckpoint()
+            .select("event_type", (F.col("a") / F.col("s")).alias("a")),
+            eager=True,
         )
     return auth.select(
         "event_type",

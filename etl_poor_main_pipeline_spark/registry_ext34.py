@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 # --------------------------------------------------------------------------
 # Hierarchical rollup reuse (agg [EXT])
@@ -109,13 +110,13 @@ def q_null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders").select(
         key.alias("prio_key"), "o_totalprice"
     )
-    dim = (
+    # derived from the same frame: materialize to break the self-join
+    # lineage (5 rows) rather than rely on alias disambiguation
+    dim = barrier(
         o.select(F.col("prio_key").alias("dim_key"))
         .distinct()
-        .withColumn("dim_label", F.coalesce("dim_key", F.lit("URGENT-NULL")))
-        # derived from the same frame: materialize to break the self-join
-        # lineage (5 rows) rather than rely on alias disambiguation
-        .localCheckpoint()
+        .withColumn("dim_label", F.coalesce("dim_key", F.lit("URGENT-NULL"))),
+        eager=True,
     )
     return (
         o.join(F.broadcast(dim), F.col("prio_key").eqNullSafe(F.col("dim_key")))

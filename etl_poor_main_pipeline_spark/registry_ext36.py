@@ -28,6 +28,7 @@ from pyspark.sql.window import Window
 from .operators import dedup
 from .operators.dedup import POLY_P, spread
 from .registry import QuerySpec, _t
+from .session import barrier
 
 # --------------------------------------------------------------------------
 # LSH recall audit (X2 eval [EXT])
@@ -53,10 +54,10 @@ def q_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = dedup.jaccard_token_sets(
         d, threshold=0.8, block_cols=["lang"], length_window=16
     ).select("id_a", "id_b")
-    truth = truth.localCheckpoint(eager=False)  # feeds 2 consumers
-    sigs = dedup.minhash_signatures(
+    truth = barrier(truth)  # feeds 2 consumers
+    sigs = barrier(dedup.minhash_signatures(
         d, num_hashes=_LSH_HASHES, shingle_k=1, id_cols=["doc_id"], token_hash="poly"
-    ).localCheckpoint(eager=False)
+    ))
     cands = dedup.minhash_lsh_candidates(
         sigs,
         num_bands=_LSH_BANDS,
@@ -64,7 +65,7 @@ def q_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucket_hash=False,
         distinct=True,
     ).select("id_a", "id_b")
-    cands = cands.localCheckpoint(eager=False)  # feeds 2 consumers
+    cands = barrier(cands)  # feeds 2 consumers
     n_true = truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_true"))
     n_cand = cands.agg(F.count(F.lit(1)).cast("bigint").alias("n_candidates"))
     n_hit = truth.join(cands, ["id_a", "id_b"], "left_semi").agg(
@@ -324,7 +325,7 @@ def q_ngram_novelty_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("gram"),
         )
     )
-    grams = grams.localCheckpoint()  # feeds first-occurrence AND per-doc agg
+    grams = barrier(grams, eager=True)  # feeds first-occurrence AND per-doc agg
     first = grams.groupBy("gram").agg(F.min("doc_id").alias("first_doc"))
     return (
         grams.join(first, "gram")

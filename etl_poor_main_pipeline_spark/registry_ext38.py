@@ -24,6 +24,7 @@ from pyspark.sql.window import Window
 from .operators.dedup import spread
 from .registry import QuerySpec, _t
 from .registry_ext18 import _BM25_QUERY_TERMS, _ORACLE_BM25, q_bm25_topk
+from .session import barrier
 
 # --------------------------------------------------------------------------
 # Retrieval evaluation: MRR / P@10 / NDCG@10 (X6 eval [EXT])
@@ -41,7 +42,7 @@ def q_retrieval_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor. Eval-tier sibling of lsh_recall_audit."""
     d = _t(spark, sf_dir, "documents")
     ranked = q_bm25_topk(spark, sf_dir).select("doc_id", "score_micro")
-    ranked = ranked.localCheckpoint(eager=False)  # tiny; feeds 2 join sides
+    ranked = barrier(ranked)  # tiny; feeds 2 join sides
     a = ranked.select(
         F.col("doc_id").alias("a_id"), F.col("score_micro").alias("a_s")
     )

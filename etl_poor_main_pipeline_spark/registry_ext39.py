@@ -22,6 +22,7 @@ from pyspark.sql.window import Window
 from .operators import dedup
 from .registry import QuerySpec, _t
 from .registry_ext19 import _EDGE_SQL
+from .session import barrier
 
 # --------------------------------------------------------------------------
 # BFS reachability hops (X9 [EXT])
@@ -45,10 +46,9 @@ def q_bfs_reachability_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dedup.jaccard_token_sets(
         d, threshold=0.8, block_cols=["lang"], length_window=16
     ).select("id_a", "id_b")
-    edges = (
+    edges = barrier(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionAll(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .localCheckpoint(eager=False)
     )
     assigned = d.select("doc_id").where(
         F.col("doc_id") % _BFS_SEED_MOD == 0
@@ -67,8 +67,8 @@ def q_bfs_reachability_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # lazy: the per-hop materialization jobs fold into the final
         # action (pagerank-family job-fold, round 14)
-        new = new.localCheckpoint(eager=False)
-        assigned = assigned.unionAll(new).localCheckpoint(eager=False)
+        new = barrier(new)
+        assigned = barrier(assigned.unionAll(new))
         frontier = new
     total = d.agg(F.count(F.lit(1)).alias("n_total"))
     per_hop = assigned.groupBy("hop").agg(

@@ -21,6 +21,7 @@ from pyspark.sql.window import Window
 
 from .operators.scan_prefix import global_rank_zero
 from .registry import QuerySpec, _t
+from .session import barrier
 
 # --------------------------------------------------------------------------
 # Bitmap distinct rollup day -> week (agg [EXT])
@@ -82,7 +83,7 @@ def q_theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
     )
     w = Window.partitionBy("event_type").orderBy("t_us", "event_id")
-    ranked = e.withColumn("rn", F.row_number().over(w)).localCheckpoint(eager=False)
+    ranked = barrier(e.withColumn("rn", F.row_number().over(w)))
     lags = ranked.select(
         "event_type",
         "rn",

@@ -37,6 +37,7 @@ from pyspark.sql.window import Window
 from .operators import similarity
 from .operators.dedup import spread
 from .registry import QuerySpec, _t
+from .session import barrier
 
 # one fold pass: cosine(a, b) for two array<double> columns, micro-int
 _COS_MICRO = (
@@ -283,9 +284,9 @@ def q_int8_topk_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"  acc -> acc.d / (sqrt(acc.n) * {qnorm!r})"
         f") + 0.5) as bigint)"
     )
-    scored = corpus.selectExpr(
+    scored = barrier(corpus.selectExpr(
         "vec_id", f"{idot} as idot", f"{fcos} as f_micro"
-    ).localCheckpoint(eager=False)
+    ))
     top_q = scored.orderBy(F.desc("idot"), F.asc("vec_id")).limit(_INT8_K)
     top_f = scored.orderBy(F.desc("f_micro"), F.asc("vec_id")).limit(_INT8_K)
     overlap = top_q.join(top_f.select("vec_id"), "vec_id").agg(

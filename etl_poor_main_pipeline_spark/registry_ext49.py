@@ -30,6 +30,7 @@ from pyspark.sql.window import Window
 
 from .functions.text import tokens_expr
 from .registry import QuerySpec, _t
+from .session import barrier
 
 # --------------------------------------------------------------------------
 # TextRank keywords (X6/X9 [EXT])
@@ -67,10 +68,8 @@ def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("w1").alias("src"), F.col("w2").alias("dst"), "w"
     ).unionAll(ew.select(F.col("w2").alias("src"), F.col("w1").alias("dst"), "w"))
     wdeg = edges.groupBy("src").agg(F.sum("w").cast("double").alias("wdeg"))
-    edges_deg = edges.join(wdeg, "src").localCheckpoint(eager=False)
-    nodes = edges_deg.select(F.col("src").alias("word")).distinct().localCheckpoint(
-        eager=False
-    )
+    edges_deg = barrier(edges.join(wdeg, "src"))
+    nodes = barrier(edges_deg.select(F.col("src").alias("word")).distinct())
 
     n = nodes.count()  # one scalar — the teleport term needs it
     base = (1.0 - _TR_DAMP) / float(n)
@@ -87,7 +86,7 @@ def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("dst")
             .agg(F.sum("c").cast("double").alias("s"))
         )
-        ranks = (
+        ranks = barrier(
             nodes.join(contribs, nodes.word == contribs.dst, "left")
             .select(
                 "word",
@@ -95,7 +94,6 @@ def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.lit(base) + F.lit(_TR_DAMP) * F.coalesce(F.col("s"), F.lit(0.0))
                 ).alias("rank"),
             )
-            .localCheckpoint(eager=False)
         )
     return (
         ranks.select(

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from .functions.text import tokens_expr
 from .operators import similarity
 from .registry import QuerySpec, _t
+from .session import barrier
 
 # --------------------------------------------------------------------------
 # Reciprocal-rank fusion hybrid retrieval (X3/X6 [EXT])
@@ -237,7 +238,7 @@ def q_token_pmi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (w1, w2) tie-breaks."""
     d = _t(spark, sf_dir, "documents")
     ts = F.filter(tokens_expr("text"), lambda t: F.length(t) >= _PMI_MINLEN)
-    seq = d.select(ts.alias("ts")).where(F.size("ts") >= 2).localCheckpoint(eager=False)
+    seq = barrier(d.select(ts.alias("ts")).where(F.size("ts") >= 2))
     uni = (
         seq.select(F.explode("ts").alias("w"))
         .groupBy("w")

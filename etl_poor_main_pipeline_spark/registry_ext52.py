@@ -28,6 +28,7 @@ from pyspark.sql.window import Window
 
 from .operators import dedup
 from .registry import QuerySpec, _t
+from .session import barrier
 
 # --------------------------------------------------------------------------
 # Late-data audit (X7/X10 [EXT])
@@ -116,9 +117,9 @@ def q_partition_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     two exact-int divisions and lands on a nano-int before summation.
     Reports per source: internal edges, total degree, and the term."""
     d = _t(spark, sf_dir, "documents")
-    pairs = dedup.jaccard_token_sets(
+    pairs = barrier(dedup.jaccard_token_sets(
         d, threshold=0.8, block_cols=["lang"], length_window=16
-    ).select("id_a", "id_b").localCheckpoint(eager=False)
+    ).select("id_a", "id_b"))
     src_of = d.select("doc_id", "source")
     lab = (
         pairs.join(src_of.select(F.col("doc_id").alias("id_a"), F.col("source").alias("s_a")), "id_a")

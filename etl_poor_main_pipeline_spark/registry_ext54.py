@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .registry import QuerySpec, _t
+from .session import barrier
 from .sources.read import hour_of_day
 
 # --------------------------------------------------------------------------
@@ -58,7 +59,7 @@ def q_crosscorr_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     spine = bounds.selectExpr("explode(sequence(h0, h1)) as h")
     ca = counts.where(F.col("event_type") == _XC_A).select("h", F.col("c").alias("ca"))
     cb = counts.where(F.col("event_type") == _XC_B).select("h", F.col("c").alias("cb"))
-    grid = (
+    grid = barrier(
         spine.join(ca, "h", "left")
         .join(cb, "h", "left")
         .select(
@@ -66,7 +67,6 @@ def q_crosscorr_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("ca", F.lit(0)).alias("x"),
             F.coalesce("cb", F.lit(0)).alias("y"),
         )
-        .localCheckpoint(eager=False)
     )
     lags = spark.range(1).selectExpr(
         f"explode(array({', '.join(str(x) for x in _XC_LAGS)})) as lag"

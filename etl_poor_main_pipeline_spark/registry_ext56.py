@@ -29,6 +29,7 @@ from pyspark.sql.window import Window
 from .functions.text import tokens_expr
 from .operators.dedup import spread
 from .registry import QuerySpec, _t
+from .session import barrier
 
 # --------------------------------------------------------------------------
 # Containment dedup pairs (X2 [EXT])
@@ -59,7 +60,7 @@ def q_containment_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the probe side evaluates millions of per-pair conditions; a one-split
     # parquet scan would serialize that on one core (spread() is a no-op at
     # scale, where the scan already fans out — operators.dedup.spread)
-    toks = (
+    toks = barrier(
         spread(d).select(
             "doc_id",
             "lang",
@@ -83,7 +84,6 @@ def q_containment_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " (acc, h) -> acc | shiftleft(1L, cast(pmod(h, 64) as int)))"
             ),
         )
-        .localCheckpoint(eager=False)
     )
     a = toks.selectExpr(
         "doc_id as id_small",

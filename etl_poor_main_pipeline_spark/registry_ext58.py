@@ -62,7 +62,8 @@ def q_fk_conformance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             c.join(p, "k", "left")
             .agg(
                 F.count(F.lit(1)).cast("bigint").alias("n_child"),
-                F.sum(F.when(F.col("_hit").isNull(), 1).otherwise(0))
+                # count, not sum: a sum over an empty child is NULL
+                F.count(F.when(F.col("_hit").isNull(), 1))
                 .cast("bigint")
                 .alias("n_orphans"),
             )

@@ -30,6 +30,7 @@ from pyspark.sql.window import Window
 from .functions.text import tokens_expr
 from .operators.scan_prefix import global_rank_zero
 from .registry import QuerySpec, _t
+from .session import barrier
 
 # --------------------------------------------------------------------------
 # Sorted-neighborhood blocking (X2 [EXT])
@@ -60,9 +61,7 @@ def q_sorted_neighborhood_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("hs"),
     )
     n_parts = max(int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 1)
-    ranked = global_rank_zero(keyed, ["sk", "doc_id"], n_parts, out="r0").localCheckpoint(
-        eager=False
-    )
+    ranked = barrier(global_rank_zero(keyed, ["sk", "doc_id"], n_parts, out="r0"))
     offs = spark.range(1, _SNM_WINDOW).selectExpr("id as off")
     a = ranked.select(
         F.col("doc_id").alias("id_a"), F.col("hs").alias("hs_a"), F.col("r0")

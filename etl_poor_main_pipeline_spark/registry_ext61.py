@@ -182,6 +182,7 @@ def q_filter_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 from .functions.text import LANG_MARKERS, PUNCT_CLASS  # noqa: E402
+from .session import barrier
 
 _EN_SQL = ", ".join(f"'{m}'" for m in LANG_MARKERS["en"])
 _ORACLE_SWEEP = f"""
@@ -227,13 +228,13 @@ def q_threshold_sensitivity_curve(spark: SparkSession, sf_dir: str) -> DataFrame
     production threshold, the sensitivity curve that picks tau
     without re-running the pipeline per value."""
     d = _t(spark, sf_dir, "documents")
-    pairs = dedup.jaccard_token_sets(
+    pairs = barrier(dedup.jaccard_token_sets(
         d, threshold=0.7, block_cols=["lang"], length_window=16
     ).select(
         "id_a",
         "id_b",
         F.floor(F.lit(1e6) * F.col("jaccard") + F.lit(0.5)).cast("bigint").alias("jm"),
-    ).localCheckpoint(eager=False)
+    ))
     ths = ", ".join(str(t) for t in _SENS_BANDS)
     swept = pairs.selectExpr("id_a", "id_b", "jm", f"explode(array({ths})) as tau")
     kept = swept.where(F.col("jm") >= F.col("tau"))

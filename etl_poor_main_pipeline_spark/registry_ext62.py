@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 # --------------------------------------------------------------------------
 # Deterministic RANSAC line fit (X7 [EXT])
@@ -46,12 +47,12 @@ def q_ransac_line_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     CDF; candidate lines broadcast onto one scoring scan — robust
     fitting as a single aggregate, immune to the outliers that wreck
     least squares."""
-    e = _t(spark, sf_dir, "events").select(
+    e = barrier(_t(spark, sf_dir, "events").select(
         "event_type",
         (F.unix_micros("ts") / F.lit(1_000_000)).cast("bigint").alias("x"),
         F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5)).cast("bigint").alias("y"),
         "event_id",
-    ).localCheckpoint(eager=False)
+    ))
     # decile anchors: value at rank ceil(d*n/10) in (x, event_id) order,
     # via the domain-binned CDF over x (seconds are near-unique; bins =
     # distinct x values, domain-bounded by the time range)

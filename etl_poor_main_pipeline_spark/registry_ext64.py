@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from .operators.scan_prefix import global_rank_zero
 from .registry import QuerySpec, _t
+from .session import barrier
 
 # --------------------------------------------------------------------------
 # LATERAL correlated top-N (completion tier)
@@ -177,7 +178,7 @@ def q_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5)).cast("bigint").alias("v"),
     )
     t_end = e.agg(F.max("t_us").alias("t_max"))
-    per_user = (
+    per_user = barrier(
         e.groupBy("user_id")
         .agg(
             F.max("t_us").alias("t_last"),
@@ -195,7 +196,6 @@ def q_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
             "freq",
             "money",
         )
-        .localCheckpoint(eager=False)
     )
     n_users = per_user.agg(F.count(F.lit(1)).alias("n"))
     n_parts = max(int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 1)

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from .functions.text import tokens_expr
 from .operators import dedup
 from .registry import QuerySpec, _t
+from .session import barrier
 
 # --------------------------------------------------------------------------
 # Corpus-driven stopword discovery (X6 [EXT])
@@ -197,10 +198,9 @@ def q_local_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-int ratio folded into 10 fixed buckets (+ bucket -1 for
     degree < 2 nodes)."""
     d = _t(spark, sf_dir, "documents")
-    pairs = (
+    pairs = barrier(
         dedup.jaccard_token_sets(d, threshold=0.8, block_cols=["lang"], length_window=16)
         .select("id_a", "id_b")
-        .localCheckpoint(eager=False)
     )
     e1 = pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
     e2 = pairs.select(F.col("id_a").alias("b"), F.col("id_b").alias("c"))

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from .operators import dedup
 from .registry import QuerySpec, _t
+from .session import barrier
 
 # --------------------------------------------------------------------------
 # Gini coefficient of order fanout (X7 [EXT])
@@ -174,9 +175,9 @@ def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     both edge ends; the correlation keeps exact-int numerators in
     decimal(38,0) and pays one sqrt at the end."""
     d = _t(spark, sf_dir, "documents")
-    pairs = dedup.jaccard_token_sets(
+    pairs = barrier(dedup.jaccard_token_sets(
         d, threshold=0.8, block_cols=["lang"], length_window=16
-    ).select("id_a", "id_b").localCheckpoint(eager=False)
+    ).select("id_a", "id_b"))
     edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")).unionAll(
         pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
     )

@@ -30,6 +30,7 @@ from pyspark.sql.window import Window
 from .functions.text import tokens_expr
 from .operators import dedup, similarity
 from .registry import QuerySpec, _t
+from .session import barrier
 
 # --------------------------------------------------------------------------
 # MMR diversified re-ranking (X3 [EXT])
@@ -75,12 +76,11 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"  acc -> acc.d / (sqrt(acc.n) * {qnorm!r})"
         f") + 0.5) as bigint)"
     )
-    short = (
+    short = barrier(
         e.where(F.col("vec_id") != 0)
         .selectExpr("vec_id", "embedding", f"{rel_expr} as rel")
         .orderBy(F.desc("rel"), F.asc("vec_id"))
         .limit(_MMR_SHORTLIST)
-        .localCheckpoint(eager=False)
     )
     a = short.select(
         F.col("vec_id").alias("ia"), F.col("embedding").alias("ea")

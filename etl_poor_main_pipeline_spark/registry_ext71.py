@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 # --------------------------------------------------------------------------
 # Rolling OLS slope over daily totals (X7/X9 [EXT])
@@ -134,7 +135,9 @@ def q_kendall_tau_rankings(spark: SparkSession, sf_dir: str) -> DataFrame:
     r1-r5 graded-green history row. Concordant / discordant / tie
     counts are exact bigints from the blocked self-join; tau-b folds
     in double from those identical ints."""
-    d = (
+    # eager=False: constructing this frame (plan guards, explain audits)
+    # must not trigger a Spark job; materializes on first action
+    d = barrier(
         _t(spark, sf_dir, "documents")
         .withColumn("mk", F.md5(F.col("doc_id").cast("string")))
         .orderBy("mk")
@@ -147,9 +150,6 @@ def q_kendall_tau_rankings(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "sy"
             ),
         )
-        # eager=False: constructing this frame (plan guards, explain audits)
-        # must not trigger a Spark job; materializes on first action
-        .localCheckpoint(eager=False)
     )
     a = d.alias("a")
     b = d.alias("b")

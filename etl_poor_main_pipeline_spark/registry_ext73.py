@@ -4,7 +4,7 @@ label propagation, and skip-gram co-occurrence PMI.
 
 Scale stances:
 - Personalized PageRank: the pagerank_docs engine shape (edges
-  materialized ONCE via localCheckpoint / reliable checkpoint,
+  materialized ONCE via ``session.barrier``,
   decimal-deterministic contribution sums, per-round lineage
   truncation) with the teleport vector concentrated on the seed set
   — the "related items for THIS document" serving primitive.
@@ -30,6 +30,7 @@ from pyspark.sql.window import Window
 from .operators import dedup
 from .registry import QuerySpec, _t
 from .registry_ext19 import _EDGE_SQL
+from .session import barrier
 
 # --------------------------------------------------------------------------
 # Personalized PageRank / random walk with restart (X9 [EXT])
@@ -40,39 +41,27 @@ _PPR_DAMP = 0.85
 _PPR_SEED_MOD = 10  # doc_id % 10 == 0 -> seed set
 
 
-def q_personalized_pagerank(
-    spark: SparkSession, sf_dir: str, checkpoint_dir: str | None = None
-) -> DataFrame:
+def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[EXT] X9 personalized PageRank (random walk with restart,
     damping {d}, {k} iterations) over the document near-dup graph
     (pagerank_docs edges: token-set Jaccard >= 0.8): the teleport
     mass goes ONLY to the seed set (doc_id % {m} == 0), so rank
     measures proximity to the seeds — the "related to this cluster"
     serving primitive. Engine shape is the pagerank_docs one: edges
-    materialized once (localCheckpoint, or a reliable checkpoint dir
-    at scale), decimal(38,16) contribution sums, per-round lineage
-    truncation. Non-seed nodes with no path from the seeds report
-    exactly 0."""
-    if checkpoint_dir is not None:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    def _ckpt(df: DataFrame) -> DataFrame:
-        # lazy local checkpoint: per-round materialization folds into the
-        # final action (pagerank-family job-fold, round 14)
-        if checkpoint_dir is not None:
-            return df.checkpoint()
-        return df.localCheckpoint(eager=False)
-
+    materialized once, decimal(38,16) contribution sums, per-round
+    lineage truncation — all through ``session.barrier``, which a
+    configured ``spark.checkpoint.dir`` turns reliable. Non-seed nodes
+    with no path from the seeds report exactly 0."""
     d = _t(spark, sf_dir, "documents")
     pairs = dedup.jaccard_token_sets(
         d, threshold=0.8, block_cols=["lang"], length_window=16
     ).select("id_a", "id_b")
-    edges = _ckpt(
+    edges = barrier(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionAll(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
     )
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).cast("double").alias("deg"))
-    edges_deg = _ckpt(edges.join(deg, "src"))
+    edges_deg = barrier(edges.join(deg, "src"))
 
     n_seeds = d.where(F.col("doc_id") % _PPR_SEED_MOD == 0).count()
     restart = (1.0 - _PPR_DAMP) / float(n_seeds)
@@ -102,7 +91,7 @@ def q_personalized_pagerank(
                 ).alias("rank"),
             )
         )
-        ranks = _ckpt(ranks)
+        ranks = barrier(ranks)
     return ranks.select(
         "doc_id",
         F.floor(F.col("rank") * 1e9 + F.lit(0.5)).cast("bigint").alias("rank_nano"),
@@ -166,33 +155,22 @@ _LP_ITERS = 3
 _LP_SEED_MOD = 5  # doc_id % 5 == 0 -> seed (label = source)
 
 
-def q_label_propagation(
-    spark: SparkSession, sf_dir: str, checkpoint_dir: str | None = None
-) -> DataFrame:
+def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[EXT] X9 semi-supervised label propagation over the near-dup
     graph: seed docs (doc_id % {m} == 0) are labeled with their
     ``source``; each synchronous round, every unlabeled node adopts
     the MAJORITY label among its labeled neighbors (count desc, label
     asc tie-break); seeds are clamped. {k} rounds. Each round is one
     edge join + one node-partitioned rank window — |E| work per
-    round, fixed round count, lineage truncated per round. Reports
-    each node's final label (NULL if never reached) and the round it
-    was first labeled."""
-    if checkpoint_dir is not None:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    def _ckpt(df: DataFrame) -> DataFrame:
-        # lazy local checkpoint: per-round materialization folds into the
-        # final action (pagerank-family job-fold, round 14)
-        if checkpoint_dir is not None:
-            return df.checkpoint()
-        return df.localCheckpoint(eager=False)
-
+    round, fixed round count, lineage truncated per round by
+    ``session.barrier`` (reliable once ``spark.checkpoint.dir`` is
+    configured). Reports each node's final label (NULL if never
+    reached) and the round it was first labeled."""
     d = _t(spark, sf_dir, "documents")
     pairs = dedup.jaccard_token_sets(
         d, threshold=0.8, block_cols=["lang"], length_window=16
     ).select("id_a", "id_b")
-    edges = _ckpt(
+    edges = barrier(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionAll(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
     )
@@ -230,7 +208,7 @@ def q_label_propagation(
                 ).alias("round_labeled"),
             )
         )
-        labeled = _ckpt(labeled)
+        labeled = barrier(labeled)
     return labeled.orderBy("doc_id")
 
 

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 # --------------------------------------------------------------------------
 # Grid-DBSCAN clustering (X3 [EXT])
@@ -84,10 +85,10 @@ def q_dbscan_grid_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("cx", "cy")
             .agg(F.min("nlbl").alias("minn"))
         )
-        labels = (
+        labels = barrier(
             labels.join(neigh, ["cx", "cy"], "left")
-            .selectExpr("cx", "cy", "least(lbl, coalesce(minn, lbl)) as lbl")
-            .localCheckpoint()
+            .selectExpr("cx", "cy", "least(lbl, coalesce(minn, lbl)) as lbl"),
+            eager=True,
         )
     return (
         pts.join(labels.selectExpr("cx", "cy", "lbl as cluster"), ["cx", "cy"], "left")

@@ -25,6 +25,7 @@ from pyspark.sql.window import Window
 
 from .operators.dedup import spread
 from .registry import QuerySpec, _t
+from .session import barrier
 
 # --------------------------------------------------------------------------
 # Fellegi-Sunter probabilistic record linkage (X9 [EXT])
@@ -79,7 +80,7 @@ def q_fellegi_sunter_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cast(coalesce(a_seg = b_seg, false) as boolean) AS ag_seg",
         "cast(a_name = b_name as boolean) AS ag_name",
     )
-    pat = (
+    pat = barrier(  # feeds the decision rows AND m/u
         pairs.groupBy("ag_bal", "ag_seg", "ag_name")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
@@ -87,7 +88,6 @@ def q_fellegi_sunter_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("n_true"),
         )
-        .localCheckpoint(eager=False)  # feeds the decision rows AND m/u
     )
     # comparator m/u over the full candidate population: EXACT sums over
     # the <=8-row pattern table (every pair lands in exactly one pattern
@@ -213,13 +213,12 @@ def q_itemcf_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     its top-{k} neighbors (min co-occurrence {m}, cosine micro,
     neighbor-id tie-break) via an item-PARTITIONED window. The
     classic "customers also bought" batch job."""
-    li = (
+    # three consumers (item counts + both self-join sides): checkpoint
+    # so the distinct shuffle runs once, not three times
+    li = barrier(
         _t(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
-        # three consumers (item counts + both self-join sides): checkpoint
-        # so the distinct shuffle runs once, not three times
-        .localCheckpoint(eager=False)
     )
     item_n = li.groupBy("l_partkey").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_orders")

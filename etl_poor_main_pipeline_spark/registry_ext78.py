@@ -31,6 +31,7 @@ from pyspark.sql.window import Window
 
 from .operators.dedup import spread
 from .registry import QuerySpec, _t
+from .session import barrier
 
 # --------------------------------------------------------------------------
 # Perceptual-hash (aHash) near-dup banding (X5 [EXT])
@@ -86,11 +87,14 @@ def q_phash_grid_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     lo, hi = _ph_words("px", "spark")
-    hashed = d.selectExpr(
-        "doc_id",
-        f"cast({lo} as bigint) as w_lo",
-        f"cast({hi} as bigint) as w_hi",
-    ).localCheckpoint()
+    hashed = barrier(
+        d.selectExpr(
+            "doc_id",
+            f"cast({lo} as bigint) as w_lo",
+            f"cast({hi} as bigint) as w_hi",
+        ),
+        eager=True,
+    )
     band_expr = (
         f"explode(transform(sequence(0, {_PH_BANDS - 1}), b -> named_struct("
         "'band', b, "

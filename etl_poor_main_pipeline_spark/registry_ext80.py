@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _TOKCOUNT = "cast(size(filter(split(lower(text), '\\\\s+'), t -> t <> '')) as bigint)"
 _TOKCOUNT_DUCK = (
@@ -58,15 +59,14 @@ def _concordance_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket by the sign pattern of (dx, dy). The triangular condition
     (sx, sy) < (sx', sy') lexicographic counts each unordered cell pair
     once."""
-    cells = (
+    # the cell frame feeds three consumers (same-cell aggregate + both
+    # triangular sides); it is domain-bounded, so materializing it once
+    # is O(|X|*|Y|) at ANY corpus size — the corpus itself is scanned
+    # exactly once
+    cells = barrier(
         _doc_values(spark, sf_dir)
         .groupBy("lang", "sx", "sy")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-        # the cell frame feeds three consumers (same-cell aggregate + both
-        # triangular sides); it is domain-bounded, so materializing it once
-        # is O(|X|*|Y|) at ANY corpus size — the corpus itself is scanned
-        # exactly once
-        .localCheckpoint(eager=False)
     )
     same = cells.groupBy("lang").agg(
         F.sum("cnt").cast("bigint").alias("n_docs"),

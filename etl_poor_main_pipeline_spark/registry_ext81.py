@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 # --------------------------------------------------------------------------
 # Markov removal-effect attribution (X9 [EXT])
@@ -350,7 +351,7 @@ def q_platt_calibration_newton(spark: SparkSession, sf_dir: str) -> DataFrame:
         " / 1e6 as x",
         "CASE WHEN event_type = 'purchase' THEN 1.0 ELSE 0.0 END as y",
     )
-    e = e.localCheckpoint(eager=False)  # K+1 passes over a projected fact frame
+    e = barrier(e)  # K+1 passes over a projected fact frame
     params = e.sparkSession.range(1).selectExpr("0.0 as a", "0.0 as b")
     for _ in range(_PLATT_ITERS):
         agg = (

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from .operators.dedup import spread
 from .registry import QuerySpec, _t
+from .session import barrier
 
 # --------------------------------------------------------------------------
 # Isotonic calibration via the minimax closed form (X7 [EXT])
@@ -56,7 +57,7 @@ def q_isotonic_calibration_pava(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("y").cast("bigint").alias("s"),
     )
-    bins = (
+    bins = barrier(  # B rows; feeds the interval spine twice
         spark.range(_ISO_BINS)
         .selectExpr("cast(id as bigint) as pbin")
         .join(binned, "pbin", "left")
@@ -65,7 +66,6 @@ def q_isotonic_calibration_pava(spark: SparkSession, sf_dir: str) -> DataFrame:
             "coalesce(n, cast(0 as bigint)) as n",
             "coalesce(s, cast(0 as bigint)) as s",
         )
-        .localCheckpoint(eager=False)  # B rows; feeds the interval spine twice
     )
     k = spark.range(_ISO_BINS).selectExpr("cast(id as bigint) as k")
     j = spark.range(_ISO_BINS).selectExpr("cast(id as bigint) as j")
@@ -182,7 +182,7 @@ def q_permutation_test_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CASE WHEN substring(md5(concat(cast(user_id as string), ':',"
         " cast(perm as string))), 1, 1) < '8' THEN 1 ELSE 0 END as arm",
     )
-    per_perm = (
+    per_perm = barrier(  # P+1 rows; observed + null both read it
         exploded.groupBy("perm")
         .agg(
             F.sum(F.when(F.col("arm") == 1, F.col("vm")).otherwise(0))
@@ -199,7 +199,6 @@ def q_permutation_test_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cast(floor(cast(s1 as double) / cast(n1 as double)"
             " - cast(s0 as double) / cast(n0 as double) + 0.5) as bigint) as diff_micro",
         )
-        .localCheckpoint(eager=False)  # P+1 rows; observed + null both read it
     )
     # limit(1) is a no-op (perm 0 is unique) that keeps the 1-row bound
     # visible to the nested-loop plan guard through the lazy checkpoint

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 # --------------------------------------------------------------------------
 # Referential-integrity audit (X7 [EXT], §2.6 join family)
@@ -128,10 +129,9 @@ def q_seasonal_naive_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
         "unix_micros(ts) div 3600000000 as h",
         "cast(floor(1e6 * value + 0.5) as bigint) as vm",
     )
-    hourly = (
+    hourly = barrier(  # three equi self-joins read it
         e.groupBy("event_type", "h")
         .agg(F.sum("vm").cast("bigint").alias("v"))
-        .localCheckpoint(eager=False)  # three equi self-joins read it
     )
     lag_s = hourly.selectExpr(
         "event_type", f"h + {_MASE_SEASON} as h", "v as v_season"

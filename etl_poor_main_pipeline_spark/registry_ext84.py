@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from .operators.dedup import spread
 from .operators.scan_prefix import global_rank_zero
 from .registry import QuerySpec, _t
+from .session import barrier
 
 # --------------------------------------------------------------------------
 # Poisson-bootstrap confidence intervals (X7 [EXT])
@@ -176,7 +177,7 @@ def q_trimmed_mean_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_parts = max(int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 1)
     ranked = global_rank_zero(e, ["vm", "event_id"], n_parts, out="r0")
-    ranked = ranked.localCheckpoint(eager=False)  # feeds totals + 3 reads
+    ranked = barrier(ranked)  # feeds totals + 3 reads
     tot = ranked.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     bounds = tot.selectExpr(
         "n",

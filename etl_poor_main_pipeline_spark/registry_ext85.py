@@ -28,6 +28,7 @@ from pyspark.sql.window import Window
 
 from .registry import QuerySpec, _t
 from .registry_ext82 import _WIN_K, _WIN_W, win_minima
+from .session import barrier
 
 # --------------------------------------------------------------------------
 # Winnowing candidate pairs (X2 [EXT])
@@ -47,11 +48,10 @@ def q_winnowing_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint, the same skew cap the MinHash LSH path uses. The join
     is equi on the fingerprint (blocked; never all-pairs), and the
     final cut is a TakeOrderedAndProject."""
-    d = (
+    d = barrier(  # feeds the bucket-size filter + join
         win_minima(spark, sf_dir)
         .select("doc_id", "fp")
         .distinct()
-        .localCheckpoint(eager=False)  # feeds the bucket-size filter + join
     )
     keep = (
         d.groupBy("fp")

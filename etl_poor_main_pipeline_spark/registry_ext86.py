@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .registry import QuerySpec, _t
+from .session import barrier
 from .streaming.events import drain_to_table, read_event_stream_parquet
 
 # --------------------------------------------------------------------------
@@ -112,13 +113,12 @@ def q_rake_keyword_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     seg = "concat(' ', lower(text), ' ')"
     for _ in range(3):
         seg = f"regexp_replace({seg}, ' ({sw}) ', ' | ')"
-    phrases = (
+    phrases = barrier(  # feeds word stats + phrase scoring
         _t(spark, sf_dir, "documents")
         .selectExpr(f"explode(split({seg}, '\\\\|')) as rawp")
         .selectExpr("filter(split(trim(rawp), '\\\\s+'), t -> t <> '') as pw")
         .where(F.expr("size(pw) >= 1"))
         .selectExpr("pw", "size(pw) as plen", "concat_ws(' ', pw) as phrase")
-        .localCheckpoint(eager=False)  # feeds word stats + phrase scoring
     )
     words = phrases.selectExpr("explode(pw) as word", "plen")
     wstats = words.groupBy("word").agg(

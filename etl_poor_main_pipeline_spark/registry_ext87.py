@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from .operators.scan_prefix import global_rank_zero
 from .registry import QuerySpec, _t
+from .session import barrier
 
 # --------------------------------------------------------------------------
 # Exact skewness / kurtosis from mergeable power sums (X7 [EXT])
@@ -150,9 +151,7 @@ def q_gini_concentration_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("vm").cast("bigint").alias("x"))
     )
     n_parts = max(int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 1)
-    ranked = global_rank_zero(u, ["x", "user_id"], n_parts, out="r0").localCheckpoint(
-        eager=False
-    )
+    ranked = barrier(global_rank_zero(u, ["x", "user_id"], n_parts, out="r0"))
     dec = "decimal(38,0)"
     return (
         ranked.agg(

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 # --------------------------------------------------------------------------
 # Cross-source duplicate leakage (X1/X7 [EXT])
@@ -226,7 +227,7 @@ def q_bradley_terry_strengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     obs = e.groupBy("user_id", "day", "event_type").agg(F.max("vk").alias("vk"))
     a = obs.selectExpr("user_id", "day", "event_type as ia", "vk as va")
     b = obs.selectExpr("user_id", "day", "event_type as ib", "vk as vb")
-    games = (
+    games = barrier(
         a.join(b, ["user_id", "day"])
         .where(F.col("ia") < F.col("ib"))
         .where(F.col("va") != F.col("vb"))  # ties carry no BT information
@@ -237,7 +238,6 @@ def q_bradley_terry_strengths(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("wins_a"),
         )
-        .localCheckpoint(eager=False)
     )
     # symmetric per-item view: games and wins per (item, opponent)
     sym = games.selectExpr(

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from .operators.scan_prefix import global_rank_zero
 from .registry import QuerySpec, _t
+from .session import barrier
 
 # --------------------------------------------------------------------------
 # IPS / SNIPS counterfactual policy evaluation (X7 [EXT])
@@ -153,7 +154,7 @@ def q_runs_test_shuffle_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ranked_src.crossJoin(F.broadcast(n_src))
         .selectExpr("source", "CASE WHEN sr * 2 >= ns THEN 1 ELSE 0 END as b")
     )
-    seq = (
+    seq = barrier(
         global_rank_zero(
             d.join(F.broadcast(flag), "source").select("doc_id", "h", "b"),
             ["h", "doc_id"],
@@ -161,7 +162,6 @@ def q_runs_test_shuffle_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             out="r0",
         )
         .select("r0", "b")
-        .localCheckpoint(eager=False)
     )
     nxt = seq.selectExpr("r0 - 1 as r0", "b as b_next")
     runs = (
@@ -256,13 +256,12 @@ def q_markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    tr = (
+    tr = barrier(
         e.select("user_id", "event_id", "ts", F.col("event_type").alias("src"))
         .withColumn("dst", F.lead("src").over(w))
         .where(F.col("dst").isNotNull())
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        .localCheckpoint(eager=False)
     )
     # Round-14 shape: the transition matrix is |enum|^2-bounded (<= 25
     # cells), so after the one corpus pass the whole chain — row

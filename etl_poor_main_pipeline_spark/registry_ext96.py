@@ -39,6 +39,7 @@ from pyspark.sql.window import Window
 
 from .operators.dedup import POLY_P, minhash_coeffs
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _TOK = r"filter(split(lower(text), '\\s+'), t -> t <> '')"
 _DUCK_TOK = r"list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')"
@@ -77,7 +78,9 @@ def q_adamic_adar_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t(spark, sf_dir, "documents")
     toks = spread(d.select("doc_id", F.expr(_TOK).alias("ts")).where(F.size("ts") >= 3))
-    dt = (
+    # the tokenize+explode+distinct pipeline feeds df_t AND both self-join
+    # sides — materialize it once (lazy: building the frame costs no job)
+    dt = barrier(
         toks.select(
             "doc_id",
             F.expr(
@@ -87,9 +90,6 @@ def q_adamic_adar_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("t"),
         )
         .distinct()
-        # the tokenize+explode+distinct pipeline feeds df_t AND both self-join
-        # sides — materialize it once (lazy: building the frame costs no job)
-        .localCheckpoint(eager=False)
     )
     df_t = (
         dt.groupBy("t")
@@ -101,7 +101,7 @@ def q_adamic_adar_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(_case_table(_RA_TERMS, "df")).cast("bigint").alias("ra_w"),
         )
     )
-    rare = dt.join(df_t, "t").localCheckpoint(eager=False)
+    rare = barrier(dt.join(df_t, "t"))
     pairs = (
         rare.alias("a")
         .join(
@@ -181,10 +181,9 @@ def q_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("event_type").orderBy("h")
     # the k-bounded sketch frame feeds est, both pair-grid sides, and the
     # merged ranking — materialize once (lazy)
-    sk = (
+    sk = barrier(
         hs.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= _KSO_K)
-        .localCheckpoint(eager=False)
     )
     est = (
         sk.groupBy("event_type")

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _TOK = r"filter(split(lower(text), '\\s+'), t -> t <> '')"
 _DUCK_TOK = r"list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')"
@@ -119,20 +120,19 @@ def q_token_budget_apportion(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame. This is the allocator that turns mixing WEIGHTS into actual
     per-source token QUOTAS for a training run."""
     d = _t(spark, sf_dir, "documents")
-    tokc = (
+    # feeds the total, the quota frame, and the winner join
+    tokc = barrier(
         d.select("source", F.expr(f"size({_TOK})").cast("bigint").alias("nt"))
         .groupBy("source")
         .agg(F.sum("nt").cast("bigint").alias("n_tokens"))
-        # feeds the total, the quota frame, and the winner join
-        .localCheckpoint(eager=False)
     )
     tot = tokc.agg(F.sum("n_tokens").cast("bigint").alias("w_total"))
-    quo = tokc.crossJoin(F.broadcast(tot)).select(
+    quo = barrier(tokc.crossJoin(F.broadcast(tot)).select(
         "source",
         "n_tokens",
         F.expr(f"({_BUDGET_TOKENS} * n_tokens) div w_total").cast("bigint").alias("q"),
         F.expr(f"({_BUDGET_TOKENS} * n_tokens) % w_total").cast("bigint").alias("rem"),
-    ).localCheckpoint(eager=False)
+    ))
     # deficit seats: one scalar (< n_sources by construction); the winners
     # then come from a TakeOrderedAndProject — no global window anywhere
     deficit = int(
@@ -231,7 +231,7 @@ def q_domain_softmax_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("e_micro"),
         )
     )
-    z = z.localCheckpoint(eager=False)
+    z = barrier(z)
     esum = z.agg(F.sum("e_micro").cast("bigint").alias("e_sum"))
     return (
         z.crossJoin(F.broadcast(esum))
@@ -323,7 +323,7 @@ def q_woe_iv_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("neg", F.lit(0)).cast("bigint").alias("neg"),
         )
     )
-    grid = grid.localCheckpoint(eager=False)
+    grid = barrier(grid)
     tot = grid.agg(
         F.sum("pos").cast("bigint").alias("pos_all"),
         F.sum("neg").cast("bigint").alias("neg_all"),

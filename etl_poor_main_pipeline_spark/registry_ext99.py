@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .registry import QuerySpec, _t
+from .session import barrier
 
 _TOK = r"filter(split(lower(text), '\\s+'), t -> t <> '')"
 _DUCK_TOK = r"list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')"
@@ -55,10 +56,9 @@ def q_ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import spread
 
     d = _t(spark, sf_dir, "documents")
-    toks = (
+    toks = barrier(
         spread(d)
         .select("doc_id", "lang", F.explode(F.expr(_TOK)).alias("tok"))
-        .localCheckpoint(eager=False)
     )
     freq = toks.groupBy("tok").agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     tot = toks.agg(F.count(F.lit(1)).cast("bigint").alias("total"))
@@ -261,7 +261,7 @@ def q_acf_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
     sqrt/divide (deterministic across engines). Constant-series
     degeneracy (zero variance) maps to r = 0 in both engines."""
     e = _t(spark, sf_dir, "events")
-    daily = (
+    daily = barrier(
         e.select(
             "event_type",
             F.expr("unix_micros(ts) div 86400000000").alias("day"),
@@ -275,7 +275,6 @@ def q_acf_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("x")
         )
-        .localCheckpoint(eager=False)
     )
     # literal lag spine via explode — a plain projection, no join fan-in
     pairs = (

@@ -13,13 +13,14 @@ scale posture:
 
 ``tune_session`` applies the runtime-settable subset to an externally
 created session (the driver hands us one); ``get_spark`` builds a local one.
+``barrier`` is the one lineage-truncation primitive every query uses.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from .config import EngineConfig, load_config
 
@@ -92,3 +93,19 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     return tune_session(spark)
+
+
+def barrier(df: DataFrame, eager: bool = False) -> DataFrame:
+    """Truncate ``df``'s lineage — the engine's only checkpoint call.
+
+    Without a checkpoint directory this is ``df.localCheckpoint(eager)``:
+    cheap, but its blocks live on the executors, so losing one forces a
+    recompute of the upstream pipeline. When the deployment configures a
+    reliable directory (``spark.checkpoint.dir`` or
+    ``SparkContext.setCheckpointDir``) every barrier becomes
+    ``df.checkpoint()`` to that fault-tolerant storage instead. That path
+    is always eager: a lazy reliable checkpoint recomputes its lineage in
+    a second job when the first action materializes it."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is None:
+        return df.localCheckpoint(eager=eager)
+    return df.checkpoint()

@@ -77,10 +77,9 @@ def append_via_dbapi(
 
     Collects partition-at-a-time on the driver — acceptable for a serving
     load whose output is dashboard-sized (the reference loads 60 rows/day);
-    the JDBC writer below is the scale path.
+    the JDBC writer below is the scale path. The empty-input guard is the
+    caller's (``load_serving_table``); an empty frame inserts nothing.
     """
-    if df.isEmpty():
-        return 0
     cols = df.columns
     placeholders = ",".join([placeholder] * len(cols))
     sql = f"INSERT INTO {table} ({','.join(cols)}) VALUES ({placeholders})"

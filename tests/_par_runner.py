@@ -19,7 +19,11 @@ the same worker model in-repo with stdlib only:
   JSONL file; the parent tails those files live and replays each report
   through ``pytest_runtest_logreport`` — so the parent's progress dots,
   failure output, summary line and exit status are the REAL aggregated
-  results, not a wrapper's approximation.
+  results, not a wrapper's approximation;
+- after the final drain, every collected item must have been reported by
+  the worker it was assigned to: an unreported one is replayed as a
+  failure by name, so a worker that silently runs fewer tests fails the
+  run.
 
 Every test still runs on every invocation — nothing is skipped or marked
 out of the default lane. Set ``ETL_TEST_PAR=0`` to force the sequential
@@ -42,6 +46,8 @@ import tempfile
 import time
 from collections import defaultdict
 from pathlib import Path
+
+import pytest
 
 WORKER_ENV = "ETL_TEST_WORKER"
 REPORT_FILE_ENV = "ETL_TEST_REPORT_FILE"
@@ -127,9 +133,9 @@ class _Tail:
         self.fh.close()
 
 
-def _drain(tail: _Tail, config, session) -> int:
-    """Replay newly appended serialized reports; returns #reports seen."""
-    seen = 0
+def _drain(tail: _Tail, config, reported: set[str]) -> None:
+    """Replay newly appended serialized reports, adding each test
+    report's nodeid to ``reported``."""
     for line in tail.lines():
         try:
             data = json.loads(line)
@@ -142,8 +148,25 @@ def _drain(tail: _Tail, config, session) -> int:
             config.hook.pytest_collectreport(report=rep)
         else:
             config.hook.pytest_runtest_logreport(report=rep)
-        seen += 1
-    return seen
+            reported.add(rep.nodeid)
+
+
+def _fail_unreported(session, reported: set[str]) -> None:
+    """Every collected item was assigned to a worker (by its file); one
+    that no worker reported — e.g. the worker's own collection dropped
+    it — fails the run by name instead of silently shrinking the suite."""
+    for item in session.items:
+        if item.nodeid not in reported:
+            session.config.hook.pytest_runtest_logreport(
+                report=pytest.TestReport(
+                    item.nodeid,
+                    item.location,
+                    keywords={},
+                    outcome="failed",
+                    longrepr="assigned to a worker that never reported it",
+                    when="call",
+                )
+            )
 
 
 def run_parallel(session) -> bool:
@@ -164,6 +187,7 @@ def run_parallel(session) -> bool:
 
     procs: list[subprocess.Popen] = []
     readers = []
+    reported: set[str] = set()
     env_base = dict(os.environ)
     env_base[WORKER_ENV] = "1"
     env_base[SPARK_CORES_ENV] = str(WORKER_SPARK_CORES)
@@ -212,7 +236,7 @@ def run_parallel(session) -> bool:
         while True:
             alive = [p for p in procs if p.poll() is None]
             for t in readers:
-                _drain(t, config, session)
+                _drain(t, config, reported)
             if session.shouldfail or session.shouldstop:
                 # -x / --maxfail tripped by a replayed failure: stop the
                 # remaining workers, drain what they already reported
@@ -225,14 +249,14 @@ def run_parallel(session) -> bool:
                     except subprocess.TimeoutExpired:
                         p.kill()
                 for t in readers:
-                    _drain(t, config, session)
+                    _drain(t, config, reported)
                 break
             if not alive:
                 break
             time.sleep(0.3)
         # final drain after normal completion
         for t in readers:
-            _drain(t, config, session)
+            _drain(t, config, reported)
     finally:
         for t in readers:
             t.close()
@@ -259,6 +283,8 @@ def run_parallel(session) -> bool:
                 )
             session.testsfailed += 1
 
+    if not (session.shouldfail or session.shouldstop):
+        _fail_unreported(session, reported)
     if session.shouldfail:
         raise session.Failed(session.shouldfail)
     if session.shouldstop:

@@ -52,3 +52,20 @@ def test_readme_counts_match_registry():
     assert f"{n_q} registered queries" in readme, f"README must say '{n_q} registered queries'"
     assert f"all {n_o} with value-hash oracles" in readme
     assert f"{n_q}/{n_o} vs DuckDB oracle" in readme
+
+
+def test_query_order_is_pinned():
+    """queries() order is the contract's grading order (a budget-capped
+    grader walks it and stops early). The priority block leads, then the
+    wave modules in numeric order — registry discovery must not reorder
+    a single name. The digest is sha256 over the newline-joined names;
+    re-pin it only in a change that deliberately adds or moves a query."""
+    import hashlib
+
+    from etl_poor_main_pipeline_spark.registry import _SWEEP_PRIORITY
+
+    names = list(ent.queries())
+    assert len(names) == len(set(names)) == 702
+    assert names[: len(_SWEEP_PRIORITY)] == _SWEEP_PRIORITY
+    digest = hashlib.sha256("\n".join(names).encode()).hexdigest()
+    assert digest == "c23fc9211cc58d9ddba4bb600ce46fd542785625e624b6834543fca45abd8fb6"

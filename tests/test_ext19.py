@@ -25,20 +25,48 @@ def test_pagerank_conserves_and_ranks_hubs(spark):
 
 
 def test_pagerank_reliable_checkpoint_matches_local(spark, tmp_path):
-    """checkpoint_dir engages df.checkpoint() against fault-tolerant
-    storage (the 100 TB posture) and must be bit-identical to the
-    localCheckpoint default."""
+    """A deployment-configured ``spark.checkpoint.dir`` turns every
+    ``session.barrier`` into ``df.checkpoint()`` against fault-tolerant
+    storage (the 100 TB posture); ranks must be bit-identical to the
+    local-checkpoint default. The reliable side runs in its own
+    subprocess session: a checkpoint dir cannot be unset, so on the
+    shared session it would turn every later test's barriers reliable."""
+    import json
     import os
+    import subprocess
+    import sys
 
-    ckpt = str(tmp_path / "ckpt")
+    assert spark.sparkContext.getCheckpointDir() is None
     local = {r.doc_id: r.rank_nano for r in q_pagerank_docs(spark, SF).collect()}
-    reliable = {
-        r.doc_id: r.rank_nano
-        for r in q_pagerank_docs(spark, SF, checkpoint_dir=ckpt).collect()
-    }
+
+    ckpt = tmp_path / "ckpt"
+    script = f"""
+import json
+from etl_poor_main_pipeline_spark.registry_ext19 import q_pagerank_docs
+from etl_poor_main_pipeline_spark.session import get_spark
+
+spark = get_spark(
+    master="local[2]",
+    extra_confs={{"spark.checkpoint.dir": {str(ckpt)!r}}},
+)
+assert spark.sparkContext.getCheckpointDir() is not None
+rows = q_pagerank_docs(spark, {SF!r}).collect()
+print(json.dumps({{r.doc_id: r.rank_nano for r in rows}}))
+spark.stop()
+"""
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        env={**os.environ, "ENGINE_DRIVER_MEMORY": "2g"},
+        capture_output=True,
+        text=True,
+        timeout=600,
+        check=True,
+    ).stdout
+    reliable = {int(k): v for k, v in json.loads(out.splitlines()[-1]).items()}
     assert reliable == local
     # the reliable path actually wrote checkpoint data to the dir
-    assert any(os.scandir(ckpt))
+    assert any(p.is_file() for p in ckpt.rglob("*"))
 
 
 def test_zorder_morton_bit_exact(spark):

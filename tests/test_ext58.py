@@ -26,6 +26,26 @@ def test_fk_audit_covers_all_relationships(spark):
         assert 0 <= r.n_orphans <= r.n_child
 
 
+def test_fk_audit_empty_child_has_zero_orphans(spark, tmp_path):
+    """An empty child table has no orphans (0, not NULL) — the DuckDB
+    oracle's count(*) semantics."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    for t in {t for rel in _FK_RELS for t in (rel[0], rel[2])}:
+        src = f"{SF}/{t}.parquet"
+        if t == "lineitem":
+            pq.write_table(pq.read_table(src).slice(0, 0), tmp_path / f"{t}.parquet")
+        else:
+            os.symlink(src, tmp_path / f"{t}.parquet")
+    rows = q_fk_conformance_audit(spark, str(tmp_path)).collect()
+    empty = [r for r in rows if r.relationship.startswith("lineitem.")]
+    assert len(empty) == 3
+    assert all(r.n_child == 0 and r.n_orphans == 0 for r in empty)
+    assert all(r.n_orphans is not None for r in rows)
+
+
 def test_burstiness_in_valid_range(spark):
     rows = q_interarrival_burstiness(spark, SF).collect()
     assert len(rows) == 5
