@@ -330,6 +330,9 @@ def main() -> None:
                 "floor_sec": floor_sec,
                 "meta": (
                     "per-query wall (plan+execute+count) after JVM warm-up; "
+                    "pagerank_docs and dedup_minhash_lsh are measured warm "
+                    "(the warm-up runs each once at sf0.001 to pay its "
+                    "codegen compile); "
                     "size-derived execution posture (small: AQE off + "
                     "right-sized shuffle fan-out below 256MB corpus, minus "
                     "the measured AQE_KEEP_QUERIES opt-outs; medium: scan "

@@ -30,10 +30,15 @@ def run(
     single_file: bool = False,
 ) -> int:
     """Returns the number of rows written (0 when the empty guard fired)."""
-    df = ingest_batch(spark, keys, fetch_fn, date_id)
-    if "city" not in df.columns:  # every fetch failed -> raw-only empty frame
-        return 0
-    wrote = write_partition_overwrite(
-        df, BRONZE_TABLE, lake_root, schema=WORLD_WEATHER_SCHEMA, single_file=single_file
+    # the row count is observed during the write (as in silver), so the
+    # frame is never recounted; False is the writer's empty guard (it also
+    # covers a day on which every fetch failed)
+    metrics = write_partition_overwrite(
+        ingest_batch(spark, keys, fetch_fn, date_id),
+        BRONZE_TABLE,
+        lake_root,
+        schema=WORLD_WEATHER_SCHEMA,
+        single_file=single_file,
+        quality_cols=["temperature", "city"],
     )
-    return df.count() if wrote else 0
+    return int(metrics["n_rows"]) if metrics else 0

@@ -19,6 +19,7 @@ from ..operators.relational import union_all
 from ..sinks.jdbc import JdbcTarget, load_serving_table
 from ..sources.read import read_partition
 from ..table import TableRef
+from .schemas import SILVER_WEATHER_SCHEMA
 from .silver import silver_table
 
 GOLD_TABLE = "dashboard.north_america_weather"
@@ -32,11 +33,16 @@ def run(
     jdbc_url: str = "",
     table: str = GOLD_TABLE,
 ) -> int:
-    us = read_partition(spark, silver_table("US").path(lake_root), date_id)
-    ca = read_partition(spark, silver_table("CA").path(lake_root), date_id)
+    us, ca = (
+        read_partition(
+            spark, silver_table(c).path(lake_root), date_id, schema=SILVER_WEATHER_SCHEMA
+        )
+        for c in ("US", "CA")
+    )
     # W2 empty-day guard (ref dashboard__north_america_weather.py:75-77)
-    # lives in both sinks below: each is one isEmpty() job, so it is not
-    # repeated here
+    # lives in the sinks below, so it is not repeated here: the lake
+    # writer's and the JDBC writer's is an isEmpty() job, the DB-API
+    # sink's is its one collect
     combined = union_all(ca, us).withColumn("region", F.lit("North America"))
     if not jdbc_url and connect is None:
         # offline serving path: no JDBC target configured -> publish the

@@ -33,10 +33,7 @@ def run(
     single_file: bool = False,
 ) -> int:
     bronze = read_partition(
-        spark,
-        BRONZE_TABLE.path(lake_root),
-        date_id,
-        schema=None,  # partitioned parquet carries the written schema
+        spark, BRONZE_TABLE.path(lake_root), date_id, schema=WORLD_WEATHER_SCHEMA
     )
     out = (
         bronze.filter(F.col("country") == country)

@@ -202,12 +202,12 @@ FROM nation GROUP BY n_regionkey
 
 def q_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar subquery in a predicate: orders within 10% of the max price."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_v")
+    _t(spark, sf_dir, "orders").createOrReplaceTempView("subq_orders_v")
     return spark.sql(
         """
         SELECT o_orderkey, o_totalprice
-        FROM orders_v
-        WHERE o_totalprice >= 0.9 * (SELECT max(o_totalprice) FROM orders_v)
+        FROM subq_orders_v
+        WHERE o_totalprice >= 0.9 * (SELECT max(o_totalprice) FROM subq_orders_v)
         """
     )
 
@@ -222,14 +222,14 @@ WHERE o_totalprice >= 0.9 * (SELECT max(o_totalprice) FROM orders)
 def q_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CTE (WITH clause) through spark.sql: top-value customers joined
     back to their names."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_v")
+    _t(spark, sf_dir, "orders").createOrReplaceTempView("cte_orders_v")
     _t(spark, sf_dir, "customer").createOrReplaceTempView("customer_v")
     return spark.sql(
         f"""
         WITH cust_totals AS (
           SELECT o_custkey, {_dsum_sql('o_totalprice', 'total_spent')},
                  count(*) AS n_orders
-          FROM orders_v GROUP BY o_custkey
+          FROM cte_orders_v GROUP BY o_custkey
         )
         SELECT c_custkey, c_name, total_spent, n_orders
         FROM cust_totals JOIN customer_v ON o_custkey = c_custkey

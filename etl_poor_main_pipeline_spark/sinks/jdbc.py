@@ -23,10 +23,14 @@ from __future__ import annotations
 
 from collections.abc import Callable
 from dataclasses import dataclass
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 
 from ..operators.relational import truncate_str
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 
 @dataclass
@@ -66,7 +70,7 @@ def delete_partition_rows(
 
 
 def append_via_dbapi(
-    df: DataFrame,
+    data: pa.Table,
     connect: Callable,
     table: str,
     batch_size: int = 1000,
@@ -75,30 +79,23 @@ def append_via_dbapi(
     """Batched multi-row INSERT append through DB-API (the reference's
     ``method='multi'`` analogue) for environments without a JDBC jar.
 
-    Collects partition-at-a-time on the driver — acceptable for a serving
-    load whose output is dashboard-sized (the reference loads 60 rows/day);
-    the JDBC writer below is the scale path. The empty-input guard is the
-    caller's (``load_serving_table``); an empty frame inserts nothing.
+    ``data`` is the serving frame collected once as an Arrow table
+    (``df.toArrow()``, one Spark job); each ``batch_size``-row record
+    batch becomes one ``executemany``. A driver-side collect suits a
+    dashboard-sized serving load (the reference loads 60 rows/day); the
+    JDBC writer below is the scale path. The empty-input guard is the
+    caller's (``load_serving_table``); an empty table inserts nothing.
     """
-    cols = df.columns
+    cols = data.column_names
     placeholders = ",".join([placeholder] * len(cols))
     sql = f"INSERT INTO {table} ({','.join(cols)}) VALUES ({placeholders})"
     conn = connect()
     try:
         cur = conn.cursor()
-        n = 0
-        batch: list[tuple] = []
-        for row in df.toLocalIterator():
-            batch.append(tuple(row))
-            if len(batch) >= batch_size:
-                cur.executemany(sql, batch)
-                n += len(batch)
-                batch = []
-        if batch:
-            cur.executemany(sql, batch)
-            n += len(batch)
+        for batch in data.to_batches(max_chunksize=batch_size):
+            cur.executemany(sql, list(zip(*(c.to_pylist() for c in batch.columns))))
         conn.commit()
-        return n
+        return data.num_rows
     finally:
         conn.close()
 
@@ -155,23 +152,29 @@ def load_serving_table(
     partition_col: str = "date_id",
     placeholder: str = "?",
 ) -> int:
-    """W3 end-to-end: guard -> truncate date_id to 10 chars (P6, ref
-    utils/postgres_utils.py:23-24) -> pre-delete -> append.
+    """W3 end-to-end: truncate date_id to 10 chars (P6, ref
+    utils/postgres_utils.py:23-24) -> empty guard -> pre-delete -> append.
 
     With ``connect`` given, uses DB-API both for delete and append (test &
     no-jar path). Otherwise uses Spark's JDBC writer for the append — the
     parallel executor path for real Postgres.
     """
-    if df.isEmpty():  # W2 guard, ref utils/postgres_utils.py:16-18
-        return 0
     df = df.withColumn(partition_col, truncate_str(partition_col, 10))
     if connect is not None:
+        # one collect is the whole Spark side of the DB-API load; the W2
+        # guard (ref utils/postgres_utils.py:16-18) tests its row count
+        # before the DELETE, so an empty day touches nothing
+        data = df.toArrow()
+        if data.num_rows == 0:
+            return 0
         delete_partition_rows(
             connect, target.table, date_id, partition_col, placeholder
         )
         return append_via_dbapi(
-            df, connect, target.table, placeholder=placeholder
+            data, connect, target.table, placeholder=placeholder
         )
+    if df.isEmpty():  # W2 guard, ref utils/postgres_utils.py:16-18
+        return 0
     # JDBC path: pre-delete still needs a driver-side connection; use py4j
     # java.sql through the active JVM so no Python driver is required.
     _jdbc_delete_via_jvm(df.sparkSession, target, date_id, partition_col)

@@ -133,6 +133,17 @@ def flatten_weather_json(df_raw: DataFrame, json_col: str = "raw") -> DataFrame:
     )
 
 
+def _string_frame(spark: SparkSession, name: str, values: list[str]) -> DataFrame:
+    """One-string-column frame built from an Arrow table. It plans as a
+    ``LocalRelation``: Catalyst folds projections over it on the driver,
+    so an ``isEmpty`` probe runs no job and nothing is pickled through
+    Python workers (a ``createDataFrame`` of Python tuples re-unpickles
+    every row in every job that touches it)."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(pa.table({name: pa.array(values, pa.string())}))
+
+
 def ingest_batch(
     spark: SparkSession,
     keys: Iterable[str],
@@ -142,10 +153,9 @@ def ingest_batch(
     """Driver-side S3+S4+S5 composed: fetch -> raw DF -> flatten -> stamp
     partition value. The bronze extract step, reference :125-151."""
     raws = fetch_batch(keys, fetch_fn)
-    if not raws:
-        return spark.createDataFrame([], T.StructType([T.StructField("raw", T.StringType())]))
-    df_raw = spark.createDataFrame([(r,) for r in raws], ["raw"])
-    return flatten_weather_json(df_raw).withColumn("date_id", F.lit(date_id))
+    return flatten_weather_json(_string_frame(spark, "raw", raws)).withColumn(
+        "date_id", F.lit(date_id)
+    )
 
 
 def fetch_distributed(
@@ -163,7 +173,7 @@ def fetch_distributed(
     import pandas as pd
 
     n = num_partitions or max(1, len(keys) // 100)
-    keys_df = spark.createDataFrame([(k,) for k in keys], ["key"]).repartition(n)
+    keys_df = _string_frame(spark, "key", keys).repartition(n)
     out_schema = T.StructType(
         [T.StructField("key", T.StringType()), T.StructField("raw", T.StringType())]
     )

@@ -74,3 +74,27 @@ def test_date_id_truncated_to_10_chars(spark, db):
     load_serving_table(df, target, "2026-01-01T12:00:00", connect=_connect(db))
     with sqlite3.connect(db) as c:
         assert c.execute("SELECT date_id FROM north_america_weather").fetchone()[0] == "2026-01-01"
+
+
+def test_empty_guard_runs_before_delete(spark, db):
+    # W2: an empty day must leave the serving table's existing rows for
+    # that date in place — the guard fires before the DELETE
+    from pyspark.sql import functions as F
+
+    target = JdbcTarget(url="", table="north_america_weather")
+    load_serving_table(_df(spark, "2026-01-01"), target, "2026-01-01", connect=_connect(db))
+    empty = _df(spark, "2026-01-01").filter(F.lit(False))
+    assert load_serving_table(empty, target, "2026-01-01", connect=_connect(db)) == 0
+    with sqlite3.connect(db) as c:
+        assert c.execute("SELECT count(*) FROM north_america_weather").fetchone()[0] == 2
+
+
+def test_jdbc_writer_path_empty_guard(spark):
+    # without a DB-API factory the JDBC writer path keeps its own guard:
+    # an empty frame never reaches the JVM connection (this URL has no
+    # driver, so any connection attempt would raise)
+    from pyspark.sql import functions as F
+
+    target = JdbcTarget(url="jdbc:nodriver://nowhere/db", table="north_america_weather")
+    empty = _df(spark, "2026-01-01").filter(F.lit(False))
+    assert load_serving_table(empty, target, "2026-01-01") == 0

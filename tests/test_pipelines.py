@@ -85,6 +85,16 @@ def test_silver_empty_country_guard(spark, lake):
     assert silver.run(spark, lake, "2026-01-01", "US") == 0
 
 
+def test_bronze_all_fetches_failed_writes_nothing(spark, lake):
+    import os
+
+    def failing(city: str) -> str:
+        raise RuntimeError("HTTP 500")
+
+    assert bronze.run(spark, lake, "2026-01-01", list(CITY_COUNTRY), failing) == 0
+    assert not os.path.exists(BRONZE_TABLE.path(lake))
+
+
 def test_silver_prunes_partition(spark, lake):
     from etl_poor_main_pipeline_spark.plans.explain import has_partition_filter
     from etl_poor_main_pipeline_spark.sources.read import read_partition
