@@ -20,6 +20,7 @@ from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.vectors import cosine_similarity, dot_product, l2_norm
 
@@ -110,7 +111,6 @@ def cosine_self_join(
 
     import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
 
     out_schema = T.StructType(
         [
@@ -569,6 +569,10 @@ def pq_refine_topk(
 #: to its own exact fallback 23.0s vs 5.1s).
 _IVF_INDEX: dict[tuple[str, str, int], str] = {}
 
+#: Index path -> its schema, read back once at index time so a probe
+#: scan runs no schema-inference job.
+_IVF_SCHEMA: dict[str, T.StructType] = {}
+
 
 def ensure_ivf_index(
     spark: SparkSession,
@@ -609,6 +613,7 @@ def ensure_ivf_index(
         .partitionBy("cluster_id")
         .parquet(path)
     )
+    _IVF_SCHEMA[path] = spark.read.parquet(path).schema
     _IVF_INDEX[key] = path
     return path
 
@@ -628,7 +633,8 @@ def ivf_search_indexed(
     ivf_search / the DuckDB oracle), collect the nprobe winning cluster
     ids (a bounded ≤num_centroids-row collect — probe selection is query
     planning, not data movement), and statically prune the index scan to
-    those partition directories before the exact re-rank."""
+    those partition directories before the exact re-rank. ``index_path``
+    must come from ``ensure_ivf_index``, which keeps the index's schema."""
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     probe_rows = (
         centroids.withColumn(
@@ -644,8 +650,10 @@ def ivf_search_indexed(
         .collect()
     )
     probes = [r.cluster_id for r in probe_rows]
-    assigned = spark.read.parquet(index_path).filter(
-        F.col("cluster_id").isin(probes)
+    assigned = (
+        spark.read.schema(_IVF_SCHEMA[index_path])
+        .parquet(index_path)
+        .filter(F.col("cluster_id").isin(probes))
     )
     return (
         assigned.select(

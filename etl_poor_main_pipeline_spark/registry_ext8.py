@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .registry import QuerySpec, _dsum, _dsum_sql
+from .sources.read import load_table
 from .streaming.events import (
     drain_to_table,
     enrich_stream,
@@ -107,7 +108,7 @@ def q_streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic, so the drained table equals the batch join."""
     ev = read_event_stream_parquet(spark, sf_dir)
     dim = (
-        spark.read.parquet(f"{sf_dir.rstrip('/')}/customer.parquet")
+        load_table(spark, sf_dir, "customer")
         .select(F.col("c_custkey").alias("user_id"), F.col("c_mktsegment"))
     )
     joined = enrich_stream(ev, dim, on="user_id").select(

@@ -6,8 +6,11 @@ Reference behavior being recreated:
   root and filter on the partition column — Catalyst's
   PruneFileSourcePartitions turns that into the same single-directory scan
   (verified in tests via the explain PartitionFilters).
-- S2 schema-declared scan: reads never infer; the declared schema is passed
-  to the reader (silver schemas at analytics__us_weather.py:71-82).
+- S2 schema-declared scan: declared tables pass their schema to the
+  reader (silver schemas at analytics__us_weather.py:71-82). Corpus files
+  carry no declared schema; ``read_parquet`` infers each one once per file
+  identity and schema-conversion conf set, and later reads pass that
+  schema, so a query build runs no footer-inference job.
 - S6 pandas handoff: ``spark.createDataFrame(pdf)`` (Arrow path), the
   analogue of DuckDB ``con.register`` (utils/duckdb_utils.py:162).
 
@@ -21,6 +24,9 @@ timezone), which is what every oracle twin's ``epoch_us(ts)`` sees.
 """
 
 from __future__ import annotations
+
+import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -54,6 +60,47 @@ def read_table(
         st = schema if isinstance(schema, T.StructType) else schema_from_dict(schema)
         reader = reader.schema(st)
     return reader.parquet(path)
+
+
+#: Session confs that change how Spark converts a parquet footer to a schema.
+_PARQUET_SCHEMA_CONFS = (
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+
+#: Inferred parquet schemas, keyed by file identity (absolute path, size,
+#: mtime, inode) plus the values of ``_PARQUET_SCHEMA_CONFS``. Schemas only,
+#: never DataFrames: every read must get its own relation (fresh attribute
+#: ids for self-joins). Concurrent builders can only store the same value
+#: under one key, so no lock.
+_PARQUET_SCHEMAS: dict[tuple, T.StructType] = {}
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Parquet scan that infers a file's schema once: Spark's inference
+    runs a footer-reading job on every plain ``spark.read.parquet``. The
+    first read of a file under a conf set infers as usual and keeps the
+    schema; later reads pass it to the reader. A path ``os.stat`` cannot
+    see (object store, missing file) is a plain ``spark.read.parquet``, and
+    so is a dataset directory, whose own stat misses rewrites below it."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    if not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    key = (
+        os.path.abspath(path), st.st_size, st.st_mtime_ns, st.st_ino,
+        *(spark.conf.get(c) for c in _PARQUET_SCHEMA_CONFS),
+    )
+    schema = _PARQUET_SCHEMAS.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        _PARQUET_SCHEMAS[key] = df.schema
+        return df
+    return spark.read.schema(schema).parquet(path)
 
 
 def read_partition(
@@ -102,7 +149,7 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     path = f"{sf_dir.rstrip('/')}/events.parquet"
     try:
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
         if isinstance(df.schema["ts"].dataType, T.TimestampNTZType):
             df = df.withColumn("ts", F.expr(_NTZ_AS_UTC_INSTANT.format(c="ts")))
         elif isinstance(df.schema["ts"].dataType, T.LongType):
@@ -158,7 +205,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one driver-corpus table by name (TESTDATA.md)."""
     if name == "events":
         return read_events(spark, sf_dir)
-    return spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir.rstrip('/')}/{name}.parquet")
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:

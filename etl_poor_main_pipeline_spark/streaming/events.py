@@ -261,11 +261,8 @@ def read_event_stream_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata read) and declare accordingly: nanos are read as long
     ns-since-epoch (``nanosAsLong``) and converted with integer ``div``
     (float division would lose µs precision at ~1.7e18); micros are read
-    as a proper timestamp directly."""
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass
+    as a proper timestamp directly. Only the nanos branch sets the
+    session's ``nanosAsLong`` conf, which its declared ``LongType`` needs."""
     path = f"{sf_dir.rstrip('/')}/events.parquet"
     ts_is_nanos = False
     try:
@@ -307,6 +304,10 @@ def read_event_stream_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(f"{sf_dir.rstrip('/')}/{{events}}.parquet")
     )
     if ts_is_nanos:
+        try:
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        except Exception:
+            pass
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
 

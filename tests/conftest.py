@@ -87,6 +87,22 @@ def spark(tmp_path_factory):
     spark.stop()
 
 
+def jobs_run(spark, fn):
+    """Calls ``fn()`` under a fresh job group; returns its result and the
+    number of Spark jobs it ran."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-run-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "jobs_run")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture()
 def lake(tmp_path):
     return str(tmp_path / "lake")

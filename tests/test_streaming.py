@@ -348,3 +348,19 @@ def test_watermark_drops_late_rows(spark, tmp_path):
     # its window was already finalized without it
     assert "late_beyond" not in types
     assert "a" in types  # finalized on-time windows were emitted
+
+
+def test_micros_stream_read_leaves_nanos_conf_alone(spark):
+    """Only the nanos branch needs ``nanosAsLong``; building a stream query
+    on the micros corpus must not flip that session-wide conf."""
+    from etl_poor_main_pipeline_spark.registry import queries
+    from tests.conftest import SF_DIR
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        queries()["streaming_tumbling_counts"](spark, SF_DIR)
+        assert spark.conf.get(key) == "false"
+    finally:
+        spark.conf.set(key, old)
