@@ -30,7 +30,8 @@ numbers reflect plan cost rather than accumulated run pressure
 (pagerank_docs: 9.2s late-in-run vs 4.3s standalone), and their debris is
 settled away before the fast tail. The timing methodology is recorded in
 the JSON line's ``meta`` field so artifact readers can compare rounds
-knowingly.
+knowingly. The session, warm-up, run order and timing rules live in
+tools/harness.py, which the measuring tools share.
 """
 
 from __future__ import annotations
@@ -46,84 +47,14 @@ sys.path.insert(0, REPO)
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-    from etl_poor_main_pipeline_spark.session import get_spark
     from etl_poor_main_pipeline_spark.registry import queries
 
-    spark = get_spark(app_name="bench", master=f"local[{cpus}]")
-    spark.sparkContext.setLogLevel("ERROR")
+    from tools import harness
 
+    spark = harness.session("bench")
     qs = queries()
-    # warm-up: JVM, codegen, parquet footer caches — every table, so the
-    # first (heaviest) query isn't billed for footer/listing cold reads
-    qs["flagship_silver_shape"](spark, sf_dir).count()
-    from etl_poor_main_pipeline_spark.sources.read import load_table
-
-    for t in (
-        "region nation customer supplier part orders lineitem "
-        "events documents embeddings"
-    ).split():
-        try:
-            load_table(spark, sf_dir, t).count()
-        except Exception:
-            pass
-    # warm the ITERATIVE stage graph (round-6, VERDICT r5 #5): pagerank-class
-    # queries compile a distinct codegen source per round (join+agg+join x5
-    # + edge pipeline); under a contended host that compile bills 2x-4x.
-    # One tiny-SF run compiles every source once so the timed sf0.1 run pays
-    # execution, not Janino/JIT — same stance as the JVM warm-up.
-    try:
-        qs["pagerank_docs"](spark, "/root/testdata/sf0.001").count()
-    except Exception as exc:
-        print(f"bench: iterative warm-up skipped: {exc}", file=sys.stderr)
-    # warm the LSH band+verify codegen the same way (round 14, VERDICT
-    # r13 Next #4: dedup_minhash_lsh drifted upward across driver rounds
-    # on C2-JIT warmth — its signature/band/intersect sources are the
-    # largest codegen units in the registry and bill ~1.5-2s of compile
-    # to whichever run pays them first)
-    try:
-        qs["dedup_minhash_lsh"](spark, "/root/testdata/sf0.001").count()
-    except Exception as exc:
-        print(f"bench: LSH warm-up skipped: {exc}", file=sys.stderr)
-    # warm the Python DataSource worker pool the same way (one-time
-    # process spin-up, not per-query work — same stance as the JVM warm-up)
-    try:
-        import tempfile
-
-        from etl_poor_main_pipeline_spark.sources.datasource import (
-            register_manifest_parquet_sink,
-        )
-
-        register_manifest_parquet_sink(spark)
-        spark.range(10).write.format("manifest_parquet").mode("append").option(
-            "path", tempfile.mkdtemp(prefix="bench_warm_")
-        ).save()
-    except Exception as exc:
-        print(f"bench: python-sink warm-up skipped: {exc}", file=sys.stderr)
-    # pre-build the wave-125 storage layouts (bucketed tables, day-
-    # partitioned events): the layout WRITE is one-time amortized setup —
-    # the 100 TB posture — so the timed walls bill only the probe
-    # read/join (VERDICT r9 #3). Write cost is recorded separately in
-    # RATIO.md.
-    try:
-        from etl_poor_main_pipeline_spark.registry_ext125 import ensure_layouts
-
-        ensure_layouts(spark, sf_dir)
-    except Exception as exc:
-        print(f"bench: layout warm-up skipped: {exc}", file=sys.stderr)
-
-    # pre-build the IVF index (round 13, VERDICT r12 Next #4): the
-    # assignment argmax is index-time work — the timed query walls bill
-    # the partition-pruned probe scan, the production ANN billing.
-    try:
-        from etl_poor_main_pipeline_spark.operators.similarity import (
-            ensure_ivf_index,
-        )
-
-        ensure_ivf_index(spark, sf_dir, num_centroids=16)
-    except Exception as exc:
-        print(f"bench: IVF index warm-up skipped: {exc}", file=sys.stderr)
+    harness.warm_up(spark, sf_dir, qs)
 
     # Host-health stamp (VERDICT r9 #2): the measured no-op job floor
     # (min of 3 `spark.range(10).count()` walls) recorded alongside the
@@ -138,15 +69,12 @@ def main() -> None:
         floor_runs.append(round(time.perf_counter() - t0, 4))
     floor_sec = min(floor_runs)
 
-    MIN2_THRESHOLD_SEC = 0.3  # re-run + take min above this
-    # clearCache + GC after queries above this. Kept at 2.0: a round-8
-    # experiment at 1.0 made the ledger WORSE (339s vs 291s total) — each
-    # explicit full GC on a 128 GiB heap stalls longer than the debris it
-    # clears. The ~12 mid-run small queries reading 2-3x their
-    # back-to-back walls are marathon noise, documented by the committed
-    # A/B (AB_FASTPATH.json), not plan regressions.
-    SETTLE_THRESHOLD_SEC = 2.0
-
+    # clearCache + GC after queries above harness.SETTLE_THRESHOLD_SEC.
+    # Kept at 2.0: a round-8 experiment at 1.0 made the ledger WORSE (339s
+    # vs 291s total) — each explicit full GC on a 128 GiB heap stalls
+    # longer than the debris it clears. The ~12 mid-run small queries
+    # reading 2-3x their back-to-back walls are marathon noise, documented
+    # by the committed A/B (AB_FASTPATH.json), not plan regressions.
     def settle() -> None:
         try:
             spark.catalog.clearCache()
@@ -154,134 +82,21 @@ def main() -> None:
         except Exception:
             pass
 
-    # heaviest known queries (BENCH_QUERIES.json head) run first on a
-    # settled heap; everything else keeps registry order behind them.
-    HEAVY_FIRST = [
-        "pagerank_docs",
-        "lsh_recall_audit",
-        "dedup_minhash_lsh",
-        "streaming_stream_join",
-        "streaming_left_join",
-        "kcore_decomposition",
-        "dedup_keep_best",
-        "streaming_sessionize_totals",
-        "triangle_count",
-        "dedup_collapse_components",
-        # round-4 session heads: jaccard-pipeline consumers + wide scans
-        "partition_modularity",
-        "containment_dedup_pairs",
-        # round-5 heads: iterative graph + basket self-join
-        "personalized_pagerank",
-        "itemcf_cosine_topk",
-        "textrank_keywords",
-        "trigram_like_index",
-        "matryoshka_overlap",
-        "poisson_bootstrap_ci",
-        # round-7 (VERDICT r6 #5): multi-stage shapes whose driver runs came
-        # in 1.4-1.75x over committed idle — cold-stage-graph sensitivity,
-        # same class as pagerank; run them on the settled head too.
-        "winnowing_candidate_pairs",
-        "vocab_coverage_curve",
-        "bradley_terry_strengths",
-        "markov_removal_attribution",
-        "fellegi_sunter_linkage",
-        # round-8: iterative hub/auth loop reads 2.4s mid-marathon vs
-        # 1.38s back-to-back (committed A/B) — same settled-heap class
-        "hits_event_types",
-        # round-9 (VERDICT r8 #1): the wave-117/118 post-reduce stat family
-        # stacks 3-5 chained reductions whose stage launches inflated 7-15x
-        # when the driver ran them last, after ~7,400 accumulated stages
-        # (log_rank 0.42s committed vs 6.28s driver) — same settled-heap
-        # class; run them on the settled head.
-        "log_rank_survival",
-        "dau_wau_stickiness",
-        "littles_law_audit",
-        "gumbel_daily_maxima",
-        "energy_distance_2samp",
-        "dickey_fuller_unit_root",
-        "granger_causality_hourly",
-        "mood_median_test",
-        # round-10 waves 127-135: the same chained-reduction class (3-6
-        # stacked reduces / unrolled iteration rounds / token self-joins)
-        # that inflates 7-15x late in the marathon — settled-head them
-        # from the start rather than rediscovering the r9 defect.
-        "raking_ipf",
-        "cox_ph_newton_1cov",
-        "rmst_survival",
-        "aalen_johansen_cif",
-        "quade_test",
-        "distance_correlation",
-        "bray_curtis_sources",
-        "morisita_horn_overlap",
-        "chao2_richness",
-        "jackknife_richness",
-        "truncation_content_drift",
-        "gehan_breslow_wilcoxon",
-        "stuart_maxwell_test",
-        "breslow_day_homogeneity",
-    ]
-    ordered = [(n, qs[n]) for n in HEAVY_FIRST if n in qs]
-    ordered += [(n, fn) for n, fn in qs.items() if n not in HEAVY_FIRST]
-
-    # Size-derived execution posture: on a corpus this small, AQE's
-    # per-stage driver round-trips and a 32-wide shuffle fan-out are pure
-    # floor; the committed 702-query idle A/B (tools/ab_fastpath.py ->
-    # AB_FASTPATH.json, RATIO.md "fastpath A/B") shows 2 queries regress
-    # >1.5x (bradley_terry 3.9x) and 10 total show >=1.28x regressions —
-    # iterative tiny-join loops that rely on AQE coalescing; those nine
-    # keep AQE via the MEASURED opt-out list AQE_KEEP_QUERIES
-    # (two-way-tested against the committed A/B). At cluster scale
-    # small_input_posture is a no-op and AQE stays on for everything.
-    # See fastpath.py.
-    from etl_poor_main_pipeline_spark.fastpath import execution_posture
-
-    def timed_run(name: str, fn) -> tuple[float, int]:
-        """One build+execute of a query under the size-derived posture
-        (small: AQE off + right-sized fan-out, minus the measured
-        AQE_KEEP_QUERIES opt-outs; medium: scan fan-out + AQE advisory
-        sizing; cluster: session posture untouched)."""
-        t0 = time.perf_counter()
-        with execution_posture(spark, sf_dir, name):
-            n = fn(spark, sf_dir).count()
-        return time.perf_counter() - t0, n
-
     timings: dict[str, float] = {}
-    for name, fn in ordered:
+    for name in harness.bench_order(qs):
+        fn = qs[name]
         try:
-            elapsed, n = timed_run(name, fn)
+            elapsed, n = harness.best_of(
+                lambda: harness.timed_count(spark, sf_dir, fn, name),
+                label=f"bench: {name}",
+            )
         except Exception as exc:  # a failing query gets a sentinel, not a crash
             print(f"bench: {name} FAILED: {exc}", file=sys.stderr)
             timings[name] = -1.0
             continue
-        if elapsed > MIN2_THRESHOLD_SEC:
-            # re-run in its OWN guard: a throwing re-run (e.g. transient
-            # streaming drain) must not discard the first run's success.
-            try:
-                e2, _ = timed_run(name, fn)
-                elapsed = min(elapsed, e2)
-            except Exception as exc:
-                print(
-                    f"bench: {name} re-run failed ({exc}); keeping first-run time",
-                    file=sys.stderr,
-                )
-        if elapsed > SETTLE_THRESHOLD_SEC:
-            # round 13 (VERDICT r12 Next #5): multi-second queries early
-            # in the order still carry C2-JIT decay past run 2 —
-            # dedup_minhash_lsh measured a monotone within-session decay
-            # 11.8/4.0/3.5/3.3/2.7/.../2.28s over 10 idle runs, and its
-            # 2.15-2.75s cross-round committed swing sits exactly in the
-            # run-2..4 band. A third run bounds the warmth sensitivity.
-            try:
-                e3, _ = timed_run(name, fn)
-                elapsed = min(elapsed, e3)
-            except Exception as exc:
-                print(
-                    f"bench: {name} third run failed ({exc}); keeping min-of-2",
-                    file=sys.stderr,
-                )
         timings[name] = round(elapsed, 3)
         print(f"bench: {name}: {timings[name]}s ({n} rows)", file=sys.stderr)
-        if elapsed > SETTLE_THRESHOLD_SEC:
+        if elapsed > harness.SETTLE_THRESHOLD_SEC:
             settle()
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]

@@ -22,7 +22,7 @@ where repeated tiny-frame joins rely on AQE's partition coalescing and
 runtime broadcast demotion; those are :data:`AQE_KEEP_QUERIES`
 (raking_ipf joined in round 10 at 1.85x; passing_bablok_regression in
 round 13 at 1.61x postured).
-The harnesses (bench.py, tools/scaling.py) skip the posture for them and
+The harnesses (tools/harness.py) skip the posture for them and
 tests/test_fastpath.py asserts the list stays consistent with the
 committed A/B in BOTH directions (every measured regression is listed,
 no stale entries).
@@ -32,16 +32,15 @@ cluster posture at scale: above the threshold it is a no-op — AQE stays on
 (skew joins, coalescing, runtime join demotion are load-bearing at 100 TB)
 and the session's shuffle fan-out stands.
 
-Usage (bench.py, tools/scaling.py):
+Usage (tools/harness.timed_count, which bench.py and the tools share):
 
-    if name not in AQE_KEEP_QUERIES:
-        with small_input_posture(spark, sf_dir):
-            fn(spark, sf_dir).count()
-    else:
+    with execution_posture(spark, sf_dir, name):
         fn(spark, sf_dir).count()
 
-The context manager restores the prior confs on exit, so a caller that
-mixes scales (tools/scaling.py at x1/x4/x16) re-derives per corpus.
+Given the query ``name``, the measured :data:`AQE_KEEP_QUERIES` opt-outs
+keep AQE. The context manager restores the prior confs on exit, so a
+caller that mixes scales (tools/scaling.py at x1/x4/x16) re-derives per
+corpus.
 
 Size-gated broadcast pins
 -------------------------
@@ -80,6 +79,8 @@ _DEFAULT_MAX_PARTITION_BYTES = 128 << 20
 
 _MPB_KEY = "spark.sql.files.maxPartitionBytes"
 _ADV_KEY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+_AQE_KEY = "spark.sql.adaptive.enabled"
+_SP_KEY = "spark.sql.shuffle.partitions"
 
 # Max on-disk bytes (compressed parquet) of the source tables feeding a
 # dimension side before broadcast_if_small refuses to pin the hint. 64 MB
@@ -252,12 +253,13 @@ def medium_scan_bytes(spark, nbytes: int) -> int | None:
 
 @contextmanager
 def execution_posture(spark, sf_dir: str, name: str | None = None) -> Iterator[str]:
-    """Size-derived execution-posture dispatch for the harnesses
-    (bench.py, tools/ratio.py, tools/scaling.py). Yields the label of the
-    posture actually applied:
+    """Size-derived execution-posture dispatch, the only posture entry
+    point (tools/harness.py, perfbench/workloads.py). Walks the corpus
+    once and yields the label of the posture actually applied:
 
     - ``'small'`` — corpus under :data:`SMALL_INPUT_THRESHOLD_BYTES`:
-      AQE off + right-sized shuffle fan-out (:func:`small_input_posture`).
+      AQE off + shuffle fan-out right-sized to the corpus
+      (:func:`small_input_shuffle_partitions`, never above the session's).
       Skipped (-> ``'cluster'``) for the MEASURED opt-outs in
       :data:`AQE_KEEP_QUERIES` when ``name`` is given.
     - ``'medium'`` — corpus at least the small threshold but few-file
@@ -276,35 +278,30 @@ def execution_posture(spark, sf_dir: str, name: str | None = None) -> Iterator[s
         if name is not None and name in AQE_KEEP_QUERIES:
             yield "cluster"
             return
-        with small_input_posture(spark, sf_dir):
-            yield "small"
-        return
-    mpb = medium_scan_bytes(spark, nbytes) if nbytes > 0 else None
-    if mpb is None:
-        yield "cluster"
-        return
-    prev = {k: spark.conf.get(k, None) for k in (_MPB_KEY, _ADV_KEY)}
+        label = "small"
+        prev_sp = spark.conf.get(_SP_KEY, "200")
+        confs = {
+            _AQE_KEY: "false",
+            _SP_KEY: str(min(int(prev_sp), small_input_shuffle_partitions(nbytes))),
+        }
+    else:
+        mpb = medium_scan_bytes(spark, nbytes) if nbytes > 0 else None
+        if mpb is None:
+            yield "cluster"
+            return
+        label = "medium"
+        confs = {_MPB_KEY: str(mpb), _ADV_KEY: str(mpb)}
+    prev = {k: spark.conf.get(k, None) for k in confs}
     try:
-        spark.conf.set(_MPB_KEY, str(mpb))
-        spark.conf.set(_ADV_KEY, str(mpb))
-        yield "medium"
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield label
     finally:
         for k, v in prev.items():
             if v is None:
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-
-
-def posture_label(spark, sf_dir: str) -> str:
-    """The corpus-level posture :func:`execution_posture` would apply
-    (ignoring per-query opt-outs) — for harness table headers."""
-    nbytes = corpus_bytes(sf_dir)
-    if 0 < nbytes < SMALL_INPUT_THRESHOLD_BYTES:
-        return "small"
-    if nbytes > 0 and medium_scan_bytes(spark, nbytes) is not None:
-        return "medium"
-    return "cluster"
 
 
 def spread_if_cpu_starved(
@@ -362,33 +359,3 @@ def spread_if_cpu_starved(
         return df
     target = min(cores, math.ceil(uncompressed / target_bytes_per_task))
     return df.repartition(target)
-
-
-@contextmanager
-def small_input_posture(
-    spark,
-    sf_dir: str,
-    threshold_bytes: int = SMALL_INPUT_THRESHOLD_BYTES,
-) -> Iterator[bool]:
-    """Disable AQE and right-size the shuffle fan-out while the corpus under
-    ``sf_dir`` is below ``threshold_bytes``; no-op (yields False) otherwise.
-
-    Callers should skip entry for :data:`AQE_KEEP_QUERIES` — this manager
-    checks only the corpus size, not the measured opt-out list.
-    """
-    nbytes = corpus_bytes(sf_dir)
-    if nbytes <= 0 or nbytes >= threshold_bytes:
-        yield False
-        return
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(min(int(prev_sp), small_input_shuffle_partitions(nbytes))),
-        )
-        yield True
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)

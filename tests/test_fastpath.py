@@ -10,7 +10,7 @@ import os
 from etl_poor_main_pipeline_spark.fastpath import (
     AQE_KEEP_QUERIES,
     corpus_bytes,
-    small_input_posture,
+    execution_posture,
     small_input_shuffle_partitions,
 )
 
@@ -35,25 +35,18 @@ def test_partitions_formula_floor_and_growth():
 def test_posture_applies_and_restores(spark):
     prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    with small_input_posture(spark, SF) as on:
-        assert on is True
+    with execution_posture(spark, SF) as label:
+        assert label == "small"
         assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
         assert int(spark.conf.get("spark.sql.shuffle.partitions")) <= int(prev_sp)
     assert spark.conf.get("spark.sql.adaptive.enabled") == prev_aqe
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev_sp
 
 
-def test_posture_noop_at_scale(spark):
-    # Threshold below the corpus size -> cluster posture untouched.
-    with small_input_posture(spark, SF, threshold_bytes=1) as on:
-        assert on is False
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-
-
 def test_posture_restores_on_error(spark):
     prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     try:
-        with small_input_posture(spark, SF):
+        with execution_posture(spark, SF):
             raise RuntimeError("boom")
     except RuntimeError:
         pass

@@ -1,6 +1,6 @@
-"""Per-query A/B of the small-input posture (fastpath.small_input_posture:
-AQE off + right-sized shuffle fan-out) vs default session confs, over the
-FULL registry at sf0.1 on an idle host.
+"""Per-query A/B of the small-input posture (fastpath.execution_posture at
+a small corpus: AQE off + right-sized shuffle fan-out) vs default session
+confs, over the FULL registry at sf0.1 on an idle host.
 
 This table is the committed evidence behind fastpath.AQE_KEEP_QUERIES.
 Round 7 shipped the posture process-wide with an unsubstantiated "no query
@@ -16,9 +16,11 @@ Usage (idle host — any concurrent Spark/pytest makes timings garbage):
     python tools/ab_fastpath.py --rewrite              # re-emit outputs only
 
 Per query: wall = build + execute + count, OFF first then ON back-to-back
-(matched host conditions), min-of-2 above 0.3s, same warm-up as bench.py.
-The ON leg uses process-wide posture semantics (posture active during
-build AND action, so eager checkpoint loops feel it). A subset run merges
+(matched host conditions), min-of-2 above 0.3s, bench.py's warm-up
+(tools/harness.py). The ON leg is execution_posture with no query name,
+so the AQE_KEEP_QUERIES opt-outs are measured postured too; it uses
+process-wide posture semantics (posture active during build AND action,
+so eager checkpoint loops feel it). A subset run merges
 into the existing AB_FASTPATH.json so per-wave top-ups don't clobber the
 full table. `gate` records the harness policy for the row: 'aqe' if the
 name is in fastpath.AQE_KEEP_QUERIES, else 'posture'.
@@ -31,14 +33,13 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-MIN2_THRESHOLD_SEC = 0.3
+from tools import harness  # noqa: E402
+
 JSON_PATH = os.path.join(REPO, "AB_FASTPATH.json")
 
 
@@ -92,22 +93,7 @@ def write_outputs(rows: dict, sf_dir: str) -> None:
         )
     section = "\n".join(lines) + "\n"
 
-    ratio_md = os.path.join(REPO, "RATIO.md")
-    text = open(ratio_md).read() if os.path.exists(ratio_md) else "# RATIO\n\n"
-    marker = "## fastpath A/B"
-    if marker in text:
-        # callable replacement: query names / sf_dir strings in the table
-        # must not be interpreted as \g backreference templates
-        text = re.sub(
-            re.escape(marker) + r".*?(?=\n## (?!fastpath A/B)|\Z)",
-            lambda m: section,
-            text,
-            flags=re.S,
-        )
-    else:
-        text = text.rstrip() + "\n\n" + section
-    with open(ratio_md, "w") as fh:
-        fh.write(text)
+    harness.replace_section(os.path.join(REPO, "RATIO.md"), "## fastpath A/B", section)
     print(
         f"ab: wrote AB_FASTPATH.json + RATIO.md section "
         f"({len(rows)} queries, {len(regressed)} regressed, "
@@ -117,7 +103,7 @@ def write_outputs(rows: dict, sf_dir: str) -> None:
 
 
 def main() -> None:
-    args = [a for a in sys.argv[1:]]
+    args = sys.argv[1:]
     if args and args[0] == "--rewrite":
         with open(JSON_PATH) as fh:
             store = json.load(fh)
@@ -127,34 +113,17 @@ def main() -> None:
     sf_dir = args[0] if args else "/root/testdata/sf0.1"
     only = set(args[1:])
 
-    from etl_poor_main_pipeline_spark.fastpath import small_input_posture
     from etl_poor_main_pipeline_spark.registry import queries
-    from etl_poor_main_pipeline_spark.session import get_spark
 
-    spark = get_spark(app_name="ab_fastpath", master="local[32]")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = harness.session("ab_fastpath")
     qs = queries()
-    qs["flagship_silver_shape"](spark, sf_dir).count()  # JVM/codegen warm-up
-    try:  # iterative stage-graph warm-up, same stance as bench.py
-        qs["pagerank_docs"](spark, "/root/testdata/sf0.001").count()
-    except Exception:
-        pass
+    harness.warm_up(spark, sf_dir, qs)
 
-    def run_off(fn) -> float:
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).count()
-        return time.perf_counter() - t0
-
-    def run_on(fn) -> float:
-        t0 = time.perf_counter()
-        with small_input_posture(spark, sf_dir):
-            fn(spark, sf_dir).count()
-        return time.perf_counter() - t0
-
-    def timed(runner, fn) -> float:
-        e = runner(fn)
-        if e > MIN2_THRESHOLD_SEC:
-            e = min(e, runner(fn))
+    def timed(fn, posture: bool) -> float:
+        e, _ = harness.best_of(
+            lambda: harness.timed_count(spark, sf_dir, fn, posture=posture),
+            (harness.MIN2_THRESHOLD_SEC,),
+        )
         return round(e, 3)
 
     rows: dict[str, dict] = {}
@@ -165,8 +134,8 @@ def main() -> None:
         if only and name not in only:
             continue
         try:
-            off = timed(run_off, fn)
-            on = timed(run_on, fn)
+            off = timed(fn, posture=False)
+            on = timed(fn, posture=True)
         except Exception as exc:
             print(f"ab: {name} FAILED: {exc}", file=sys.stderr)
             continue

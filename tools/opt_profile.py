@@ -9,7 +9,8 @@ uses:
                emission) — driver cost before Spark sees the plan
   - explain_s: one `.explain("formatted")` (analysis+optimization+
                physical planning; cached for the subsequent runs)
-  - count_s:   min-of-3 `df.count()` — the bench-comparable action
+  - count_s:   min-of-3 build+`count()` — the bench-comparable action,
+               timed by tools/harness.timed_count as bench.py times it
   - noop_s:    min-of-3 noop-sink write (guide §1.4: computes every
                column, no count-path pruning)
 
@@ -26,16 +27,18 @@ Set PLANS_ONLY=1 to capture plans without the count/noop timing runs
 
 from __future__ import annotations
 
+import io
 import json
 import os
 import sys
 import time
+from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
-    args = [a for a in sys.argv[1:]]
+    args = sys.argv[1:]
     sf_dir = "/root/testdata/sf0.1"
     if args and os.path.isdir(args[0]):
         sf_dir = args.pop(0)
@@ -45,19 +48,16 @@ def main() -> int:
         top_n = int(args[i + 1])
         del args[i : i + 2]
 
-    from etl_poor_main_pipeline_spark.session import get_spark
-    from etl_poor_main_pipeline_spark.registry import queries
     from etl_poor_main_pipeline_spark.fastpath import execution_posture
+    from etl_poor_main_pipeline_spark.registry import queries
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(app_name="opt_profile", master=f"local[{cpus}]")
-    spark.sparkContext.setLogLevel("ERROR")
+    from tools import harness
 
+    spark = harness.session("opt_profile")
     qs = queries()
     names = args
     if top_n:
-        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        with open(os.path.join(repo, "BENCH_QUERIES.json")) as fh:
+        with open(os.path.join(harness.REPO, "BENCH_QUERIES.json")) as fh:
             ledger = json.load(fh)
         names = [
             k
@@ -66,33 +66,11 @@ def main() -> int:
         ] + [n for n in names if n not in ledger]
     plan_dir = os.environ.get("PLAN_DIR", "")
     suffix = os.environ.get("SUFFIX", "")
+    plans_only = os.environ.get("PLANS_ONLY")
     if plan_dir:
         os.makedirs(plan_dir, exist_ok=True)
 
-    # same warm-up stance as bench.py so runs are comparable
-    qs["flagship_silver_shape"](spark, sf_dir).count()
-    from etl_poor_main_pipeline_spark.sources.read import load_table
-
-    for t in (
-        "region nation customer supplier part orders lineitem "
-        "events documents embeddings"
-    ).split():
-        try:
-            load_table(spark, sf_dir, t).count()
-        except Exception:
-            pass
-    try:
-        from etl_poor_main_pipeline_spark.registry_ext125 import ensure_layouts
-
-        ensure_layouts(spark, sf_dir)
-    except Exception:
-        pass
-    try:
-        from etl_poor_main_pipeline_spark.operators.similarity import ensure_ivf_index
-
-        ensure_ivf_index(spark, sf_dir, num_centroids=16)
-    except Exception:
-        pass
+    harness.warm_up(spark, sf_dir, qs)  # same warm-up as bench.py
 
     out: dict[str, dict[str, float]] = {}
     hdr = f"{'query':36s} {'build_s':>8s} {'explain_s':>9s} {'count_s':>8s} {'noop_s':>8s}"
@@ -106,9 +84,6 @@ def main() -> int:
                 df = fn(spark, sf_dir)
                 build_s = time.perf_counter() - t0
 
-                import io
-                from contextlib import redirect_stdout
-
                 buf = io.StringIO()
                 t0 = time.perf_counter()
                 with redirect_stdout(buf):
@@ -119,42 +94,25 @@ def main() -> int:
                         os.path.join(plan_dir, f"{name}{suffix}.txt"), "w"
                     ) as fh:
                         fh.write(buf.getvalue())
-
-                if os.environ.get("PLANS_ONLY"):
-                    out[name] = {
-                        "build_s": round(build_s, 3),
-                        "explain_s": round(explain_s, 3),
-                    }
-                    print(
-                        f"{name:36s} {build_s:8.3f} {explain_s:9.3f}"
-                        f" {'-':>8s} {'-':>8s}",
-                        file=sys.stderr,
-                    )
-                    continue
-                counts = []
-                for _ in range(3):
-                    t0 = time.perf_counter()
-                    fn(spark, sf_dir).count()
-                    counts.append(time.perf_counter() - t0)
+                row = {"build_s": round(build_s, 3), "explain_s": round(explain_s, 3)}
                 noops = []
-                for _ in range(3):
+                for _ in range(0 if plans_only else 3):
                     df2 = fn(spark, sf_dir)
                     t0 = time.perf_counter()
                     df2.write.format("noop").mode("overwrite").save()
                     noops.append(time.perf_counter() - t0)
+            if not plans_only:
+                count_s, _ = harness.best_of(
+                    lambda: harness.timed_count(spark, sf_dir, fn, name), (0.0, 0.0)
+                )
+                row.update(count_s=round(count_s, 3), noop_s=round(min(noops), 3))
         except Exception as exc:
             print(f"{name:36s} FAILED: {exc}", file=sys.stderr)
             continue
-        row = {
-            "build_s": round(build_s, 3),
-            "explain_s": round(explain_s, 3),
-            "count_s": round(min(counts), 3),
-            "noop_s": round(min(noops), 3),
-        }
         out[name] = row
         print(
             f"{name:36s} {row['build_s']:8.3f} {row['explain_s']:9.3f}"
-            f" {row['count_s']:8.3f} {row['noop_s']:8.3f}",
+            f" {row.get('count_s', '-'):>8} {row.get('noop_s', '-'):>8}",
             file=sys.stderr,
         )
     print(json.dumps(out, sort_keys=True))

@@ -4,26 +4,30 @@ DuckDB over the same parquet, compares row count, column names, and an
 order-insensitive value hash. Usage:
 
     python tools/parity.py [sf_dir] [query ...]
+
+Module discovery (registry._full_registry) registers every
+``registry_ext*`` file, so a new wave module's queries are checked by
+name the moment the file exists.
 """
 
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings".split()
-)
+from etl_poor_main_pipeline_spark.sources.read import TESTDATA_TABLES  # noqa: E402
 
 
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
-    for t in TABLES:
+    for t in TESTDATA_TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
@@ -64,7 +68,6 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, ".")
     import __spark_entry__ as ent
     from etl_poor_main_pipeline_spark.session import get_spark
 
@@ -78,7 +81,6 @@ def main() -> int:
     # bound, not compute bound, so 8 threads ~3x the wall. Streaming
     # drains run serially — stream start/registration must not race.
     # ETL_PARITY_THREADS=1 restores the fully serial sweep.
-    import os
     from concurrent.futures import ThreadPoolExecutor
 
     names = [n for n in qs if not only or n in only]

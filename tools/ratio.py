@@ -16,12 +16,11 @@ still printed so nothing is hidden.
 
 from __future__ import annotations
 
+import json
+import os
 import sys
-import time
 
-import duckdb
-
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
@@ -30,47 +29,38 @@ def main() -> None:
     only = set(sys.argv[3:])
 
     from etl_poor_main_pipeline_spark.registry import oracle_sql, queries
-    from etl_poor_main_pipeline_spark.session import get_spark
 
-    import json
-    import os
+    from tools import harness
+    from tools.parity import duck_con
 
     floor_sec = 0.0
-    host_path = os.path.join(os.path.dirname(__file__), "..", "BENCH_HOST.json")
     try:
-        with open(host_path) as fh:
+        with open(os.path.join(harness.REPO, "BENCH_HOST.json")) as fh:
             floor_sec = float(json.load(fh).get("floor_sec", 0.0))
     except (OSError, ValueError):
         pass
 
-    con = duckdb.connect()
-    for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
-
-    spark = get_spark(master="local[32]")
-    spark.sparkContext.setLogLevel("ERROR")
+    con = duck_con(sf_dir)
+    spark = harness.session("ratio")
     qs, osql = queries(), oracle_sql()
-    qs["flagship_silver_shape"](spark, sf_dir).count()  # warm-up
+    harness.warm_up(spark, sf_dir, qs)
 
     # time under the SAME per-query execution posture bench.py uses —
     # round 9 found ratio.py's posture-less walls read 2-3x the committed
     # ledger for posture-sensitive queries (the r8 verdict's
     # "three ledgers disagree" defect was this instrument mismatch)
-    from etl_poor_main_pipeline_spark.fastpath import execution_posture
-
-    def run_postured(name, fn):
-        with execution_posture(spark, sf_dir, name):
-            return fn(spark, sf_dir).count()
-
+    reruns = (0.0,) * (runs - 1)  # min of `runs` runs
     rows = []
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        spark_t = min(
-            _time(lambda: run_postured(name, fn)) for _ in range(runs)
+        spark_t, _ = harness.best_of(
+            lambda: harness.timed_count(spark, sf_dir, fn, name), reruns
         )
         if name in osql:
-            duck_t = min(_time(lambda: con.execute(osql[name]).fetchall()) for _ in range(runs))
+            duck_t, _ = harness.best_of(
+                lambda: harness.timed_oracle(con, osql[name]), reruns
+            )
             # clamp the denominator at the stamped no-op floor: a 6 ms
             # oracle vs a 0.096s minimum-possible Spark job is a
             # measurement-floor artifact, not a plan difference
@@ -88,12 +78,6 @@ def main() -> None:
         flag = "  <-- >2x" if d is not None and ratio > 2 else ""
         clamped = "  [clamped]" if d is not None and d < floor_sec else ""
         print(f"{name:35s} {s:8.3f} {dtxt} {rtxt}{flag}{clamped}")
-
-
-def _time(f) -> float:
-    t0 = time.perf_counter()
-    f()
-    return time.perf_counter() - t0
 
 
 if __name__ == "__main__":

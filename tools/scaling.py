@@ -32,6 +32,10 @@ self-disable. The printed table records which posture ran.
 Usage (idle host only — same contention caveat as bench.py):
 
     python tools/scaling.py [--factors 1,4,16] [--sf-dir /root/testdata/sf0.1]
+    python tools/scaling.py --regen     # rewrite the table from SCALING.json
+
+Results merge into SCALING.json; the tool rewrites only SCALING.md's
+"Measured walls" section, and the readings below it are hand-written.
 """
 
 from __future__ import annotations
@@ -42,12 +46,13 @@ import os
 import shutil
 import sys
 import tempfile
-import time
 
 import duckdb
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+from tools import harness  # noqa: E402
 
 # key columns to offset per table: {table: {column: keyspace_table}}
 # (keyspace_table names whose max key defines the offset stride, so
@@ -67,6 +72,8 @@ KEYED = {
     "embeddings": {"vec_id": "embeddings"},
 }
 SINGLE_COPY = ("nation", "region")
+# the SCALING.md section this tool rewrites; the readings below it are prose
+TABLE_HEADING = "## Measured walls"
 KEY_OF = {
     "customer": "c_custkey",
     "orders": "o_orderkey",
@@ -141,19 +148,6 @@ def make_scaled(sf_dir: str, factor: int, out_dir: str) -> None:
         )
 
 
-def duck_time(sf_dir: str, sql: str, runs: int = 2) -> float:
-    from tools.parity import duck_con
-
-    con = duck_con(sf_dir)
-    best = float("inf")
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        con.execute(sql).fetchall()
-        best = min(best, time.perf_counter() - t0)
-    con.close()
-    return best
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--factors", default="1,4,16")
@@ -162,33 +156,25 @@ def main() -> None:
     ap.add_argument(
         "--regen",
         action="store_true",
-        help="skip measuring; rewrite SCALING.md from the stored "
-        "SCALING.json (e.g. after tools/bucketed_q35.py rows were "
-        "inserted, or a prose-block edit)",
+        help="skip measuring; rewrite SCALING.md's table from the stored "
+        "SCALING.json",
     )
     args = ap.parse_args()
-    factors = [] if args.regen else [int(f) for f in args.factors.split(",")]
+    if args.regen:
+        _write_outputs(args.sf_dir, {}, {})
+        return
+    factors = [int(f) for f in args.factors.split(",")]
     qnames = args.queries.split(",") if args.queries else QUERIES
 
-    results: dict[str, dict] = {}
-    postures: dict[int, str] = {}
-    root = tempfile.mkdtemp(prefix="scaling_")
-    if args.regen:
-        _write_outputs(args, factors, results, postures, root)
-        return
-
-    from etl_poor_main_pipeline_spark.fastpath import (
-        corpus_bytes,
-        execution_posture,
-        posture_label,
-    )
+    from etl_poor_main_pipeline_spark.fastpath import corpus_bytes, execution_posture
     from etl_poor_main_pipeline_spark.registry import oracle_sql, queries
-    from etl_poor_main_pipeline_spark.session import get_spark
+
+    from tools.parity import duck_con
 
     qs, oracles = queries(), oracle_sql()
-    spark = get_spark(app_name="scaling")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = harness.session("scaling")
 
+    root = tempfile.mkdtemp(prefix="scaling_")
     dirs: dict[int, str] = {}
     for f in factors:
         if f == 1:
@@ -200,28 +186,29 @@ def main() -> None:
         make_scaled(args.sf_dir, f, d)
         dirs[f] = d
 
-    # warm the JVM/codegen once so x-scale walls measure work, not startup
-    qs["flagship_silver_shape"](spark, args.sf_dir).count()
+    # warm the session once so x-scale walls measure work, not startup
+    harness.warm_up(spark, args.sf_dir, qs)
 
+    results: dict[str, dict] = {}
+    postures: dict[int, str] = {}
     for f in factors:
         d = dirs[f]
         mb = corpus_bytes(d) / 1e6
-        postures[f] = posture_label(spark, d)
+        with execution_posture(spark, d) as label:
+            postures[f] = label
         print(f"--- x{f} ({mb:.0f} MB, {postures[f]} posture)", file=sys.stderr)
+        con = duck_con(d)
         for name in qnames:
             if name not in qs or name not in oracles:
                 continue
-
-            def _run() -> float:
-                # same policy as bench.py: size-derived posture with the
-                # measured small-posture opt-outs (execution_posture)
-                t0 = time.perf_counter()
-                with execution_posture(spark, d, name):
-                    qs[name](spark, d).count()
-                return time.perf_counter() - t0
-
-            s_wall = min(_run(), _run())
-            d_wall = duck_time(d, oracles[name])
+            # same policy as bench.py: size-derived posture with the
+            # measured small-posture opt-outs; min of 2 on both engines
+            s_wall, _ = harness.best_of(
+                lambda: harness.timed_count(spark, d, qs[name], name), (0.0,)
+            )
+            d_wall, _ = harness.best_of(
+                lambda: harness.timed_oracle(con, oracles[name]), (0.0,)
+            )
             results.setdefault(name, {})[f] = {
                 "spark": round(s_wall, 3),
                 "duckdb": round(d_wall, 3),
@@ -230,19 +217,22 @@ def main() -> None:
                 f"{name} x{f}: spark {s_wall:.3f}s duckdb {d_wall:.3f}s",
                 file=sys.stderr,
             )
+        con.close()
 
-    _write_outputs(args, factors, results, postures, root)
+    _write_outputs(args.sf_dir, results, postures)
+    shutil.rmtree(root, ignore_errors=True)
 
 
-def _write_outputs(args, factors, results, postures, root) -> None:
-    # merge with any prior runs (so x64 extension runs don't clobber the
-    # x1/x4/x16 table), then regenerate the md from the merged store
+def _write_outputs(sf_dir: str, results: dict, postures: dict) -> None:
+    """Merge this run into SCALING.json (so x64 extension runs don't
+    clobber the x1/x4/x16 table), then rewrite SCALING.md's table section
+    from the merged store; the hand-written readings below it stay."""
     json_path = os.path.join(REPO, "SCALING.json")
     store = {"factors": [], "postures": {}, "results": {}}
     if os.path.exists(json_path):
         with open(json_path) as fh:
             store = json.load(fh)
-    all_factors = sorted(set(int(f) for f in store["factors"]) | set(factors))
+    all_factors = sorted(set(int(f) for f in store["factors"]) | set(postures))
     store["factors"] = all_factors
     store["postures"].update({str(f): p for f, p in postures.items()})
     for name, row in results.items():
@@ -252,9 +242,9 @@ def _write_outputs(args, factors, results, postures, root) -> None:
         json.dump(store, fh)
 
     lines = [
-        "# SCALING — measured Spark-floor vs DuckDB-linear (tools/scaling.py)",
+        f"{TABLE_HEADING} (tools/scaling.py)",
         "",
-        f"Corpus: {args.sf_dir} key-offset-replicated x{all_factors} "
+        f"Corpus: {sf_dir} key-offset-replicated x{all_factors} "
         "(postures: "
         + ", ".join(
             f"x{f}={store['postures'].get(str(f), '?')}" for f in all_factors
@@ -281,75 +271,9 @@ def _write_outputs(args, factors, results, postures, root) -> None:
             if r <= 1.0 and crossed == "no":
                 crossed = f"<=x{f}"
         lines.append(f"| {name} | " + " | ".join(cells) + f" | {crossed} |")
-    lines += [
-        "",
-        "HOST DEPENDENCE (round 12): every row above is a SAME-HOST,",
-        "same-session pair. Across rounds the DuckDB oracle walls moved",
-        "up to ~10x between hosts (r11 recorded tpch_q3 x64 duck 3.51s;",
-        "this host reads 0.31s for the identical query and corpus) while",
-        "the Spark walls moved far less — so ratios are comparable only",
-        "WITHIN a table, and round-over-round progress must be read off",
-        "the Spark-wall columns (r11 -> r12: q3 8.33 -> 4.40s, q5 5.56 ->",
-        "3.85s, tf_idf unmeasured -> 3.79s, LSH 83.2 -> 47.9s — the",
-        "medium-corpus posture, fastpath.execution_posture).",
-        "",
-        "ANN-tier reading (round-8 task: measure the designed answers to",
-        "the exact brute-force counterexample; honest includes the part",
-        "that does NOT cross locally):",
-        "- `similarity_ivf_topk` (round 13, VERDICT r12 Next #4 closed):",
-        "  the index BUILD (16N assignment argmax) is now amortized once",
-        "  per session into a partitionBy(cluster_id) parquet layout",
-        "  (similarity.ensure_ivf_index — the production ANN posture and",
-        "  the same setup/query split as the bucketed-join layout), and",
-        "  the timed query statically prunes to the 4 probed cluster",
-        "  directories. Result on this host, same-session pairs: the",
-        "  ratio falls 11.1x (x1) -> 4.5x (x4) -> 1.0x (x16) -> 0.4x",
-        "  (x64) — a measured LOCAL crossover at x16 — and IVF's",
-        "  absolute x64 wall (1.15s) now beats exact brute force (5.50s)",
-        "  by ~5x, closing the r12 inversion (23.0s vs 5.1s when the",
-        "  assignment was rebuilt per query). The min-of-2 walls bill",
-        "  the probe path: run 1 of each factor pays the one-time build",
-        "  (~37s at x64), run 2 reads the index — exactly how an ANN",
-        "  index is billed in production.",
-        "- `dedup_minhash_lsh`: Spark beats the DuckDB oracle at EVERY",
-        "  factor (0.5-0.7x) — the band-bucket shuffle scales. Caveat:",
-        "  documents.text replicates VERBATIM, so every replica of a",
-        "  template is a true near-dup of every other replica and the PAIR",
-        "  workload itself grows ~quadratically in the factor for both",
-        "  engines; the ratio compares like for like, the absolute walls",
-        "  measure that inflated pair count, not linear corpus growth.",
-        "- `text_tf_idf` (round-12 fix): the footer-gated document spread",
-        "  (fastpath.spread_if_cpu_starved) un-serializes the tokenize",
-        "  (3 row groups -> 3 of 32 cores before; 22.5s -> 3.8s at x64)",
-        "  and the ratio now CROSSES at x16 (0.9x) and x64 (0.5x).",
-        "- `join_cross`'s oracle is sub-millisecond at every factor (a",
-        "  LIMIT-bounded constant-size result); its ratio column is a",
-        "  floor artifact, kept for completeness.",
-        "",
-        "BUCKETED LAYOUT (round 13, tools/bucketed_q35.py — VERDICT r12",
-        "Next #3, falsifying the q3/q5 'irreducible fact exchange'",
-        "claim): the tpch_q3/q5_bucketed_layout rows above run the same",
-        "queries at x64 over orders+lineitem written",
-        "bucketBy(32, orderkey)+sortBy (the registry_ext125 layout, one",
-        "11s write amortized across every downstream join on the key).",
-        "Measured same-session against the plain-parquet baselines:",
-        "q3 4.03s -> 2.08s (0.52x, executed plan: ZERO shuffle exchanges",
-        "— the one remaining Exchange is the dim-side broadcast), q5",
-        "4.48s -> 2.55s (0.57x). The claim is FALSIFIED: the exchange",
-        "was removable by layout, and layout IS the 100 TB answer.",
-        "Residual decomposition at x64 (same session): lineitem",
-        "scan+filter+sum floor 0.62s + dim build 0.67s + join/agg+launch",
-        "~0.8s; bucket count is not the lever (64 buckets reads the same",
-        "walls), and a pinned-broadcast BHJ variant (1.93s) ties the",
-        "bucketed SMJ — the remaining 5-6x vs DuckDB (0.42/0.43s oracle",
-        "walls on this host) is columnar-scan + hash-probe compute, not",
-        "plan structure.",
-    ]
     out_md = os.path.join(REPO, "SCALING.md")
-    with open(out_md, "w") as fh:
-        fh.write("\n".join(lines) + "\n")
+    harness.replace_section(out_md, TABLE_HEADING, "\n".join(lines) + "\n")
     print(f"wrote {out_md}")
-    shutil.rmtree(root, ignore_errors=True)
 
 
 if __name__ == "__main__":

@@ -60,7 +60,7 @@ def rewrite(text: str, n_q: int, n_o: int, n_t: int) -> str:
 
 
 def check_ab_prose(n_q: int) -> list[str]:
-    """Assert the fastpath/bench A/B prose counts match the committed
+    """Assert the fastpath/harness A/B prose counts match the committed
     AB_FASTPATH.json (VERDICT r8 'What's wrong #4': the docstrings said
     '499-query'/'exactly two' against a 513-row A/B with 7 opt-outs).
     Returns a list of human-readable failures (empty = in sync)."""
@@ -82,12 +82,12 @@ def check_ab_prose(n_q: int) -> list[str]:
             f"committed A/B gates {n_keep} queries as 'aqe'"
         )
     fastpath_txt = (REPO / "etl_poor_main_pipeline_spark" / "fastpath.py").read_text()
-    bench_txt = (REPO / "bench.py").read_text()
+    harness_txt = (REPO / "tools" / "harness.py").read_text()
     for fname, txt, needle in (
         ("fastpath.py", fastpath_txt, f"{n_rows}-query registry"),
         ("fastpath.py", fastpath_txt, f"{n_keep} total show"),
-        ("bench.py", bench_txt, f"{n_rows}-query idle A/B"),
-        ("bench.py", bench_txt, f"{n_keep} total show"),
+        ("tools/harness.py", harness_txt, f"{n_rows}-query idle A/B"),
+        ("tools/harness.py", harness_txt, f"{n_keep} total show"),
     ):
         if needle not in txt:
             bad.append(f"{fname} prose lacks '{needle}' (A/B has {n_rows} rows, "
@@ -103,7 +103,7 @@ def rewrite_ab_prose() -> None:
     (VERDICT r12 What's wrong #2: the tool checked the
     '<n>-query registry' / '<n>-query idle A/B' strings but only
     REWROTE README/MIGRATION, so a hand-edit omission in the final
-    commit reddened CI twice). Patches fastpath.py and bench.py from
+    commit reddened CI twice). Patches fastpath.py and tools/harness.py from
     the committed AB_FASTPATH.json — same source of truth as the
     check."""
     import json
@@ -116,7 +116,7 @@ def rewrite_ab_prose() -> None:
     n_keep = sum(1 for v in rows.values() if v["gate"] == "aqe")
     for f in (
         REPO / "etl_poor_main_pipeline_spark" / "fastpath.py",
-        REPO / "bench.py",
+        REPO / "tools" / "harness.py",
     ):
         old = f.read_text()
         new = re.sub(r"\d+-query registry", f"{n_rows}-query registry", old)
