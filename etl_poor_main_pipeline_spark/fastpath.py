@@ -95,35 +95,37 @@ _BYTES_PER_SHUFFLE_TASK = 2 << 20
 _MIN_PARTITIONS = 8
 
 
-def corpus_bytes(sf_dir: str) -> int:
-    """Total on-disk size of the corpus' parquet files (0 if unreadable)."""
+def _parquet_files(path: str) -> list[str]:
+    """``[path]`` for a file (or a missing path), else every ``*.parquet``
+    below the directory, sorted — the one corpus lister behind the byte
+    gates and the footer walk."""
+    if not os.path.isdir(path):
+        return [path]
+    return sorted(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
+
+
+def _size(files: list[str]) -> int:
+    """Summed on-disk bytes of ``files``; unreadable entries count 0."""
     total = 0
-    for p in glob.glob(os.path.join(sf_dir, "**", "*.parquet"), recursive=True):
+    for f in files:
         try:
-            total += os.stat(p).st_size
+            total += os.stat(f).st_size
         except OSError:
             pass
     return total
 
 
+def corpus_bytes(sf_dir: str) -> int:
+    """Total on-disk size of the corpus' parquet files (0 if unreadable)."""
+    return _size(_parquet_files(sf_dir))
+
+
 def tables_bytes(sf_dir: str, *tables: str) -> int:
     """On-disk bytes of the named corpus tables (``<sf_dir>/<t>.parquet``
     as a file or a directory of part files); 0 if none found."""
-    total = 0
-    for t in tables:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.isdir(p):
-            for f in glob.glob(os.path.join(p, "**", "*.parquet"), recursive=True):
-                try:
-                    total += os.stat(f).st_size
-                except OSError:
-                    pass
-        else:
-            try:
-                total += os.stat(p).st_size
-            except OSError:
-                pass
-    return total
+    return sum(
+        _size(_parquet_files(os.path.join(sf_dir, f"{t}.parquet"))) for t in tables
+    )
 
 
 def broadcast_if_small(df, sf_dir: str, tables, threshold_bytes: int | None = None):
@@ -331,12 +333,7 @@ def spread_if_cpu_starved(
         import pyarrow.parquet as pq
     except Exception:
         return df
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    files = (
-        sorted(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
-        if os.path.isdir(path)
-        else [path]
-    )
+    files = _parquet_files(os.path.join(sf_dir, f"{table}.parquet"))
     if not files:
         return df
     cores = max(1, int(df.sparkSession.sparkContext.defaultParallelism))

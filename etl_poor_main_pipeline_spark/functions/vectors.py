@@ -43,7 +43,3 @@ def cosine_similarity(a: Column | str, b: Column | str) -> Column:
 
 def scale(a: Column | str, s: Column) -> Column:
     return F.transform(_as_double(a), lambda x: x * s)
-
-
-def vec_add(a: Column | str, b: Column | str) -> Column:
-    return F.zip_with(_as_double(a), _as_double(b), lambda x, y: x + y)

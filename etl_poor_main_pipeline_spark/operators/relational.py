@@ -3,7 +3,7 @@ the standard completion surface (§2.6) as thin idiomatic-Spark wrappers.
 
 Reference citations:
 - P1 projection: analytics__us_weather.py:35-43
-- P2 literal column: analytics__us_weather.py:44
+- P2 literal column: analytics__us_weather.py:44 (a plain ``F.lit``)
 - P3 CASE bucketing: analytics__us_weather.py:45-50
 - P4 equality filter: analytics__us_weather.py:52
 - P5 cast enforcement: utils/duckdb_utils.py:176-182 (see schema.enforce_schema)
@@ -27,11 +27,6 @@ from pyspark.sql import functions as F
 def project(df: DataFrame, *cols: str | Column) -> DataFrame:
     """P1 named-column projection (prunes the parquet scan via Catalyst)."""
     return df.select(*cols)
-
-
-def with_literal(df: DataFrame, name: str, value) -> DataFrame:
-    """P2 constant column, e.g. ``date_id`` / ``region`` literals."""
-    return df.withColumn(name, F.lit(value))
 
 
 def case_bucket(
@@ -104,14 +99,6 @@ def join(
     """
     r = F.broadcast(right) if broadcast_right else right
     return left.join(r, on=on, how=how)
-
-
-def semi_join(left: DataFrame, right: DataFrame, on) -> DataFrame:
-    return left.join(right, on=on, how="left_semi")
-
-
-def anti_join(left: DataFrame, right: DataFrame, on) -> DataFrame:
-    return left.join(right, on=on, how="left_anti")
 
 
 def top_k(df: DataFrame, order: Sequence[Column], k: int) -> DataFrame:

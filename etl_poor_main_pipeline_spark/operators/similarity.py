@@ -150,53 +150,6 @@ def cosine_self_join(
     )
 
 
-def cosine_self_join_arrow(
-    df: DataFrame,
-    threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    block_col: str = "label",
-) -> DataFrame:
-    """Arrow-native twin of the blocked GEMM self-join: the per-block
-    kernel receives a ``pyarrow.Table`` (``applyInArrow``, Spark 4) and
-    hands columns to numpy with zero pandas materialization — one fewer
-    copy per batch than ``applyInPandas``, same math, same results (the
-    test pins set-equality against the pandas path). Use this form when
-    the kernel is pure-numeric and never needs pandas semantics."""
-    import numpy as np
-    import pyarrow as pa
-
-    def block_pairs(table: "pa.Table") -> "pa.Table":
-        ids = table.column(id_col).to_numpy(zero_copy_only=False)
-        mat = np.asarray(
-            [np.asarray(v, dtype=np.float64) for v in table.column(vec_col).to_pylist()],
-            dtype=np.float64,
-        )
-        norms = np.linalg.norm(mat, axis=1)
-        norms[norms == 0] = 1.0
-        mat = mat / norms[:, None]
-        sims = np.round(mat @ mat.T, 6)
-        iu, ju = np.triu_indices(len(ids), k=1)
-        keep = sims[iu, ju] >= threshold
-        iu, ju = iu[keep], ju[keep]
-        ia, ib = ids[iu], ids[ju]
-        swap = ia > ib
-        return pa.table(
-            {
-                "id_a": np.where(swap, ib, ia),
-                "id_b": np.where(swap, ia, ib),
-                "cosine": sims[iu, ju],
-            }
-        )
-
-    return (
-        df.filter(F.col(block_col).isNotNull())
-        .select(F.col(id_col), F.col(block_col), F.col(vec_col))
-        .groupBy(block_col)
-        .applyInArrow(block_pairs, "id_a long, id_b long, cosine double")
-    )
-
-
 def _cosine_self_join_expr(
     df: DataFrame, threshold: float, id_col: str, vec_col: str
 ) -> DataFrame:
@@ -628,13 +581,16 @@ def ivf_search_indexed(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Top-k over a materialized IVF index: rank the (num_centroids)-row
-    centroid frame on the snapped micro-sim (identical argsort text to
-    ivf_search / the DuckDB oracle), collect the nprobe winning cluster
-    ids (a bounded ≤num_centroids-row collect — probe selection is query
-    planning, not data movement), and statically prune the index scan to
-    those partition directories before the exact re-rank. ``index_path``
-    must come from ``ensure_ivf_index``, which keeps the index's schema."""
+    """Approximate top-k over a materialized IVF index: score the query
+    against the centroids, keep the ``nprobe`` closest clusters, and
+    exact-rank only those clusters' vectors. The (num_centroids)-row
+    centroid frame ranks on the snapped micro-sim (identical argsort text
+    to the DuckDB oracle), the nprobe winning cluster ids are collected
+    (a bounded ≤num_centroids-row collect — probe selection is query
+    planning, not data movement), and the index scan is statically pruned
+    to those partition directories before the exact re-rank.
+    ``index_path`` must come from ``ensure_ivf_index``, which keeps the
+    index's schema."""
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     probe_rows = (
         centroids.withColumn(
@@ -666,32 +622,3 @@ def ivf_search_indexed(
         .limit(k)
     )
 
-
-def ivf_search(
-    assigned: DataFrame,
-    centroids: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate top-k: score the query against centroids, keep the
-    ``nprobe`` closest clusters, exact-rank only those clusters' vectors."""
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    probe = (
-        centroids.withColumn(
-            "_usim",
-            F.floor(cosine_similarity(F.col("centroid"), q) * F.lit(1000000.0) + F.lit(0.5))
-            .cast("bigint"),
-        )
-        .orderBy(F.col("_usim").desc(), F.col("cluster_id").asc())
-        .limit(nprobe)
-        .select("cluster_id")
-    )
-    return (
-        assigned.join(F.broadcast(probe), "cluster_id")
-        .select(F.col(id_col), F.round(cosine_similarity(F.col(vec_col), q), 6).alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
-        .limit(k)
-    )

@@ -9,34 +9,22 @@
 
 Bronze fetches via ``ETL_API_FETCH`` = "module:callable" (the live-HTTP
 hook, mirroring the reference's env-driven API client, utils/config.py:
-25-32); without it, a deterministic offline payload is used so the
-pipeline is runnable with zero external services (the test posture,
-SURVEY §7.5). Each main exits nonzero on failure like the reference's
-raise-on-failure mains.
+25-32), resolved by ``sources.api.resolve_fetch``; without it, a
+deterministic offline payload is used so the pipeline is runnable with
+zero external services (the test posture, SURVEY §7.5). Each main exits
+nonzero on failure like the reference's raise-on-failure mains.
 """
 
 from __future__ import annotations
 
 import argparse
 import datetime as _dt
-import importlib
-import json
 import os
 import sys
 
+from ..sources.api import resolve_fetch
 
 DEFAULT_CITIES = ["Toronto", "Vancouver", "New York", "Chicago", "London"]
-
-
-from ..sources.api import offline_fetch as _offline_fetch  # shared canned payload
-
-
-def _resolve_fetch():
-    spec = os.getenv("ETL_API_FETCH")
-    if not spec:
-        return _offline_fetch
-    mod, _, attr = spec.partition(":")
-    return getattr(importlib.import_module(mod), attr)
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -57,8 +45,9 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = get_spark(app_name=f"pipeline-{args.layer}")
     if args.layer == "bronze":
+        fetch = resolve_fetch(os.getenv("ETL_API_FETCH"))
         n = bronze.run(
-            spark, args.lake_root, args.date_id, args.cities, _resolve_fetch(),
+            spark, args.lake_root, args.date_id, args.cities, fetch,
             single_file=args.single_file,
         )
     elif args.layer == "silver":

@@ -383,12 +383,6 @@ def unbounded_broadcast_hints(df: DataFrame) -> list[str]:
     return offenders
 
 
-def codegen_stage_count(df: DataFrame) -> int:
-    plan = explain_str(df)
-    ids = {line.split("(")[1].split(")")[0] for line in plan.splitlines() if "WholeStageCodegen" in line and "(" in line}
-    return len(ids)
-
-
 def read_schema_report(df: DataFrame) -> dict[str, list[str]]:
     """Column-level scan lineage: which columns each parquet scan actually
     reads (the pruned ReadSchema), keyed by the scan's file location.

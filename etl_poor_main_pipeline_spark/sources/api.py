@@ -12,9 +12,13 @@ Reference behavior being recreated (src/bronze/api_data/analytics__world_weather
 Spark-native design:
 - The fetch is injectable (``fetch_fn``) so tests run on canned JSON and no
   live service is ever contacted.
-- Small key lists fetch on the driver (the reference's shape). At scale the
-  key list is distributed and fetched inside ``mapInPandas`` so a 1M-key
-  fan-out runs on the executors — ``fetch_distributed``.
+- One fetch loop (``fetch_each``) serves every fan-out. Small key lists
+  fetch on the driver (the reference's shape, ``fetch_batch``). At scale
+  the ``weather_api`` DataSource (sources/datasource.py) chunks the key
+  list into input partitions and runs the same loop inside each executor
+  task, so a 1M-key fan-out runs on the executors.
+- A live fetch is named by a ``module:attr`` string (``resolve_fetch``);
+  without one, the deterministic offline payload is used.
 - The flatten is declarative: ``from_json`` with an explicit response
   schema, then nested-field projection — Catalyst-optimizable, no Python in
   the row path.
@@ -23,6 +27,7 @@ Spark-native design:
 from __future__ import annotations
 
 import datetime as _dt
+import importlib
 import json
 from collections.abc import Callable, Iterable, Iterator
 
@@ -63,8 +68,6 @@ WEATHER_RESPONSE_SCHEMA = T.StructType(
     ]
 )
 
-# 6 countries x 5 cities, mirroring the reference's WORLD_CITIES list shape
-# (analytics__world_weather.py:19-32) without copying its literal data.
 FetchFn = Callable[[str], str]
 
 
@@ -90,18 +93,33 @@ def offline_fetch(city: str) -> str:
     )
 
 
-def fetch_batch(keys: Iterable[str], fetch_fn: FetchFn) -> list[str]:
-    """S4 driver-side fan-out: sequential fetch, failed keys dropped
-    (reference drops failures silently, :73-78; we do the same)."""
-    out: list[str] = []
+def resolve_fetch(spec: str | None) -> FetchFn:
+    """The fetch callable named by a ``module:attr`` string (the live-HTTP
+    hook); :func:`offline_fetch` when ``spec`` is empty. Resolving by name
+    rather than pickling a closure lets executor tasks import the fetch
+    themselves."""
+    if not spec:
+        return offline_fetch
+    mod, _, attr = spec.partition(":")
+    return getattr(importlib.import_module(mod), attr)
+
+
+def fetch_each(keys: Iterable[str], fetch_fn: FetchFn) -> Iterator[tuple[str, str]]:
+    """S4 fan-out loop: ``(key, raw)`` for every key whose fetch neither
+    raises nor returns an empty payload. Failed keys are dropped silently,
+    as the reference does (:73-78)."""
     for key in keys:
         try:
             raw = fetch_fn(key)
         except Exception:
             continue
         if raw:
-            out.append(raw)
-    return out
+            yield key, raw
+
+
+def fetch_batch(keys: Iterable[str], fetch_fn: FetchFn) -> list[str]:
+    """S4 driver-side fan-out: sequential fetch, failed keys dropped."""
+    return [raw for _, raw in fetch_each(keys, fetch_fn)]
 
 
 def stamp_retrieved_at(raw_json: str, now: _dt.datetime | None = None) -> str:
@@ -157,35 +175,3 @@ def ingest_batch(
         "date_id", F.lit(date_id)
     )
 
-
-def fetch_distributed(
-    spark: SparkSession,
-    keys: list[str],
-    fetch_fn: FetchFn,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Executor-side fan-out for large key lists (the 100 TB-posture path).
-
-    Distributes the key list and fetches inside ``mapInPandas`` so the HTTP
-    fan-out parallelizes across executors; per-key failures are dropped,
-    matching reference semantics. ``fetch_fn`` must be picklable.
-    """
-    import pandas as pd
-
-    n = num_partitions or max(1, len(keys) // 100)
-    keys_df = _string_frame(spark, "key", keys).repartition(n)
-    out_schema = T.StructType(
-        [T.StructField("key", T.StringType()), T.StructField("raw", T.StringType())]
-    )
-
-    def fetch_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for key in pdf["key"]:
-                try:
-                    rows.append((key, fetch_fn(key)))
-                except Exception:
-                    continue
-            yield pd.DataFrame(rows, columns=["key", "raw"])
-
-    return keys_df.mapInPandas(fetch_part, out_schema)

@@ -9,20 +9,22 @@ fan-out as a first-class reader:
           .load())                      # -> (city string, raw string)
 
 Scale design: ``partitions()`` chunks the key list, and each chunk
-fetches inside its own executor task — the same distribution story as
-``api.fetch_distributed`` but surfaced through ``spark.read`` so the
-ingestion composes with everything a DataFrame source does (schema
-projection, downstream Catalyst optimization, checkpointed retries by
-partition). Failed keys are dropped silently, matching reference
-semantics. The fetch callable resolves executor-side from a
-``module:attr`` option string (no closure pickling); default is the
-deterministic offline payload, so nothing contacts a live service
-unless explicitly configured.
+fetches inside its own executor task — the engine's executor-side API
+fan-out, surfaced through ``spark.read`` so the ingestion composes with
+everything a DataFrame source does (schema projection, filter pushdown,
+downstream Catalyst optimization, checkpointed retries by partition).
+Every task runs ``api.fetch_each``, so failed keys are dropped silently,
+matching reference semantics. The fetch callable resolves executor-side
+from a ``module:attr`` option string (``api.resolve_fetch``, no closure
+pickling); default is the deterministic offline payload, so nothing
+contacts a live service unless explicitly configured.
+
+The same module holds the ``manifest_parquet`` sink: Arrow-batch task
+writes plus a driver-side atomic manifest publish.
 """
 
 from __future__ import annotations
 
-import importlib
 from collections.abc import Iterator, Sequence
 
 from pyspark.sql.datasource import (
@@ -30,8 +32,6 @@ from pyspark.sql.datasource import (
     DataSourceArrowWriter,
     DataSourceReader,
     DataSourceStreamArrowWriter,
-    DataSourceStreamWriter,
-    DataSourceWriter,
     EqualTo,
     Filter,
     In,
@@ -40,19 +40,12 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from .api import offline_fetch
+from .api import fetch_each, resolve_fetch
 
 
 class _CityPartition(InputPartition):
     def __init__(self, cities: Sequence[str]):
         self.cities = list(cities)
-
-
-def _resolve_fetch(spec: str):
-    if not spec:
-        return offline_fetch
-    mod, _, attr = spec.partition(":")
-    return getattr(importlib.import_module(mod), attr)
 
 
 class WeatherApiReader(DataSourceReader):
@@ -84,14 +77,7 @@ class WeatherApiReader(DataSourceReader):
         return chunks or [_CityPartition([])]
 
     def read(self, partition: _CityPartition) -> Iterator[tuple]:
-        fetch = _resolve_fetch(self.fetch_spec)
-        for city in partition.cities:
-            try:
-                raw = fetch(city)
-            except Exception:
-                continue  # reference drops failed fetches silently
-            if raw:
-                yield (city, raw)
+        return fetch_each(partition.cities, resolve_fetch(self.fetch_spec))
 
 
 class WeatherApiStreamReader(SimpleDataSourceStreamReader):
@@ -110,16 +96,7 @@ class WeatherApiStreamReader(SimpleDataSourceStreamReader):
         return {"poll": 0}
 
     def _fetch_all(self) -> list[tuple]:
-        fetch = _resolve_fetch(self.fetch_spec)
-        rows = []
-        for city in self.cities:
-            try:
-                raw = fetch(city)
-            except Exception:
-                continue
-            if raw:
-                rows.append((city, raw))
-        return rows
+        return list(fetch_each(self.cities, resolve_fetch(self.fetch_spec)))
 
     def read(self, start: dict):
         return iter(self._fetch_all()), {"poll": start["poll"] + 1}
@@ -149,140 +126,11 @@ class _PartCommit(WriterCommitMessage):
         self.n_rows = n_rows
 
 
-class ManifestJsonWriter(DataSourceWriter):
-    """Executor-side task writer with a driver-side atomic publish: each
-    task writes its partition to ``part-<uuid>.json`` and returns a
-    commit message; ``commit()`` (driver, runs once, only after every
-    task succeeded) publishes ``_MANIFEST.json`` listing the committed
-    files. Readers resolve the manifest, never the directory — so a
-    half-finished or aborted write is invisible (its orphan part files
-    are listed in no manifest), the Python-source version of the W1
-    idempotent-publish stance — the same files-plus-manifest commit
-    shape Iceberg/Delta use. Paths here are local-FS (the test/laptop
-    deployment); on a cluster the part writes target shared storage
-    (object store multipart upload) and only the manifest publish
-    changes visibility, exactly as below. ``abort()`` best-effort
-    deletes the orphans."""
-
-    def __init__(self, options: dict, overwrite: bool):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("manifest_json requires .option('path', ...) or save(path)")
-        self.overwrite = overwrite
-
-    def write(self, iterator) -> _PartCommit:
-        import json as _json
-        import os
-        import uuid
-
-        os.makedirs(self.path, exist_ok=True)
-        filename = f"part-{uuid.uuid4().hex}.json"
-        n = 0
-        with open(os.path.join(self.path, filename), "w") as f:
-            for row in iterator:
-                f.write(_json.dumps(row.asDict()) + "\n")
-                n += 1
-        return _PartCommit(filename, n)
-
-    def commit(self, messages) -> None:
-        import json as _json
-        import os
-
-        manifest = {
-            "files": sorted(m.filename for m in messages),
-            "n_rows": sum(m.n_rows for m in messages),
-        }
-        tmp = os.path.join(self.path, "_MANIFEST.json.tmp")
-        with open(tmp, "w") as f:
-            _json.dump(manifest, f)
-        os.replace(tmp, os.path.join(self.path, "_MANIFEST.json"))
-
-    def abort(self, messages) -> None:
-        import contextlib
-        import os
-
-        for m in messages:
-            if m is None:
-                continue
-            with contextlib.suppress(OSError):
-                os.remove(os.path.join(self.path, m.filename))
-
-
-class ManifestJsonStreamWriter(DataSourceStreamWriter):
-    """Streaming twin of ``ManifestJsonWriter``: each micro-batch's tasks
-    write ``part-<uuid>.json`` files executor-side; ``commit(messages,
-    batchId)`` (driver, after all tasks of the batch succeed) atomically
-    publishes ``_MANIFEST-<batchId>.json``. Visibility is manifest-only,
-    so a crash mid-batch leaves unlisted orphans, and a *replayed* batch
-    (restart between sink write and checkpoint commit) ``os.replace``s its
-    own manifest — the replay's files win, the failed attempt's orphans
-    stay unlisted. That manifest-swap is the whole exactly-once story:
-    at-least-once micro-batch delivery + idempotent per-batch publish,
-    the same stance as the reference's delete-and-insert (W1,
-    utils/duckdb_utils.py:61-190) and the batch manifest sink. On a
-    cluster only the part-file target (object store) changes."""
-
-    def __init__(self, options: dict):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("manifest_json requires .option('path', ...)")
-
-    def write(self, iterator) -> _PartCommit:
-        import json as _json
-        import os
-        import uuid
-
-        os.makedirs(self.path, exist_ok=True)
-        filename = f"part-{uuid.uuid4().hex}.json"
-        n = 0
-        with open(os.path.join(self.path, filename), "w") as f:
-            for row in iterator:
-                f.write(_json.dumps(row.asDict()) + "\n")
-                n += 1
-        return _PartCommit(filename, n)
-
-    def commit(self, messages, batchId: int) -> None:
-        import json as _json
-        import os
-
-        manifest = {
-            "batch_id": batchId,
-            "files": sorted(m.filename for m in messages),
-            "n_rows": sum(m.n_rows for m in messages),
-        }
-        tmp = os.path.join(self.path, f"_MANIFEST-{batchId}.json.tmp")
-        with open(tmp, "w") as f:
-            _json.dump(manifest, f)
-        os.replace(tmp, os.path.join(self.path, f"_MANIFEST-{batchId}.json"))
-
-    def abort(self, messages, batchId: int) -> None:
-        import contextlib
-        import os
-
-        for m in messages:
-            if m is None:
-                continue
-            with contextlib.suppress(OSError):
-                os.remove(os.path.join(self.path, m.filename))
-
-
-class ManifestJsonDataSource(DataSource):
-    @classmethod
-    def name(cls) -> str:
-        return "manifest_json"
-
-    def writer(self, schema, overwrite: bool) -> ManifestJsonWriter:
-        return ManifestJsonWriter(self.options, overwrite)
-
-    def streamWriter(self, schema, overwrite: bool) -> ManifestJsonStreamWriter:
-        return ManifestJsonStreamWriter(self.options)
-
-
 def _write_arrow_part(path: str, iterator) -> _PartCommit:
     """Shared Arrow-batch task write: concatenate the task's RecordBatches
     into one parquet part file. Vectorized end to end (Arrow transfer from
     the JVM, columnar parquet encode) — no per-row Python, which is the
-    ~10-100x difference vs the Row-iterator sink at real row counts."""
+    ~10-100x difference vs a Row-iterator sink at real row counts."""
     import os
     import uuid
 
@@ -324,10 +172,19 @@ def _abort_parts(path: str, messages) -> None:
 
 
 class ManifestParquetWriter(DataSourceArrowWriter):
-    """Arrow-batch batch writer: parquet part files + atomic ``_MANIFEST.json``
-    publish — the same commit protocol as ``ManifestJsonWriter`` on the
-    vectorized path (the JSON sink demonstrates the Row protocol; this is
-    what you deploy)."""
+    """Executor-side task writer with a driver-side atomic publish: each
+    task writes its Arrow batches to ``part-<uuid>.parquet`` and returns a
+    commit message; ``commit()`` (driver, runs once, only after every
+    task succeeded) publishes ``_MANIFEST.json`` listing the committed
+    files. Readers resolve the manifest, never the directory — so a
+    half-finished or aborted write is invisible (its orphan part files
+    are listed in no manifest), the Python-source version of the W1
+    idempotent-publish stance — the same files-plus-manifest commit
+    shape Iceberg/Delta use. Paths here are local-FS (the test/laptop
+    deployment); on a cluster the part writes target shared storage
+    (object store multipart upload) and only the manifest publish
+    changes visibility, exactly as below. ``abort()`` best-effort
+    deletes the orphans."""
 
     def __init__(self, options: dict):
         self.path = options.get("path")
@@ -345,11 +202,20 @@ class ManifestParquetWriter(DataSourceArrowWriter):
 
 
 class ManifestParquetStreamWriter(DataSourceStreamArrowWriter):
-    """Arrow-batch streaming writer with the per-batch manifest commit:
-    identical exactly-once story to ``ManifestJsonStreamWriter``
-    (at-least-once micro-batch delivery + idempotent ``_MANIFEST-<batch>``
-    swap), but each task writes its RecordBatches as a parquet part —
-    columnar, exact doubles, and the read-back needs no inference scan."""
+    """Streaming twin of ``ManifestParquetWriter``: each micro-batch's
+    tasks write their RecordBatches as ``part-<uuid>.parquet`` files
+    executor-side (columnar, exact doubles, and the read-back needs no
+    inference scan); ``commit(messages, batchId)`` (driver, after all
+    tasks of the batch succeed) atomically publishes
+    ``_MANIFEST-<batchId>.json``. Visibility is manifest-only, so a crash
+    mid-batch leaves unlisted orphans, and a *replayed* batch (restart
+    between sink write and checkpoint commit) ``os.replace``s its own
+    manifest — the replay's files win, the failed attempt's orphans stay
+    unlisted. That manifest swap is the whole exactly-once story:
+    at-least-once micro-batch delivery + idempotent per-batch publish,
+    the same stance as the reference's delete-and-insert (W1,
+    utils/duckdb_utils.py:61-190) and the batch manifest sink. On a
+    cluster only the part-file target (object store) changes."""
 
     def __init__(self, options: dict):
         self.path = options.get("path")
@@ -407,42 +273,6 @@ def read_manifest_parquet(spark, path: str, as_of_batch: int | None = None):
 def register_manifest_parquet_sink(spark) -> None:
     """Idempotent registration of the ``manifest_parquet`` sink format."""
     spark.dataSource.register(ManifestParquetDataSource)
-
-
-def read_manifest_json(spark, path: str):
-    """Read back a manifest_json dataset: only files the manifest lists —
-    uncommitted part files are invisible by construction."""
-    import json as _json
-    import os
-
-    with open(os.path.join(path, "_MANIFEST.json")) as f:
-        manifest = _json.load(f)
-    files = [os.path.join(path, fn) for fn in manifest["files"]]
-    return spark.read.json(files)
-
-
-def read_manifest_stream_output(spark, path: str, schema: str | None = None):
-    """Read back a streamed manifest_json dataset: the union of every
-    committed batch manifest's files. Orphan part files (aborted or
-    superseded-by-replay batches) appear in no manifest and are invisible.
-    Pass ``schema`` (DDL string) to skip the inference scan — at scale an
-    extra full pass over the sink output just to guess types is a real
-    cost, and the writer's schema is known."""
-    import glob
-    import json as _json
-    import os
-
-    files: list[str] = []
-    for mf in sorted(glob.glob(os.path.join(path, "_MANIFEST-*.json"))):
-        with open(mf) as f:
-            files.extend(os.path.join(path, fn) for fn in _json.load(f)["files"])
-    reader = spark.read.schema(schema) if schema else spark.read
-    return reader.json(files)
-
-
-def register_manifest_sink(spark) -> None:
-    """Idempotent registration of the ``manifest_json`` sink format."""
-    spark.dataSource.register(ManifestJsonDataSource)
 
 
 def register_weather_source(spark) -> None:

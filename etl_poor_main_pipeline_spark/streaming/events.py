@@ -13,7 +13,6 @@ the same input (the strongest check available for unbounded operators).
 
 from __future__ import annotations
 
-import datetime as _dt
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
@@ -122,78 +121,6 @@ def sessionize_stream(
             outputMode="update",
             timeoutConf="NoTimeout",
         )
-    )
-
-
-def sessionize_stream_tws(
-    events: DataFrame,
-    gap_minutes: int = 30,
-) -> DataFrame:
-    """Gap sessionization on ``transformWithStateInPandas`` — Spark 4's
-    successor to ``applyInPandasWithState`` (typed value/list/map state,
-    timers, TTL). Same semantics as ``sessionize_stream``; kept as the
-    forward-API twin. The Python side of this API speaks protobuf to a
-    state server, so it needs the ``protobuf`` package and the RocksDB
-    state store provider — both standard on a provisioned cluster image;
-    absent here, a clear capability error is raised (same gating stance
-    as the Avro/Delta readers)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as exc:
-        raise NotImplementedError(
-            "transformWithStateInPandas needs the 'protobuf' Python package "
-            "(pip install protobuf) and "
-            "spark.sql.streaming.stateStore.providerClass="
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider; "
-            "protobuf is not installed in this environment — use "
-            "sessionize_stream (applyInPandasWithState) instead"
-        ) from exc
-
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    gap_us = gap_minutes * 60 * 1_000_000
-
-    class SessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "sess", "last_ts_us long, session_count long, events_in_session long"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            (user_id,) = key
-            if self._state.exists():
-                last_ts_us, sessions, events_n = self._state.get()
-            else:
-                last_ts_us, sessions, events_n = None, 0, 0
-            for pdf in rows:
-                pdf = pdf.sort_values(["ts", "event_id"])
-                for ts in pdf["ts"]:
-                    ts_us = int(ts.value // 1000)
-                    if last_ts_us is None or ts_us - last_ts_us > gap_us:
-                        sessions += 1
-                    last_ts_us = ts_us
-                    events_n += 1
-            self._state.update((last_ts_us, sessions, events_n))
-            yield pd.DataFrame(
-                {"user_id": [user_id], "n_sessions": [sessions], "n_events": [events_n]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    events.sparkSession.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    return events.groupBy("user_id").transformWithStateInPandas(
-        SessionProcessor(),
-        outputStructType=SESSION_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
     )
 
 
@@ -375,23 +302,3 @@ def drain_to_table(
             spark.conf.set("spark.sql.shuffle.partitions", old)
     return spark.table(name)
 
-
-def run_to_memory(stream_df: DataFrame, query_name: str) -> DataFrame:
-    """Drain all available input into an in-memory table (test helper):
-    trigger(availableNow) processes everything then stops; returns the
-    drained result table (like ``drain_to_table``)."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("update" if stream_df.isStreaming else "append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = q.awaitTermination(300)
-    if q.isActive:
-        q.stop()
-    if q.exception() is not None:
-        raise q.exception()
-    if not finished:
-        raise TimeoutError(f"streaming drain {query_name} did not finish within 300s")
-    return stream_df.sparkSession.table(query_name)

@@ -2,11 +2,8 @@
 
 import json
 
-import pytest
-
 from etl_poor_main_pipeline_spark.sources.api import (
     fetch_batch,
-    fetch_distributed,
     flatten_weather_json,
     ingest_batch,
 )
@@ -65,22 +62,6 @@ def test_ingest_batch_stamps_partition(spark):
 def test_ingest_batch_all_failed(spark):
     out = ingest_batch(spark, ["FailCity"], lambda k: fake_fetch("FailCity"), "2026-01-01")
     assert out.count() == 0
-
-
-def test_fetch_distributed_executor_side(spark):
-    # the 100 TB path: fan-out inside mapInPandas, failures dropped per key.
-    # fetch fn defined locally so cloudpickle ships it by value — executor
-    # workers can't import the test module.
-    def local_fetch(key: str) -> str:
-        if key == "FailCity":
-            raise RuntimeError("HTTP 500")
-        return '{"name": "' + key + '"}'
-
-    keys = [f"city{i}" for i in range(20)] + ["FailCity"]
-    out = fetch_distributed(spark, keys, local_fetch, num_partitions=4)
-    rows = out.collect()
-    assert len(rows) == 20
-    assert all(r.raw for r in rows)
 
 
 def test_custom_datasource_distributed_fetch(spark):
@@ -180,83 +161,22 @@ def test_custom_datasource_streaming_polls(spark):
     assert {r.city for r in rows} == set(cities)
 
 
-def test_manifest_json_sink_commit_protocol(spark, tmp_path):
-    """Custom Python sink: tasks write part files, the driver commit
-    publishes a manifest, and readers resolve the manifest only — so
-    part files without a manifest entry are invisible."""
-    import json
+def _drop_orphan_part(out: str) -> None:
+    """An orphan part file (a simulated failed or aborted task): a valid
+    parquet file in the output directory that no manifest lists."""
     import os
 
-    from etl_poor_main_pipeline_spark.sources.datasource import (
-        read_manifest_json,
-        register_manifest_sink,
-    )
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    register_manifest_sink(spark)
-    out = str(tmp_path / "manifest_out")
-    df = spark.range(100).selectExpr("id", "id * 2 AS doubled").repartition(4)
-    df.write.format("manifest_json").mode("append").option("path", out).save()
-
-    manifest = json.load(open(os.path.join(out, "_MANIFEST.json")))
-    assert manifest["n_rows"] == 100
-    assert len(manifest["files"]) == 4
-    # an orphan part file (simulated failed/aborted task) stays invisible
-    with open(os.path.join(out, "part-orphan.json"), "w") as f:
-        f.write('{"id": 999, "doubled": 1998}\n')
-    back = read_manifest_json(spark, out)
-    assert back.count() == 100
-    assert back.agg({"doubled": "sum"}).head()[0] == sum(2 * i for i in range(100))
-
-
-def test_manifest_json_stream_writer(spark, tmp_path):
-    """Streaming twin of the manifest sink: a rate-source stream writes
-    micro-batches through DataSourceStreamWriter; every drained batch has
-    its own atomic manifest, orphans stay invisible, and the read-back
-    equals exactly the committed rows."""
-    import glob
-    import json
-    import os
-
-    from etl_poor_main_pipeline_spark.sources.datasource import (
-        read_manifest_stream_output,
-        register_manifest_sink,
-    )
-
-    register_manifest_sink(spark)
-    out = str(tmp_path / "stream_out")
-    src = str(tmp_path / "stream_src")
-    os.makedirs(src)
-    with open(os.path.join(src, "a.json"), "w") as f:
-        for i in range(50):
-            f.write(json.dumps({"id": i}) + "\n")
-    stream = spark.readStream.schema("id long").json(src)
-    q = (
-        stream.writeStream.format("manifest_json")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    manifests = sorted(glob.glob(os.path.join(out, "_MANIFEST-*.json")))
-    assert manifests, "stream commit published no batch manifest"
-    listed = json.load(open(manifests[0]))
-    assert listed["n_rows"] == 50
-    # orphan part file (aborted attempt) is listed in no manifest -> invisible
-    with open(os.path.join(out, "part-orphan.json"), "w") as f:
-        f.write('{"id": 999}\n')
-    back = read_manifest_stream_output(spark, out)
-    assert back.count() == 50
-    assert back.agg({"id": "max"}).head()[0] == 49
+    pq.write_table(pa.table({"id": [999]}), os.path.join(out, "part-orphan.parquet"))
 
 
 def test_manifest_parquet_arrow_writers(spark, tmp_path):
     """Arrow-batch manifest sink, batch and streaming: parquet parts +
-    manifest-scoped visibility, exact double round-trip, and the batch
-    writer goes through DataSourceArrowWriter (vectorized, no per-row
-    Python)."""
+    manifest-scoped visibility (an orphan part file stays invisible),
+    exact double round-trip, and the batch writer goes through
+    DataSourceArrowWriter (vectorized, no per-row Python)."""
     import glob
     import json
     import os
@@ -273,6 +193,8 @@ def test_manifest_parquet_arrow_writers(spark, tmp_path):
     df.write.format("manifest_parquet").mode("append").option("path", out_b).save()
     manifest = json.load(open(os.path.join(out_b, "_MANIFEST.json")))
     assert manifest["n_rows"] == 1000
+    assert len(manifest["files"]) == 4
+    _drop_orphan_part(out_b)
     back = read_manifest_parquet(spark, out_b)
     assert back.count() == 1000
     # exact double round-trip through Arrow -> parquet
@@ -295,7 +217,10 @@ def test_manifest_parquet_arrow_writers(spark, tmp_path):
         .start()
     )
     q.awaitTermination(120)
-    assert glob.glob(os.path.join(out_s, "_MANIFEST-*.json"))
+    manifests = sorted(glob.glob(os.path.join(out_s, "_MANIFEST-*.json")))
+    assert manifests, "stream commit published no batch manifest"
+    assert json.load(open(manifests[0]))["n_rows"] == 50
+    _drop_orphan_part(out_s)
     sback = read_manifest_parquet(spark, out_s)
     assert sback.count() == 50 and sback.agg({"id": "max"}).head()[0] == 49
 

@@ -103,3 +103,48 @@ def test_tool_imports_and_exposes_main(path):
     spec.loader.exec_module(mod)
     if path.name != "harness.py":  # the shared library, not a tool
         assert callable(getattr(mod, "main", None))
+
+
+@pytest.mark.parametrize(
+    "tool,files,argv",
+    [
+        ("scaling", ("SCALING.json", "SCALING.md"), ("--factors", "1", "--sf-dir", "SF")),
+        ("ab_fastpath", ("AB_FASTPATH.json", "RATIO.md"), ("SF", "filter_eq")),
+    ],
+)
+def test_tool_refuses_run_on_another_corpus(tool, files, argv, tmp_path, monkeypatch):
+    """Measuring tools merge a run into their stored table, so a run on a
+    corpus other than the stored one exits non-zero before Spark starts
+    and leaves both files as they were; a run on the stored corpus gets
+    past the check (to the session start, stubbed here)."""
+    import json
+    import shutil
+    import sys
+
+    mod = importlib.import_module(f"tools.{tool}")
+    for f in files:
+        shutil.copy(REPO / f, tmp_path / f)
+    before = {f: (tmp_path / f).read_bytes() for f in files}
+    monkeypatch.setattr(mod, "REPO", str(tmp_path))
+    if hasattr(mod, "JSON_PATH"):
+        monkeypatch.setattr(mod, "JSON_PATH", str(tmp_path / files[0]))
+
+    def no_spark(*_a, **_k):
+        raise AssertionError("Spark started")
+
+    monkeypatch.setattr(harness, "session", no_spark)
+    stored = json.loads(before[files[0]])["sf_dir"]
+    other = stored.rstrip("/") + "_other"
+
+    def run_at(sf_dir):
+        monkeypatch.setattr(sys, "argv", [tool] + [sf_dir if a == "SF" else a for a in argv])
+        mod.main()
+
+    with pytest.raises(SystemExit) as refused:
+        run_at(other)
+    assert refused.value.code not in (0, None)
+    assert {f: (tmp_path / f).read_bytes() for f in files} == before
+
+    with pytest.raises(AssertionError, match="Spark started"):
+        run_at(stored)
+    assert {f: (tmp_path / f).read_bytes() for f in files} == before

@@ -3,8 +3,9 @@ from pyspark.sql import functions as F
 
 from etl_poor_main_pipeline_spark.operators.similarity import (
     cosine_self_join,
+    ensure_ivf_index,
     ivf_build,
-    ivf_search,
+    ivf_search_indexed,
     topk_cosine,
 )
 from etl_poor_main_pipeline_spark.sources.read import load_table
@@ -34,8 +35,12 @@ def test_ivf_recall_at_10(spark):
     e = load_table(spark, SF, "embeddings")
     q = list(e.filter(F.col("vec_id") == 0).head().embedding)
     exact = {r.vec_id for r in topk_cosine(e.filter(F.col("vec_id") != 0), q, k=10).collect()}
-    assigned, cents = ivf_build(e.filter(F.col("vec_id") != 0), num_centroids=16)
-    approx = {r.vec_id for r in ivf_search(assigned, cents, q, k=10, nprobe=8).collect()}
+    _, cents = ivf_build(e.filter(F.col("vec_id") != 0), num_centroids=16)
+    index = ensure_ivf_index(spark, SF, num_centroids=16)
+    approx = {
+        r.vec_id
+        for r in ivf_search_indexed(spark, index, cents, q, k=10, nprobe=8).collect()
+    }
     # coarse quantization with random-ish fixture vectors: expect >=40% overlap
     assert len(exact & approx) >= 4
 
@@ -236,20 +241,3 @@ def test_pq_training_monotonically_reduces_distortion(spark):
         d_prev = d
     # training must improve materially over the seed codebook overall
     assert d_prev < 0.80 * pq_distortion(e, pq_codebook(e))
-
-
-def test_arrow_self_join_matches_pandas_path(spark):
-    """applyInArrow GEMM kernel must return exactly the applyInPandas
-    result — same blocks, same rounded cosines."""
-    from etl_poor_main_pipeline_spark.operators.similarity import cosine_self_join_arrow
-
-    e = load_table(spark, SF, "embeddings")
-    pandas_set = {
-        (r.id_a, r.id_b, r.cosine)
-        for r in cosine_self_join(e, threshold=0.35, block_col="label").collect()
-    }
-    arrow_set = {
-        (r.id_a, r.id_b, r.cosine)
-        for r in cosine_self_join_arrow(e, threshold=0.35, block_col="label").collect()
-    }
-    assert arrow_set == pandas_set and len(arrow_set) > 0

@@ -254,39 +254,6 @@ def test_stream_reader_probes_tz_nanos_and_directory_corpora(spark, tmp_path):
     assert rows[1].year == 2023
 
 
-def test_tws_sessionizer_capability_gate(spark):
-    """transformWithStateInPandas needs protobuf + RocksDB state store;
-    absent deps must surface as a clear capability error (and with deps
-    present the operator must match the applyInPandasWithState twin)."""
-    import pytest
-
-    from etl_poor_main_pipeline_spark.streaming.events import (
-        drain_to_table,
-        read_event_stream_parquet,
-        sessionize_stream,
-        sessionize_stream_tws,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            sessionize_stream_tws(read_event_stream_parquet(spark, sf))
-        return
-    tws = drain_to_table(
-        sessionize_stream_tws(read_event_stream_parquet(spark, sf)),
-        "update",
-        state_partitions=8,
-    )
-    aip = drain_to_table(
-        sessionize_stream(read_event_stream_parquet(spark, sf)),
-        "update",
-        state_partitions=8,
-    )
-    assert {tuple(r) for r in tws.collect()} == {tuple(r) for r in aip.collect()}
-
-
 def test_watermark_drops_late_rows(spark, tmp_path):
     """Watermark semantics pinned end to end: a row arriving in a later
     micro-batch with an event time older than (max seen ts - watermark)

@@ -22,8 +22,10 @@ so the AQE_KEEP_QUERIES opt-outs are measured postured too; it uses
 process-wide posture semantics (posture active during build AND action,
 so eager checkpoint loops feel it). A subset run merges
 into the existing AB_FASTPATH.json so per-wave top-ups don't clobber the
-full table. `gate` records the harness policy for the row: 'aqe' if the
-name is in fastpath.AQE_KEEP_QUERIES, else 'posture'.
+full table. The file records its corpus (``sf_dir``); a run on a
+different corpus is refused before Spark starts, so no row carries
+another corpus' label. `gate` records the harness policy for the row:
+'aqe' if the name is in fastpath.AQE_KEEP_QUERIES, else 'posture'.
 
 Writes AB_FASTPATH.json and rewrites the '## fastpath A/B' section at the
 end of RATIO.md.
@@ -104,14 +106,21 @@ def write_outputs(rows: dict, sf_dir: str) -> None:
 
 def main() -> None:
     args = sys.argv[1:]
-    if args and args[0] == "--rewrite":
+    store = {"sf_dir": None, "rows": {}}
+    if os.path.exists(JSON_PATH):
         with open(JSON_PATH) as fh:
             store = json.load(fh)
-        write_outputs(store["rows"], store.get("sf_dir", "?"))
+    if args and args[0] == "--rewrite":
+        write_outputs(store["rows"], store["sf_dir"])
         return
 
     sf_dir = args[0] if args else "/root/testdata/sf0.1"
     only = set(args[1:])
+    if store["rows"] and store["sf_dir"] != sf_dir:
+        sys.exit(
+            f"ab: AB_FASTPATH.json holds {store['sf_dir']} rows; refusing a "
+            f"{sf_dir} run (move AB_FASTPATH.json aside to start a new table)"
+        )
 
     from etl_poor_main_pipeline_spark.registry import queries
 
@@ -126,10 +135,8 @@ def main() -> None:
         )
         return round(e, 3)
 
-    rows: dict[str, dict] = {}
-    if only and os.path.exists(JSON_PATH):  # subset top-up: merge into prior
-        with open(JSON_PATH) as fh:
-            rows = json.load(fh)["rows"]
+    # a subset top-up merges into the stored table; a full run replaces it
+    rows: dict[str, dict] = store["rows"] if only else {}
     for name, fn in qs.items():
         if only and name not in only:
             continue

@@ -34,8 +34,11 @@ Usage (idle host only — same contention caveat as bench.py):
     python tools/scaling.py [--factors 1,4,16] [--sf-dir /root/testdata/sf0.1]
     python tools/scaling.py --regen     # rewrite the table from SCALING.json
 
-Results merge into SCALING.json; the tool rewrites only SCALING.md's
-"Measured walls" section, and the readings below it are hand-written.
+Results merge into SCALING.json, which records the corpus they were
+measured on (``sf_dir``); a run on a different corpus is refused before
+Spark starts, so merged rows never carry another corpus' label. The tool
+rewrites only SCALING.md's "Measured walls" section, and the readings
+below it are hand-written.
 """
 
 from __future__ import annotations
@@ -160,9 +163,17 @@ def main() -> None:
         "SCALING.json",
     )
     args = ap.parse_args()
+    store = _load_store()
     if args.regen:
-        _write_outputs(args.sf_dir, {}, {})
+        _write_outputs(store, {}, {})
         return
+    if store["results"] and store["sf_dir"] != args.sf_dir:
+        sys.exit(
+            f"scaling: SCALING.json holds {store['sf_dir']} results; refusing "
+            f"to merge a {args.sf_dir} run (move SCALING.json aside to start "
+            "a new table)"
+        )
+    store["sf_dir"] = args.sf_dir
     factors = [int(f) for f in args.factors.split(",")]
     qnames = args.queries.split(",") if args.queries else QUERIES
 
@@ -219,19 +230,25 @@ def main() -> None:
             )
         con.close()
 
-    _write_outputs(args.sf_dir, results, postures)
+    _write_outputs(store, results, postures)
     shutil.rmtree(root, ignore_errors=True)
 
 
-def _write_outputs(sf_dir: str, results: dict, postures: dict) -> None:
-    """Merge this run into SCALING.json (so x64 extension runs don't
-    clobber the x1/x4/x16 table), then rewrite SCALING.md's table section
-    from the merged store; the hand-written readings below it stay."""
+def _load_store() -> dict:
+    """SCALING.json, or an empty store when there is none yet."""
     json_path = os.path.join(REPO, "SCALING.json")
-    store = {"factors": [], "postures": {}, "results": {}}
-    if os.path.exists(json_path):
-        with open(json_path) as fh:
-            store = json.load(fh)
+    if not os.path.exists(json_path):
+        return {"sf_dir": None, "factors": [], "postures": {}, "results": {}}
+    with open(json_path) as fh:
+        return json.load(fh)
+
+
+def _write_outputs(store: dict, results: dict, postures: dict) -> None:
+    """Merge this run into the store and SCALING.json (so x64 extension
+    runs don't clobber the x1/x4/x16 table), then rewrite SCALING.md's
+    table section from the merged store; the hand-written readings below
+    it stay."""
+    json_path = os.path.join(REPO, "SCALING.json")
     all_factors = sorted(set(int(f) for f in store["factors"]) | set(postures))
     store["factors"] = all_factors
     store["postures"].update({str(f): p for f, p in postures.items()})
@@ -244,7 +261,7 @@ def _write_outputs(sf_dir: str, results: dict, postures: dict) -> None:
     lines = [
         f"{TABLE_HEADING} (tools/scaling.py)",
         "",
-        f"Corpus: {sf_dir} key-offset-replicated x{all_factors} "
+        f"Corpus: {store['sf_dir']} key-offset-replicated x{all_factors} "
         "(postures: "
         + ", ".join(
             f"x{f}={store['postures'].get(str(f), '?')}" for f in all_factors
