@@ -18,30 +18,18 @@ def _env(name: str, default: str) -> str:
 
 @dataclass(frozen=True)
 class EngineConfig:
-    """All knobs in one place.
+    """The knobs the default session reads.
 
-    lake_root     root URI for lake tables ((database, table) -> path, the
-                  analogue of utils/config.py:14-28 ``get_s3_path``). Local
-                  dir by default; any Hadoop-FS URI (s3a://, hdfs://) works.
-    testdata_dir  driver-generated parquet corpus (TESTDATA.md).
     cpus          local parallelism for the default session.
     shuffle_partitions
                   spark.sql.shuffle.partitions. On a real cluster size this
                   to ~2-3x total cores or rely on AQE coalescing; 32 locally.
-    jdbc_url      serving-layer JDBC URL (gold). Empty -> JDBC sink disabled;
-                  tests use sqlite-free in-memory stand-ins instead.
     """
 
-    lake_root: str = field(default_factory=lambda: _env("ENGINE_LAKE_ROOT", "/tmp/engine_lake"))
-    testdata_dir: str = field(
-        default_factory=lambda: _env("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    )
     cpus: int = field(default_factory=lambda: int(_env("SPARK_GRAFT_CPUS", "32")))
     shuffle_partitions: int = field(
         default_factory=lambda: int(_env("ENGINE_SHUFFLE_PARTITIONS", "32"))
     )
-    jdbc_url: str = field(default_factory=lambda: _env("ENGINE_JDBC_URL", ""))
-    jdbc_schema: str = field(default_factory=lambda: _env("ENGINE_JDBC_SCHEMA", "dashboard"))
 
 
 def load_config() -> EngineConfig:

@@ -7,8 +7,9 @@ Scale notes (100 TB posture):
 - MinHash+LSH: signatures are computed scan-side (pure expressions), then
   only (band_hash, doc_id) pairs shuffle — candidate generation never
   shuffles document text. Pair verification joins text back by doc_id.
-- SimHash: 64-bit signature per doc; near-dup = signatures matching on
-  rotated prefix buckets. All integer ops, JVM-side.
+- SimHash: 60-bit signature per doc; near-dup = signatures matching on
+  one of k+1 signature blocks, then a Hamming check. All integer ops,
+  JVM-side.
 """
 
 from __future__ import annotations
@@ -85,18 +86,6 @@ def spread(df: DataFrame) -> DataFrame:
     return df
 
 
-def exact_dedup(df: DataFrame, subset: list[str], id_col: str = "doc_id") -> DataFrame:
-    """X1 exact dedup, deterministic representative = min id per key group.
-
-    ``dropDuplicates`` keeps an arbitrary row; taking ``min(id)`` per group
-    makes the result reproducible and oracle-checkable, at the same cost
-    (one hash aggregate).
-    """
-    others = [c for c in df.columns if c not in subset and c != id_col]
-    agg = [F.min(F.col(id_col)).alias(id_col)] + [F.min_by(F.col(c), F.col(id_col)).alias(c) for c in others]
-    return df.groupBy(*[F.col(c) for c in subset]).agg(*agg)
-
-
 def fingerprint_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Exact near-canonical dedup: collapse on md5(normalized text)."""
     fp = df.withColumn("fingerprint", fingerprint_md5(text_col))
@@ -146,7 +135,7 @@ def minhash_signatures(
     # non-trivial aliases alone, so tokenization/hashing runs once per row
     with_hashes = spread(df).select(*keep_cols, hashes.alias("_hs"))
     # ONE aggregate carrying a num_hashes-wide running-min vector (same
-    # trick as simhash_signatures): the per-function shape (num_hashes
+    # trick as simhash_signatures_portable): the per-function shape (num_hashes
     # separate array_min(transform) branches) was value-identical but
     # compiled num_hashes codegen loops — ~2s Janino time billed to the
     # first run. Coefficient arrays are constant-folded literals. A doc
@@ -536,45 +525,17 @@ def connected_components(
     return labels.select(F.col("node").alias(id_col), "component")
 
 
-def simhash_signatures(
-    df: DataFrame, text_col: str = "text", bits: int = 64, id_cols: list[str] | None = None
-) -> DataFrame:
-    """64-bit SimHash per document from token hashes.
-
-    Shape: entirely map-side — token-hash array per row, then ONE
-    aggregate() carrying a ``bits``-wide vote vector ((x >> i) & 1 per
-    bit, +1/-1), folded into a single long. The earlier per-bit shape
-    (64 separate aggregate() loops) was bit-identical but ~9x slower:
-    Janino compiles 64 loop bodies and re-traverses the token array per
-    bit, vs one loop with an array accumulator here. No explode, no
-    shuffle; signatures stream out of the scan stage.
-    """
-    keep_cols = id_cols if id_cols else df.columns
-    hashes = F.transform(tokens_expr(text_col), lambda t: F.xxhash64(t))
-    with_hashes = spread(df).select(*keep_cols, hashes.alias("_hs"))
-    # (x >> i) & 1 extracts bit i even at i=63 (sign-extension survives
-    # the & 1); shiftleft(1L, 63) wraps to the sign bit, matching the
-    # signed-long encoding of the old implementation.
-    sig_sql = f"""
-    aggregate(
-      zip_with(
-        aggregate(_hs, array_repeat(0, {bits}),
-          (acc, x) -> zip_with(acc,
-            transform(sequence(0, {bits - 1}),
-                      i -> CASE WHEN ((x >> i) & 1) = 1 THEN 1 ELSE -1 END),
-            (a, b) -> a + b)),
-        sequence(0, {bits - 1}), (v, i) -> struct(v, i)),
-      0L,
-      (acc, s) -> acc | CASE WHEN s.v > 0 THEN shiftleft(1L, s.i) ELSE 0L END
-    )"""
-    return with_hashes.select(*keep_cols, F.expr(sig_sql).alias("simhash"))
-
-
 def simhash_signatures_portable(
     df: DataFrame, text_col: str = "text", bits: int = 60, id_cols: list[str] | None = None
 ) -> DataFrame:
-    """Portable SimHash: same one-aggregate vote-vector shape as
-    ``simhash_signatures``, but cross-engine deterministic.
+    """Portable SimHash per document, cross-engine deterministic.
+
+    Shape: entirely map-side — token-hash array per row, then ONE
+    aggregate() carrying a ``bits``-wide vote vector (+1/-1 per bit),
+    folded into a single long. A per-bit shape (one aggregate() loop per
+    bit) is bit-identical but ~9x slower: Janino compiles one loop body
+    per bit and re-traverses the token array each time. No explode, no
+    shuffle; signatures stream out of the scan stage.
 
     Token hash is the polynomial hash (``poly_hash_expr``, 31 bits), so
     per-signature-bit randomness comes from a fixed-seed rehash family

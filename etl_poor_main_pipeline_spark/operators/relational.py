@@ -2,7 +2,6 @@
 the standard completion surface (§2.6) as thin idiomatic-Spark wrappers.
 
 Reference citations:
-- P1 projection: analytics__us_weather.py:35-43
 - P2 literal column: analytics__us_weather.py:44 (a plain ``F.lit``)
 - P3 CASE bucketing: analytics__us_weather.py:45-50
 - P4 equality filter: analytics__us_weather.py:52
@@ -22,11 +21,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def project(df: DataFrame, *cols: str | Column) -> DataFrame:
-    """P1 named-column projection (prunes the parquet scan via Catalyst)."""
-    return df.select(*cols)
 
 
 def case_bucket(
@@ -99,12 +93,6 @@ def join(
     """
     r = F.broadcast(right) if broadcast_right else right
     return left.join(r, on=on, how=how)
-
-
-def top_k(df: DataFrame, order: Sequence[Column], k: int) -> DataFrame:
-    """ORDER BY ... LIMIT k. Spark plans this as TakeOrderedAndProject — a
-    per-partition top-k + driver merge, no global sort shuffle."""
-    return df.orderBy(*order).limit(k)
 
 
 def salted_join(

@@ -541,11 +541,11 @@ def ensure_ivf_index(
     the index path. Query vector id 0 is excluded from the index (the
     search convention of q_ivf_search)."""
     import os
-    import tempfile
 
     key = (spark.sparkContext.applicationId, sf_dir, num_centroids)
     if key in _IVF_INDEX:
         return _IVF_INDEX[key]
+    from ..session import scratch_dir
     from ..sources.read import load_table
 
     e = load_table(spark, sf_dir, "embeddings").filter(
@@ -555,11 +555,7 @@ def ensure_ivf_index(
         e, num_centroids=num_centroids, id_col=id_col, vec_col=vec_col
     )
     tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"ivf_{spark.sparkContext.applicationId.replace('-', '_')}",
-        f"{tag}_c{num_centroids}",
-    )
+    path = scratch_dir(spark, "ivf", f"{tag}_c{num_centroids}")
     (
         assigned.select(id_col, vec_col, "cluster_id")
         .write.mode("overwrite")

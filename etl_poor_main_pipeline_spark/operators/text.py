@@ -1,5 +1,5 @@
 """Text-analysis operators over ``documents`` ([EXT] X6/X7, SURVEY §2.7):
-term frequencies, TF-IDF, language stats, quality scores, fingerprints.
+term frequencies, TF-IDF and per-language stats.
 
 Everything is explode/groupBy/window over built-in functions — one shuffle
 per aggregate, map-side combine on, no Python row path.
@@ -11,14 +11,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.text import (
-    fingerprint_md5,
-    lang_id_expr,
-    quality_score_expr,
-    token_count_regex,
-    token_count_ws,
-    tokens_expr,
-)
+from ..functions.text import token_count_ws, tokens_expr
 
 
 def term_frequencies(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -72,19 +65,4 @@ def text_stats(df: DataFrame, text_col: str = "text", lang_col: str = "lang") ->
             F.round(F.avg(F.length(F.col(text_col))), 4).alias("avg_chars"),
             F.round(F.avg(token_count_ws(F.col(text_col))), 4).alias("avg_tokens"),
         )
-    )
-
-
-def document_profile(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Per-document analysis record: token counts (whitespace + BPE-ish
-    regex), detected language, quality score, fingerprint."""
-    t = F.col(text_col)
-    return df.select(
-        F.col(id_col),
-        F.length(t).alias("n_chars_computed"),
-        token_count_ws(t).alias("n_tokens_ws"),
-        token_count_regex(t).alias("n_tokens_bpe"),
-        lang_id_expr(t).alias("lang_detected"),
-        F.round(quality_score_expr(t), 6).alias("quality"),
-        fingerprint_md5(t).alias("fingerprint"),
     )

@@ -21,7 +21,7 @@ import datetime as _dt
 
 from .run_dag import medallion_dag
 
-try:  # capability gate — mirrors sources.read.read_delta/read_iceberg
+try:  # capability gate — mirrors sources.read.read_iceberg
     from airflow import DAG
     from airflow.operators.bash import BashOperator
 except ImportError as _exc:  # pragma: no cover - airflow absent here

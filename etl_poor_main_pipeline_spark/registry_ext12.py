@@ -29,6 +29,7 @@ from .operators.similarity import (
     query_vector,
 )
 from .registry import QuerySpec, _dsum, _dsum_sql, _t
+from .session import scratch_dir
 from .sources.datasource import read_manifest_parquet, register_manifest_parquet_sink
 from .streaming.events import read_event_stream_parquet
 
@@ -160,7 +161,7 @@ def q_similarity_pq_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb = pq_codebook(emb, num_subspaces=8, num_codewords=16)
     # parameter fetch, not a Spark job (see similarity.query_vector)
     qv = list(query_vector(sf_dir, vec_id=7))
-    codes_dir = tempfile.mkdtemp(prefix="pq_codes_") + "/codes"
+    codes_dir = tempfile.mkdtemp(prefix="pq_codes_", dir=scratch_dir(spark)) + "/codes"
     pq_encode(emb, cb).select("vec_id", "pq_codes").write.parquet(codes_dir)
     return pq_search_codes(spark.read.parquet(codes_dir), cb, qv, k=10)
 
@@ -183,7 +184,7 @@ def q_stream_sink_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_id", "event_type", "value")
         .repartition(8)
     )
-    out_dir = tempfile.mkdtemp(prefix="manifest_stream_")
+    out_dir = tempfile.mkdtemp(prefix="manifest_stream_", dir=scratch_dir(spark))
     ckpt = os.path.join(out_dir, "_ckpt")
     q = (
         ev.writeStream.format("manifest_parquet")

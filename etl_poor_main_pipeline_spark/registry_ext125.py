@@ -31,12 +31,12 @@ Reference parity: none; [EXT] S/X6/X7/X9 tier per BASELINE.json.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .registry import QuerySpec, _t, _dsum, _DSUM_SQL
+from .session import scratch_dir
 
 _DAY_US = 86_400_000_000
 _BUCKETS = 8
@@ -54,22 +54,14 @@ _DEC = "cast({x} as decimal(38,0))"
 _LAYOUT_DONE: set[tuple[str, str, str]] = set()
 
 
-def _session_tag(spark: SparkSession) -> str:
-    """Per-session unique path component (ADVICE r9: fixed names under
-    the shared tempdir race when two sessions on the same host run the
-    same sf — e.g. parallel pytest workers)."""
-    return spark.sparkContext.applicationId.replace("-", "_")
-
-
 def _ensure_bucketed_layout(
     spark: SparkSession, sf_dir: str
 ) -> tuple[str, str]:
     """Write the bucketed orders/lineitem layout once per session,
     returning the (orders, lineitem) table names. EXTERNAL tables under
-    a session-unique tempdir path: a managed table's warehouse directory
+    the session's scratch dir: a managed table's warehouse directory
     outlives the in-memory catalog, so a fresh session would hit
-    LOCATION_ALREADY_EXISTS; the applicationId path component keeps
-    concurrent sessions from racing on a shared /tmp directory."""
+    LOCATION_ALREADY_EXISTS."""
     tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     to, tl = f"bkt_orders_{tag}", f"bkt_lineitem_{tag}"
     key = (spark.sparkContext.applicationId, sf_dir, "bucketed")
@@ -79,12 +71,11 @@ def _ensure_bucketed_layout(
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount"
     )
-    base = os.path.join(tempfile.gettempdir(), f"lay_{_session_tag(spark)}")
     for name, df, k in ((to, o, "o_orderkey"), (tl, li, "l_orderkey")):
         spark.sql(f"DROP TABLE IF EXISTS {name}")
         (
             df.write.mode("overwrite")
-            .option("path", os.path.join(base, name))
+            .option("path", scratch_dir(spark, "lay", name))
             .bucketBy(_BUCKETS, k)
             .sortBy(k)
             .saveAsTable(name)
@@ -149,13 +140,10 @@ GROUP BY 1 ORDER BY 1
 
 
 def _ensure_dpp_layout(spark: SparkSession, sf_dir: str) -> str:
-    """Write the day-partitioned events layout once per session,
-    returning its path (session-unique component per ADVICE r9 — fixed
-    /tmp names race under concurrent sessions on the same sf)."""
+    """Write the day-partitioned events layout once per session under the
+    session's scratch dir, returning its path."""
     tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    path = os.path.join(
-        tempfile.gettempdir(), f"lay_{_session_tag(spark)}", f"dpp_events_{tag}"
-    )
+    path = scratch_dir(spark, "lay", f"dpp_events_{tag}")
     key = (spark.sparkContext.applicationId, sf_dir, "dpp")
     if key in _LAYOUT_DONE:
         return path

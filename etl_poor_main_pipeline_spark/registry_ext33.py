@@ -21,7 +21,6 @@ Scale stances:
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,6 +29,7 @@ from pyspark.sql.window import Window
 from .operators.dedup import spread
 from .operators.scan_prefix import exclusive_prefix_max
 from .registry import QuerySpec, _t
+from .session import scratch_dir
 
 # --------------------------------------------------------------------------
 # BPE merge application (X6 [EXT])
@@ -227,14 +227,7 @@ def q_jsonl_round_trip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Executors write/read their partitions in parallel; the temp
     directory stands in for the object-store landing zone."""
     d = _t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    path = os.path.join(
-        tempfile.gettempdir(),
-        # per-session path component: fixed names under the shared
-        # tempdir race across parallel sessions (ADVICE r9 / shard
-        # workers) — same stance as registry_ext125._session_tag
-        f"jsonl_rt_{spark.sparkContext.applicationId.replace('-', '_')}"
-        f"_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
+    path = scratch_dir(spark, "jsonl_rt", os.path.basename(sf_dir.rstrip("/")))
     d.write.mode("overwrite").json(path)
     back = spark.read.schema("doc_id bigint, lang string, n_chars bigint").json(path)
     return (
@@ -272,11 +265,7 @@ def q_schema_merge_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     both batches survive with their columns intact. The oracle emulates
     the evolved read with a UNION ALL of NULL-padded projections."""
     d = _t(spark, sf_dir, "documents")
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"schema_evo_{spark.sparkContext.applicationId.replace('-', '_')}"
-        f"_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
+    base = scratch_dir(spark, "schema_evo", os.path.basename(sf_dir.rstrip("/")))
     pa, pb = os.path.join(base, "batch_a"), os.path.join(base, "batch_b")
     d.select("doc_id", "lang").write.mode("overwrite").parquet(pa)
     d.select("doc_id", "n_chars").write.mode("overwrite").parquet(pb)

@@ -21,14 +21,13 @@ Scale stances:
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .registry import QuerySpec, _t
-from .session import barrier
+from .session import barrier, scratch_dir
 
 # --------------------------------------------------------------------------
 # Hierarchical rollup reuse (agg [EXT])
@@ -230,11 +229,7 @@ def q_streaming_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .streaming.events import read_event_stream_parquet
 
     e = _t(spark, sf_dir, "events").select("user_id", "event_id", "ts", "event_type")
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"upsert_{spark.sparkContext.applicationId.replace('-', '_')}"
-        f"_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
+    base = scratch_dir(spark, "upsert", os.path.basename(sf_dir.rstrip("/")))
     src, tgt = os.path.join(base, "src"), os.path.join(base, "tgt")
     # re-split the single-file source so availableNow yields 4 batches
     e.repartition(4).write.mode("overwrite").parquet(src)

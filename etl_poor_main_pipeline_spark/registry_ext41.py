@@ -16,13 +16,13 @@ Scale stances:
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.scan_prefix import global_rank_zero
 from .registry import QuerySpec, _oracle_lang_id, _t, q_lang_id
+from .session import scratch_dir
 
 # --------------------------------------------------------------------------
 # Language-ID confusion matrix (X6 eval [EXT])
@@ -127,11 +127,7 @@ def q_csv_quoting_round_trip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit('v,"'), F.col("lang"), F.lit('",q '), F.col("doc_id").cast("string")
         ).alias("tricky"),
     )
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"csv_rt_{spark.sparkContext.applicationId.replace('-', '_')}"
-        f"_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
+    path = scratch_dir(spark, "csv_rt", os.path.basename(sf_dir.rstrip("/")))
     d.write.mode("overwrite").option("header", "true").csv(path)
     back = (
         spark.read.schema("doc_id bigint, lang string, tricky string")

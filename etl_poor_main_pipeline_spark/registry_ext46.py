@@ -30,13 +30,13 @@ Parquet file per partition, utils/duckdb_utils.py:154); [EXT] tier.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.scan_prefix import exclusive_prefix_sum
 from .registry import QuerySpec, _dsum, _t
+from .session import scratch_dir
 
 # --------------------------------------------------------------------------
 # ORC round trip (S [EXT])
@@ -53,11 +53,7 @@ def q_orc_round_trip(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_linestatus", "l_quantity", "l_extendedprice"
     )
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"orc_rt_{spark.sparkContext.applicationId.replace('-', '_')}"
-        f"_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
+    path = scratch_dir(spark, "orc_rt", os.path.basename(sf_dir.rstrip("/")))
     d.write.mode("overwrite").orc(path)
     back = spark.read.schema(
         "l_returnflag string, l_linestatus string, l_quantity double, "

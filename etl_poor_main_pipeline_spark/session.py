@@ -13,16 +13,21 @@ scale posture:
 
 ``tune_session`` applies the runtime-settable subset to an externally
 created session (the driver hands us one); ``get_spark`` builds a local one.
-``barrier`` is the one lineage-truncation primitive every query uses.
+``barrier`` is the one lineage-truncation primitive every query uses, and
+``scratch_dir`` the one home for the files a query or index writes for
+itself.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .config import EngineConfig, load_config
+from .config import load_config
 
 # Runtime-settable confs: safe to apply to a session we didn't build.
 RUNTIME_CONFS: dict[str, str] = {
@@ -75,10 +80,9 @@ def tune_session(spark: SparkSession) -> SparkSession:
 def get_spark(
     app_name: str = "etl-poor-main-pipeline-spark",
     master: str | None = None,
-    config: EngineConfig | None = None,
     extra_confs: dict[str, str] | None = None,
 ) -> SparkSession:
-    cfg = config or load_config()
+    cfg = load_config()
     master = master or os.environ.get("SPARK_MASTER", f"local[{cfg.cpus}]")
     builder = (
         SparkSession.builder.appName(app_name)
@@ -109,3 +113,25 @@ def barrier(df: DataFrame, eager: bool = False) -> DataFrame:
     if df.sparkSession.sparkContext.getCheckpointDir() is None:
         return df.localCheckpoint(eager=eager)
     return df.checkpoint()
+
+
+#: Scratch roots this interpreter has registered for removal at exit. No
+#: lock: two threads racing on a new root at worst register the same
+#: idempotent removal twice.
+_SCRATCH_ROOTS: set[str] = set()
+
+
+def scratch_dir(spark: SparkSession, *parts: str) -> str:
+    """Path for files a query or index writes for its own use (round-trip
+    copies, layouts, IVF indexes), under one root per Spark application:
+    ``<tempdir>/spark_graft_<applicationId>/<parts...>``. The root exists
+    on return and is removed when the interpreter exits; the path below it
+    is left for the writer to create. The applicationId keeps concurrent
+    sessions on one host apart."""
+    app = spark.sparkContext.applicationId.replace("-", "_")
+    root = os.path.join(tempfile.gettempdir(), f"spark_graft_{app}")
+    if root not in _SCRATCH_ROOTS:
+        os.makedirs(root, exist_ok=True)
+        atexit.register(shutil.rmtree, root, ignore_errors=True)
+        _SCRATCH_ROOTS.add(root)
+    return os.path.join(root, *parts)

@@ -81,26 +81,6 @@ def write_partition_overwrite(
     return True
 
 
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_cols: list[str],
-    num_buckets: int = 32,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed managed table: pre-shuffles once at write time so every
-    later join/aggregate on ``bucket_cols`` between co-bucketed tables
-    needs NO exchange — the 100 TB answer for repeatedly-joined fact
-    tables (pay the shuffle once, reuse forever). Sorting within buckets
-    additionally removes the sort from sort-merge joins.
-    """
-    writer = df.write.mode(mode).bucketBy(num_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table_name)
-
-
 def register_table(
     spark: SparkSession,
     ref: TableRef,
@@ -146,111 +126,3 @@ def register_table(
         import warnings
 
         warnings.warn(f"catalog registration failed for {ref.qualified_name}: {exc}")
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    zcol: str,
-    num_files: int = 64,
-    mode: str = "overwrite",
-) -> None:
-    """Z-order layout write: range-partition on a precomputed z-value
-    column (``registry_ext19._z_expr`` builds the Morton interleave as a
-    portable SQL expression) and sort within partitions, so every output
-    file covers a tight hyper-rectangle in ALL interleaved dimensions —
-    footer min/max then prunes most files for a predicate on ANY of them.
-    One range exchange (sampled boundaries, skew-tolerant); the sort is
-    per-partition, never global."""
-    (
-        df.repartitionByRange(num_files, zcol)
-        .sortWithinPartitions(zcol)
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
-def compact_parquet_dir(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Small-file compaction (the maintenance half of W5): rewrite a
-    parquet directory into ceil(total_bytes / target) files and swap
-    atomically (write to a sibling temp dir, then rename). Streaming and
-    per-run appends leave thousands of KB-sized files; at 100 TB the
-    NameNode/listing and per-file open costs dominate reads until
-    compaction runs. Returns the new file count.
-
-    Local-FS rename semantics; on object stores the swap step is the
-    table format's job (Iceberg/Delta rewrite actions) — this utility is
-    the layout math plus the idempotent swap protocol. Stale
-    __compact_tmp/__compact_old dirs from a prior crashed run are removed
-    up front so a rerun always succeeds. The swap itself is two renames,
-    so a crash in the window between them leaves the dataset only at
-    __compact_old (data is never lost, but readers see a missing path
-    until rerun or manual rename-back) — a single-rename atomic swap
-    needs renameat2(RENAME_EXCHANGE)/object-store commit, which is the
-    table format's job."""
-    import math
-    import os
-    import shutil
-
-    tmp = path.rstrip("/") + "__compact_tmp"
-    old = path.rstrip("/") + "__compact_old"
-    # idempotence: clear leftovers from a prior failed run before writing.
-    # A leftover __compact_old means the prior run crashed mid-swap with the
-    # dataset path missing — restore it first rather than deleting data.
-    if os.path.exists(old) and not os.path.exists(path):
-        os.rename(old, path)
-    for leftover in (tmp, old):
-        if os.path.exists(leftover):
-            shutil.rmtree(leftover)
-
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if f.endswith(".parquet"):
-                total += os.path.getsize(os.path.join(root, f))
-    n_files = max(1, math.ceil(total / target_file_bytes))
-    spark.read.parquet(path).repartition(n_files).write.mode("overwrite").parquet(tmp)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    return n_files
-
-
-def expire_partitions(
-    path: str,
-    partition_col: str,
-    cutoff_value: str,
-    dry_run: bool = False,
-) -> list[str]:
-    """Retention maintenance (the VACUUM-adjacent half of W5): delete
-    partition directories whose ``{partition_col}={value}`` is lexically
-    below ``cutoff_value`` (ISO dates compare correctly as strings).
-    Returns the partition values removed (or that WOULD be removed with
-    ``dry_run=True`` — run that first in production).
-
-    At 100 TB retention is a metadata operation: whole partition
-    directories drop without scanning a row, which is why time-partitioned
-    layout (W1) is the prerequisite for cheap TTL. Object-store nuance:
-    on S3 this is a prefix delete + catalog DROP PARTITION; table formats
-    (Iceberg/Delta) do it transactionally — this utility is the
-    local-FS/dev twin with the same selection rule."""
-    import os
-    import shutil
-
-    removed = []
-    prefix = f"{partition_col}="
-    if not os.path.isdir(path):
-        return removed
-    for name in sorted(os.listdir(path)):
-        if not name.startswith(prefix):
-            continue
-        value = name[len(prefix):]
-        if value < cutoff_value:
-            removed.append(value)
-            if not dry_run:
-                shutil.rmtree(os.path.join(path, name))
-    return removed

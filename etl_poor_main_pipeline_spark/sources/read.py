@@ -11,8 +11,9 @@ Reference behavior being recreated:
   carry no declared schema; ``read_parquet`` infers each one once per file
   identity and schema-conversion conf set, and later reads pass that
   schema, so a query build runs no footer-inference job.
-- S6 pandas handoff: ``spark.createDataFrame(pdf)`` (Arrow path), the
-  analogue of DuckDB ``con.register`` (utils/duckdb_utils.py:162).
+- S6 pandas handoff (the analogue of DuckDB ``con.register``,
+  utils/duckdb_utils.py:162) is ``sources.api.ingest_batch``'s Arrow
+  ``createDataFrame``.
 
 Plus the driver-corpus loaders (TESTDATA.md): one parquet per table at
 ``{sf_dir}/{name}.parquet``. ``events.ts`` is parquet
@@ -212,62 +213,10 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFram
     return tuple(load_table(spark, sf_dir, n) for n in names)
 
 
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: dict[str, str] | T.StructType,
-    header: bool = True,
-    delimiter: str = ",",
-) -> DataFrame:
-    """Schema-declared CSV scan. Schema is mandatory: CSV inference costs a
-    full extra pass over the data and is banned for declared tables
-    (same schema-on-write stance as parquet, SURVEY §1.3)."""
-    st = schema if isinstance(schema, T.StructType) else schema_from_dict(schema)
-    return (
-        spark.read.schema(st)
-        .option("header", str(header).lower())
-        .option("delimiter", delimiter)
-        .csv(path)
-    )
-
-
-def read_json(
-    spark: SparkSession,
-    path: str,
-    schema: dict[str, str] | T.StructType,
-) -> DataFrame:
-    """Schema-declared JSON-lines scan (one object per line — the only
-    JSON layout that splits across executors; multiline JSON is a
-    single-task read and is deliberately not offered)."""
-    st = schema if isinstance(schema, T.StructType) else schema_from_dict(schema)
-    return spark.read.schema(st).json(path)
-
-
-def read_orc(
-    spark: SparkSession,
-    path: str,
-    schema: dict[str, str] | T.StructType | None = None,
-) -> DataFrame:
-    """ORC scan (columnar, footer-typed like parquet, so the schema is
-    optional and used only as a projection/cast contract when given)."""
-    reader = spark.read
-    if schema is not None:
-        st = schema if isinstance(schema, T.StructType) else schema_from_dict(schema)
-        reader = reader.schema(st)
-    return reader.orc(path)
-
-
-def read_text_lines(spark: SparkSession, path: str) -> DataFrame:
-    """Raw text-line scan: one row per line in a single `value` string
-    column — the ingestion primitive for unstructured corpora (each line
-    parsed downstream with expressions, not during the scan)."""
-    return spark.read.text(path)
-
-
 def _format_available(spark: SparkSession, fmt: str) -> bool:
     """True when a pluggable DataSource format can be resolved by this
-    deployment (Avro and Delta ship as external modules — present on a
-    real cluster via --packages, absent in a bare pyspark install)."""
+    deployment (Iceberg ships as an external module — present on a real
+    cluster via --packages, absent in a bare pyspark install)."""
     try:
         jvm = spark._jvm  # noqa: SLF001 - capability probe, not a data path
         jvm.org.apache.spark.sql.execution.datasources.DataSource.lookupDataSource(
@@ -278,49 +227,13 @@ def _format_available(spark: SparkSession, fmt: str) -> bool:
         return False
 
 
-def read_avro(
-    spark: SparkSession,
-    path: str,
-    schema: dict[str, str] | T.StructType | None = None,
-) -> DataFrame:
-    """Avro scan (row-major, schema-evolving ingest format). Avro is a
-    built-in-but-external Spark module (spark-avro jar via --packages);
-    when the jar is absent this raises a clear capability error instead
-    of Spark's opaque ClassNotFound chain."""
-    if not _format_available(spark, "avro"):
-        raise NotImplementedError(
-            "Avro support needs the spark-avro module on the classpath "
-            "(spark-submit --packages org.apache.spark:spark-avro_2.13:<spark-version>); "
-            "not deployed in this environment"
-        )
-    reader = spark.read
-    if schema is not None:
-        st = schema if isinstance(schema, T.StructType) else schema_from_dict(schema)
-        reader = reader.schema(st)
-    return reader.format("avro").load(path)
-
-
-def read_delta(spark: SparkSession, path: str) -> DataFrame:
-    """Delta Lake table scan (ACID log-structured parquet). Requires the
-    delta-spark package + session extensions; raises a clear capability
-    error when absent (this environment has no delta jars)."""
-    if not _format_available(spark, "delta"):
-        raise NotImplementedError(
-            "Delta Lake support needs delta-spark on the classpath with "
-            "spark.sql.extensions=io.delta.sql.DeltaSparkSessionExtension; "
-            "not deployed in this environment"
-        )
-    return spark.read.format("delta").load(path)
-
-
 def read_iceberg(spark: SparkSession, table_or_path: str) -> DataFrame:
     """Apache Iceberg table scan — the at-rest format the reference names
     for its bronze/silver layers (README.md:7,16,26,179,191: parquet files
     managed as Iceberg tables in the lake).
 
-    Same capability-gate pattern as ``read_delta``: Iceberg needs the
-    iceberg-spark-runtime jar plus a catalog config
-    (spark.sql.catalog.<name>=org.apache.iceberg.spark.SparkCatalog);
+    Capability-gated: Iceberg needs the iceberg-spark-runtime jar plus a
+    catalog config (spark.sql.catalog.<name>=org.apache.iceberg.spark.SparkCatalog);
     absent those, raise an actionable error instead of Spark's opaque
     ClassNotFound/NoSuchCatalog chain. With the jar present, accepts a
     catalog table name (``lake.db.table``) or a path-based table
@@ -335,44 +248,3 @@ def read_iceberg(spark: SparkSession, table_or_path: str) -> DataFrame:
             "not deployed in this environment"
         )
     return spark.read.format("iceberg").load(table_or_path)
-
-
-def from_pandas(spark: SparkSession, pdf, schema: dict[str, str] | None = None) -> DataFrame:
-    """S6 pandas -> engine handoff (Arrow-accelerated createDataFrame)."""
-    df = spark.createDataFrame(pdf)
-    if schema is not None:
-        from ..schema import enforce_schema
-
-        df = enforce_schema(df, schema)
-    return df
-
-
-def read_binary_files(
-    spark: SparkSession, path: str, glob: str | None = None
-) -> DataFrame:
-    """Whole-file binary ingest (`binaryFile` source): one row per file
-    with (path, modificationTime, length, content BINARY) — the ingestion
-    edge for the multimodal tier (operators/multimodal.py consumes the
-    content column as its opaque payload). Column pruning applies: a
-    metadata-only query (e.g. count/size audit) never reads `content`,
-    so footer-level listing cost, not data cost."""
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    return reader.load(path)
-
-
-def read_xml(
-    spark: SparkSession,
-    path: str,
-    row_tag: str,
-    schema: dict[str, str] | T.StructType | None = None,
-) -> DataFrame:
-    """XML scan (native in Spark 4 — no external spark-xml jar): one row
-    per ``row_tag`` element. Schema is optional but recommended: XML
-    inference is a full extra pass, same stance as CSV."""
-    reader = spark.read.option("rowTag", row_tag)
-    if schema is not None:
-        st = schema if isinstance(schema, T.StructType) else schema_from_dict(schema)
-        reader = reader.schema(st)
-    return reader.xml(path)

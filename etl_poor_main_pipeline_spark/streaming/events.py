@@ -133,52 +133,6 @@ def enrich_stream(events: DataFrame, dim: DataFrame, on: str = "user_id") -> Dat
     return events.join(F.broadcast(dim), on=on, how="left")
 
 
-def dedup_stream(
-    events: DataFrame,
-    keys: list[str] | None = None,
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Streaming exact dedup: first occurrence per key wins, with state
-    bounded by the watermark (without it, the seen-keys state grows
-    forever — the unbounded-state mistake). Batch twin: X1 dedup_exact.
-
-    ``dropDuplicatesWithinWatermark`` (Spark 3.5+) is the API that
-    actually implements first-wins-per-key with watermark-expired state;
-    plain ``dropDuplicates(keys + [event-time])`` — the r1 shape — only
-    dedups exact (key, ts) identity, so a duplicate key at a different
-    timestamp survived, contradicting this contract (ADVICE r1).
-    """
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        keys or ["event_id"]
-    )
-
-
-def stream_to_partitioned_parquet(
-    stream_df: DataFrame,
-    ref,
-    lake_root: str,
-    checkpoint_dir: str,
-) -> None:
-    """foreachBatch sink reusing the batch partition-overwrite writer —
-    the streaming version of the reference's idempotent delete-and-insert
-    (utils/duckdb_utils.py:61-190): a replayed micro-batch overwrites
-    only the partitions it touches, so a restart after a sink-side crash
-    rewrites rather than duplicates (the checkpoint dedups source-side).
-    """
-    from ..sinks.write import write_partition_overwrite
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        write_partition_overwrite(batch_df, ref, lake_root)
-
-    q = (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-
 def read_event_stream_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming scan of the driver-corpus events parquet.
 

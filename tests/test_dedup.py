@@ -1,13 +1,12 @@
 from pyspark.sql import functions as F
 
 from etl_poor_main_pipeline_spark.operators.dedup import (
-    exact_dedup,
     fingerprint_dedup,
     jaccard_token_sets,
     minhash_lsh_candidates,
     minhash_signatures,
     simhash_near_dup_pairs,
-    simhash_signatures,
+    simhash_signatures_portable,
 )
 
 
@@ -16,12 +15,6 @@ def docs(spark, rows):
         [(i, t, "en", "src", len(t)) for i, t in enumerate(rows)],
         ["doc_id", "text", "lang", "source", "n_chars"],
     )
-
-
-def test_exact_dedup_min_id_representative(spark):
-    df = docs(spark, ["same text", "same text", "other"])
-    out = exact_dedup(df, subset=["text"]).orderBy("doc_id").collect()
-    assert [(r.doc_id, r.text) for r in out] == [(0, "same text"), (2, "other")]
 
 
 def test_fingerprint_ignores_case_and_whitespace(spark):
@@ -76,8 +69,11 @@ def test_minhash_signature_deterministic(spark):
 
 def test_simhash_identical_distance_zero(spark):
     df = docs(spark, ["alpha beta gamma delta", "alpha beta gamma delta", "zzz yyy xxx www"])
-    sigs = simhash_signatures(df)
-    pairs = {(r.id_a, r.id_b): r.hamming for r in simhash_near_dup_pairs(sigs).collect()}
+    sigs = simhash_signatures_portable(df, bits=60)
+    pairs = {
+        (r.id_a, r.id_b): r.hamming
+        for r in simhash_near_dup_pairs(sigs, bits=60).collect()
+    }
     assert pairs.get((0, 1)) == 0
 
 

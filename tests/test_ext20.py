@@ -1,16 +1,6 @@
-"""Wave 21: recursive CTE spine; z-order write + compaction utilities."""
+"""Wave 21: recursive CTE spine; scan read-schema report."""
 
-import os
-
-from pyspark.sql import functions as F
-
-from etl_poor_main_pipeline_spark.registry_ext19 import _z_expr
 from etl_poor_main_pipeline_spark.registry_ext20 import q_recursive_month_spine
-from etl_poor_main_pipeline_spark.sinks.write import (
-    compact_parquet_dir,
-    write_zordered,
-)
-from etl_poor_main_pipeline_spark.sources.read import load_table
 
 SF = "/root/testdata/sf0.001"
 
@@ -25,91 +15,6 @@ def test_recursive_spine_covers_every_month(spark):
     for r in rows:
         if r.n_orders == 0:
             assert r.revenue == 0.0
-
-
-def test_write_zordered_files_are_range_disjoint(spark, tmp_path):
-    o = load_table(spark, SF, "orders")
-    day = "cast(datediff(o_orderdate, timestamp '1995-01-01 00:00:00') as bigint)"
-    z = o.selectExpr("o_custkey", f"({_z_expr('o_custkey', f'({day})')}) as zval")
-    out = str(tmp_path / "zo")
-    write_zordered(z, out, "zval", num_files=4)
-    back = spark.read.parquet(out)
-    assert back.count() == o.count()
-    # each file's z-range is disjoint from the others (range partitioning)
-    per_file = (
-        back.withColumn("f", F.input_file_name())
-        .groupBy("f")
-        .agg(F.min("zval").alias("lo"), F.max("zval").alias("hi"))
-        .collect()
-    )
-    spans = sorted((r.lo, r.hi) for r in per_file)
-    for (  # noqa: B007
-        (lo1, hi1),
-        (lo2, _hi2),
-    ) in zip(spans, spans[1:]):
-        assert hi1 <= lo2
-
-
-def test_compact_parquet_dir_preserves_rows(spark, tmp_path):
-    path = str(tmp_path / "frag")
-    df = spark.range(10_000).selectExpr("id", "id % 7 as k")
-    df.repartition(37).write.parquet(path)  # fragment into many small files
-    n_before = len([f for f in os.listdir(path) if f.endswith(".parquet")])
-    assert n_before == 37
-    total = sum(
-        os.path.getsize(os.path.join(path, f))
-        for f in os.listdir(path)
-        if f.endswith(".parquet")
-    )
-    n_new = compact_parquet_dir(spark, path, target_file_bytes=total)
-    assert n_new < n_before
-    n_after = len([f for f in os.listdir(path) if f.endswith(".parquet")])
-    assert n_after == n_new
-    back = spark.read.parquet(path)
-    assert back.count() == 10_000
-    assert back.agg(F.sum("id")).collect()[0][0] == sum(range(10_000))
-
-
-def test_compact_parquet_dir_recovers_from_stale_leftovers(spark, tmp_path):
-    """A prior crashed run can leave __compact_tmp (pre-swap crash) or
-    __compact_old with the dataset path missing (mid-swap crash); a rerun
-    must clean up / restore and still compact."""
-    path = str(tmp_path / "frag")
-    spark.range(1_000).repartition(8).write.parquet(path)
-
-    # pre-swap crash: stale tmp dir exists alongside the dataset
-    os.makedirs(path + "__compact_tmp/junk")
-    compact_parquet_dir(spark, path, target_file_bytes=1 << 30)
-    assert not os.path.exists(path + "__compact_tmp")
-    assert spark.read.parquet(path).count() == 1_000
-
-    # mid-swap crash: dataset renamed to __compact_old, path missing
-    os.rename(path, path + "__compact_old")
-    compact_parquet_dir(spark, path, target_file_bytes=1 << 30)
-    assert os.path.exists(path)
-    assert not os.path.exists(path + "__compact_old")
-    assert spark.read.parquet(path).count() == 1_000
-
-
-def test_expire_partitions_drops_only_old(spark, tmp_path):
-    from etl_poor_main_pipeline_spark.sinks.write import expire_partitions
-
-    lake = str(tmp_path / "lake")
-    df = spark.createDataFrame(
-        [(1, "2026-01-01"), (2, "2026-02-01"), (3, "2026-03-01")], ["v", "date_id"]
-    )
-    df.write.partitionBy("date_id").parquet(lake)
-
-    would = expire_partitions(lake, "date_id", "2026-02-15", dry_run=True)
-    assert would == ["2026-01-01", "2026-02-01"]
-    back = spark.read.parquet(lake)
-    assert back.count() == 3  # dry run touches nothing
-
-    removed = expire_partitions(lake, "date_id", "2026-02-15")
-    assert removed == ["2026-01-01", "2026-02-01"]
-    kept = spark.read.parquet(lake)
-    assert kept.count() == 1
-    assert str(kept.head().date_id) == "2026-03-01"  # read infers DateType
 
 
 def test_read_schema_report_shows_pruned_columns(spark):

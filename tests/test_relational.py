@@ -1,11 +1,9 @@
 import pytest
-from pyspark.sql import functions as F
 
 from etl_poor_main_pipeline_spark.operators.relational import (
     case_bucket,
     filter_eq,
     temperature_category,
-    top_k,
     truncate_str,
     union_all,
 )
@@ -83,9 +81,3 @@ def test_filter_eq_pushdown_reaches_scan(spark, tmp_path):
     df = filter_eq(spark.read.parquet(p), "country", "US")
     assert "country" in pushed_filters(df)
     assert df.count() == 1
-
-
-def test_top_k_deterministic(spark):
-    df = spark.createDataFrame([(i % 3, i) for i in range(30)], ["v", "id"])
-    out = top_k(df, [F.col("v").desc(), F.col("id").asc()], 5).collect()
-    assert [(r.v, r.id) for r in out] == [(2, 2), (2, 5), (2, 8), (2, 11), (2, 14)]

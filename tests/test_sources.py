@@ -1,37 +1,4 @@
-import json
-
-from etl_poor_main_pipeline_spark.sources.read import (
-    from_pandas,
-    load_table,
-    read_csv,
-    read_json,
-    read_table,
-)
-
-
-def test_read_csv_declared_schema(spark, tmp_path):
-    p = tmp_path / "data.csv"
-    p.write_text("city,temp\nNYC,21.5\nLA,bad\n")
-    df = read_csv(spark, str(p), {"city": "VARCHAR", "temp": "DOUBLE"})
-    rows = {r.city: r.temp for r in df.collect()}
-    assert rows["NYC"] == 21.5
-    assert rows["LA"] is None  # malformed -> NULL, not a crash
-
-
-def test_read_json_lines(spark, tmp_path):
-    p = tmp_path / "data.jsonl"
-    p.write_text("\n".join(json.dumps({"city": c, "temp": t}) for c, t in [("NYC", 1.5), ("LA", 2.5)]))
-    df = read_json(spark, str(p), {"city": "VARCHAR", "temp": "DOUBLE"})
-    assert df.count() == 2
-    assert dict(df.dtypes) == {"city": "string", "temp": "double"}
-
-
-def test_from_pandas_arrow_handoff(spark):
-    import pandas as pd
-
-    pdf = pd.DataFrame({"a": [1, 2], "b": ["x", "y"]})
-    df = from_pandas(spark, pdf, {"a": "BIGINT", "b": "VARCHAR"})
-    assert df.count() == 2 and dict(df.dtypes) == {"a": "bigint", "b": "string"}
+from etl_poor_main_pipeline_spark.sources.read import load_table, read_table
 
 
 def test_load_table_events_ts_is_timestamp(spark):
@@ -50,77 +17,20 @@ def test_read_table_with_declared_schema_subset(spark):
     assert df.count() == 1500
 
 
-def test_orc_roundtrip(spark, tmp_path):
-    from etl_poor_main_pipeline_spark.sources.read import read_orc
-
-    src = spark.read.parquet("/root/testdata/sf0.001/nation.parquet")
-    dst = str(tmp_path / "nation_orc")
-    src.write.orc(dst)
-    back = read_orc(spark, dst)
-    assert back.count() == src.count()
-    assert {r.n_name for r in back.collect()} == {r.n_name for r in src.collect()}
-
-
-def test_text_lines_source(spark, tmp_path):
-    from etl_poor_main_pipeline_spark.sources.read import read_text_lines
-
-    p = tmp_path / "corpus.txt"
-    p.write_text("alpha beta\ngamma\n")
-    df = read_text_lines(spark, str(p))
-    assert df.columns == ["value"]
-    assert sorted(r.value for r in df.collect()) == ["alpha beta", "gamma"]
-
-
 def test_avro_delta_capability_gate(spark):
-    """Avro/Delta ship as external modules; absent jars must surface as a
-    clear NotImplementedError (capability gate), and present jars must
-    route to the real reader. This container has neither jar."""
+    """The capability probe resolves built-in formats and reports external
+    modules (Avro, Delta, Iceberg) absent when their jars are not
+    deployed; an absent Iceberg surfaces as a clear NotImplementedError.
+    A bare pyspark install has none of the three jars."""
     import pytest
 
     from etl_poor_main_pipeline_spark.sources.read import (
         _format_available,
-        read_avro,
-        read_delta,
+        read_iceberg,
     )
 
-    if _format_available(spark, "avro"):
-        pytest.skip("spark-avro deployed here; gate inapplicable")
-    with pytest.raises(NotImplementedError, match="spark-avro"):
-        read_avro(spark, "/tmp/nonexistent.avro")
-    with pytest.raises(NotImplementedError, match="delta-spark"):
-        read_delta(spark, "/tmp/nonexistent_delta")
-    from etl_poor_main_pipeline_spark.sources.read import read_iceberg
-
+    assert _format_available(spark, "parquet")
+    if any(_format_available(spark, f) for f in ("avro", "delta", "iceberg")):
+        pytest.skip("an external format module is deployed here; gate inapplicable")
     with pytest.raises(NotImplementedError, match="iceberg-spark-runtime"):
         read_iceberg(spark, "lake.db.events")
-
-
-def test_binary_files_source(spark, tmp_path):
-    from etl_poor_main_pipeline_spark.sources.read import read_binary_files
-
-    (tmp_path / "a.bin").write_bytes(b"\x00\x01payload-a")
-    (tmp_path / "b.bin").write_bytes(b"payload-b")
-    (tmp_path / "skip.txt").write_text("not binary payload")
-    df = read_binary_files(spark, str(tmp_path), glob="*.bin")
-    rows = {r.path.rsplit("/", 1)[-1]: bytes(r.content) for r in df.collect()}
-    assert set(rows) == {"a.bin", "b.bin"}
-    assert rows["a.bin"] == b"\x00\x01payload-a"
-    # metadata-only projection never deserializes content (column pruning)
-    assert read_binary_files(spark, str(tmp_path), glob="*.bin").select(
-        "length"
-    ).count() == 2
-
-
-def test_xml_source_native(spark, tmp_path):
-    from etl_poor_main_pipeline_spark.sources.read import read_xml
-
-    p = tmp_path / "cities.xml"
-    p.write_text(
-        "<rows>"
-        "<row><city>NYC</city><temp>21.5</temp></row>"
-        "<row><city>LA</city><temp>28.0</temp></row>"
-        "</rows>"
-    )
-    df = read_xml(spark, str(p), row_tag="row", schema={"city": "VARCHAR", "temp": "DOUBLE"})
-    rows = {r.city: r.temp for r in df.collect()}
-    assert rows == {"NYC": 21.5, "LA": 28.0}

@@ -7,11 +7,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_poor_main_pipeline_spark.streaming.events import (
-    dedup_stream,
     enrich_stream,
     read_event_stream,
     sessionize_stream,
-    stream_to_partitioned_parquet,
     windowed_event_counts,
 )
 
@@ -112,49 +110,6 @@ def test_stream_static_enrichment(spark, event_dir):
     rows = spark.sql("SELECT user_id, tier FROM enriched").collect()
     assert len(rows) == 30
     assert all(r.tier == ("free" if r.user_id == 0 else "pro") for r in rows)
-
-
-def test_streaming_dedup_drops_replayed_rows(spark, event_dir, tmp_path):
-    # replay file 0 under a new name -> same event_ids arrive twice
-    import shutil
-
-    shutil.copy(f"{event_dir}/part0.json", f"{event_dir}/part0_replay.json")
-    stream = read_event_stream(spark, event_dir)
-    q = (
-        dedup_stream(stream, keys=["event_id"])
-        .writeStream.format("memory")
-        .queryName("deduped")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT event_id FROM deduped").collect()
-    assert len(rows) == 30  # 45 input rows, 15 replayed dropped
-    assert len({r.event_id for r in rows}) == 30
-
-
-def test_foreachbatch_partition_overwrite_is_idempotent(spark, event_dir, tmp_path):
-    from pyspark.sql import functions as F
-
-    from etl_poor_main_pipeline_spark.table import TableRef
-
-    ref = TableRef("analytics", "event_daily", partition_col="date_id")
-    lake = str(tmp_path / "lake")
-
-    def run(checkpoint: str) -> None:
-        stream = read_event_stream(spark, event_dir).withColumn(
-            "date_id", F.date_format("ts", "yyyy-MM-dd")
-        )
-        stream_to_partitioned_parquet(stream, ref, lake, checkpoint)
-
-    run(str(tmp_path / "ckpt1"))
-    n1 = spark.read.parquet(ref.path(lake)).count()
-    # a FRESH checkpoint replays the whole source: the partition
-    # overwrite must rewrite, not append-duplicate
-    run(str(tmp_path / "ckpt2"))
-    n2 = spark.read.parquet(ref.path(lake)).count()
-    assert n1 == n2 == 30
 
 
 def test_drained_stream_equals_batch(spark):

@@ -59,3 +59,22 @@ def test_repo_prose_counts_in_sync_with_ab_file():
     from etl_poor_main_pipeline_spark.registry import queries
 
     assert check_ab_prose(len(queries())) == []
+
+
+def test_cli_rejects_help_and_typos_without_writing():
+    """``--help`` prints usage and an unknown flag exits 2; neither may
+    touch README.md (argparse exits before the slow collect-only run)."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    readme = (repo / "README.md").read_bytes()
+    for args, code in ((["--help"], 0), (["--chek"], 2)):
+        out = subprocess.run(
+            [sys.executable, "tools/sync_counts.py", *args],
+            cwd=repo, capture_output=True, text=True, timeout=60,
+        )
+        assert out.returncode == code, (args, out.stdout, out.stderr)
+        assert "usage:" in out.stdout + out.stderr
+    assert (repo / "README.md").read_bytes() == readme

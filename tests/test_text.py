@@ -10,7 +10,7 @@ from etl_poor_main_pipeline_spark.functions.text import (
     token_count_ws,
     tokens_expr,
 )
-from etl_poor_main_pipeline_spark.operators.text import document_profile, tf_idf
+from etl_poor_main_pipeline_spark.operators.text import tf_idf
 
 
 def one(spark, text, expr):
@@ -71,13 +71,6 @@ def test_tfidf_rare_term_outweighs_common(spark):
     by_term = {(r.doc_id, r.term): r.tfidf for r in rows}
     assert by_term[(0, "apple")] == 0.0  # in every doc -> idf 0
     assert by_term[(0, "banana")] > 0
-
-
-def test_document_profile_schema(spark):
-    df = spark.createDataFrame([(0, "the quick brown fox")], ["doc_id", "text"])
-    row = document_profile(df).head()
-    assert row.n_tokens_ws == 4 and row.lang_detected == "en"
-    assert 0 <= row.quality <= 1 and len(row.fingerprint) == 32
 
 
 def test_curation_signals_plan_posture(spark):

@@ -13,6 +13,7 @@ mechanical writer that keeps it green.
 """
 from __future__ import annotations
 
+import argparse
 import re
 import subprocess
 import sys
@@ -129,7 +130,14 @@ def rewrite_ab_prose() -> None:
 
 
 def main() -> int:
-    check = "--check" in sys.argv
+    parser = argparse.ArgumentParser(
+        description="Rewrite README.md/MIGRATION.md counts from the live registry."
+    )
+    parser.add_argument(
+        "--check", action="store_true",
+        help="write nothing; exit 1 if any count is stale",
+    )
+    check = parser.parse_args().check
     n_q, n_o, n_t = live_counts()
     if not check:
         rewrite_ab_prose()
