@@ -54,7 +54,7 @@ only while the on-disk bytes of the SOURCE TABLES feeding the side (an
 upper bound on the derived side) are below the gate; above it the hint
 disappears and the static planner / AQE picks the strategy from real
 statistics. Truly bounded sides (nation/region enums, keyless aggregates)
-keep plain ``F.broadcast`` — tests/test_no_unbounded_broadcast.py sweeps
+keep plain ``F.broadcast`` — tests/test_plan_guards.py sweeps
 the registry with the gate forced shut to prove the at-scale plans carry no
 unbounded pin.
 """
@@ -137,7 +137,7 @@ def broadcast_if_small(df, sf_dir: str, tables, threshold_bytes: int | None = No
     This is the ONLY sanctioned way to hint a corpus-derived (growing) side:
     a bare ``F.broadcast`` is reserved for sides bounded by construction
     (enum tables, keyless aggregates) and is enforced by
-    tests/test_no_unbounded_broadcast.py.
+    tests/test_plan_guards.py.
     """
     from pyspark.sql import functions as F
 

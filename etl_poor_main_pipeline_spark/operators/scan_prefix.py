@@ -29,7 +29,7 @@ same SQL ``SUM() OVER (ORDER BY ...)`` semantics.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 

@@ -4,6 +4,11 @@ The scale rules (SURVEY §4, instructions): filters and projections must
 reach the parquet scan, partition predicates must prune directories, and
 the hot path must stay inside whole-stage codegen (no Python row UDFs).
 These helpers turn those rules into assertions usable in tests.
+
+The four scale guards (``python_udf_nodes``, ``global_window_nodes``,
+``unbounded_nested_loop_joins``, ``unbounded_broadcast_hints``) read
+the two strings ``plan_texts`` computes; tests/test_plan_guards.py runs
+all four over every batch registry query from one build of each.
 """
 
 from __future__ import annotations
@@ -29,19 +34,42 @@ def has_partition_filter(df: DataFrame, column: str) -> bool:
     return False
 
 
+def plan_texts(df: DataFrame) -> tuple[str, str]:
+    """The formatted physical plan and the analyzed logical plan: the two
+    strings every scale guard below reads. Computing them once per frame
+    lets one registry sweep run all four guards on one build of each
+    query (tests/test_plan_guards.py)."""
+    return explain_str(df), _analyzed(df)
+
+
+def _formatted(plan: DataFrame | str) -> str:
+    return plan if isinstance(plan, str) else explain_str(plan)
+
+
+def _analyzed(plan: DataFrame | str) -> str:
+    return plan if isinstance(plan, str) else plan._jdf.queryExecution().analyzed().toString()
+
+
+def python_udf_nodes(plan: DataFrame | str) -> list[str]:
+    """Lines of the formatted plan that run a row-at-a-time Python UDF
+    (BatchEvalPython). Arrow-batched pandas UDFs (ArrowEvalPython /
+    FlatMapGroupsInPandas / MapInPandas) are the sanctioned Python path
+    and are not reported. ``plan`` is a DataFrame or its formatted plan."""
+    return [ln.strip() for ln in _formatted(plan).splitlines() if "BatchEvalPython" in ln]
+
+
 def assert_no_python_udf(df: DataFrame) -> None:
-    """Fail if the plan contains a row-at-a-time Python UDF (BatchEvalPython).
-    Arrow-batched pandas UDFs (ArrowEvalPython / FlatMapGroupsInPandas /
-    MapInPandas) are the sanctioned Python path and are allowed."""
-    plan = explain_str(df)
-    if "BatchEvalPython" in plan:
-        raise AssertionError(f"row-at-a-time Python UDF in plan:\n{plan}")
+    """Fail if the plan contains a row-at-a-time Python UDF."""
+    bad = python_udf_nodes(df)
+    if bad:
+        raise AssertionError("row-at-a-time Python UDF in plan:\n" + "\n".join(bad))
 
 
-def global_window_nodes(df: DataFrame) -> list[str]:
+def global_window_nodes(plan: DataFrame | str) -> list[str]:
     """Arguments lines of Window nodes that plan with an EMPTY partition
     spec — the 'WindowExec: No Partition Defined' shape that serializes the
-    whole input through one task at 100 TB.
+    whole input through one task at 100 TB. ``plan`` is a DataFrame or its
+    formatted plan.
 
     Detection (formatted plan): a Window/WindowInPandas node prints
     ``Arguments: [exprs], [partitionSpec], [orderSpec]`` with empty specs
@@ -54,7 +82,7 @@ def global_window_nodes(df: DataFrame) -> list[str]:
     """
     import re
 
-    lines = explain_str(df).splitlines()
+    lines = _formatted(plan).splitlines()
     bad: list[str] = []
     for i, ln in enumerate(lines):
         if not re.match(r"\(\d+\) (Window|WindowInPandas)\b", ln.strip()):
@@ -64,20 +92,7 @@ def global_window_nodes(df: DataFrame) -> list[str]:
             if not stripped.startswith("Arguments:"):
                 continue
             args = stripped[len("Arguments:"):]
-            groups, depth, cur = [], 0, []
-            for ch in args:
-                if ch == "[":
-                    depth += 1
-                    if depth == 1:
-                        cur = []
-                        continue
-                elif ch == "]":
-                    depth -= 1
-                    if depth == 0:
-                        groups.append("".join(cur))
-                        continue
-                if depth >= 1:
-                    cur.append(ch)
+            groups = _bracket_groups(args)
             is_global = len(groups) <= 1 or (
                 len(groups) == 2
                 and (" ASC" in groups[-1] or " DESC" in groups[-1])
@@ -90,11 +105,7 @@ def global_window_nodes(df: DataFrame) -> list[str]:
 
 def assert_no_global_window(df: DataFrame) -> None:
     """Fail if the plan contains an unpartitioned Window (single-partition
-    bottleneck at scale). Sibling of :func:`assert_no_python_udf`; asserted
-    over the whole registry in tests/test_no_global_window.py, with the two
-    deliberately-global SQL-semantics demos (window_ntile,
-    window_distribution) and the global-order spec twin
-    (training_pack_greedy) as the only sanctioned exceptions."""
+    bottleneck at scale)."""
     bad = global_window_nodes(df)
     if bad:
         raise AssertionError(
@@ -158,7 +169,7 @@ def _subtree_bounded(nodes: list[tuple[int, int, str]], details: dict[int, str])
     return False
 
 
-def unbounded_nested_loop_joins(df: DataFrame) -> list[str]:
+def unbounded_nested_loop_joins(plan: DataFrame | str) -> list[str]:
     """Nested-loop join nodes (CartesianProduct / BroadcastNestedLoopJoin)
     where NEITHER input is provably cardinality-bounded — the
     proportional-quadratic shape (round-4 defect class: a pair join whose
@@ -170,9 +181,10 @@ def unbounded_nested_loop_joins(df: DataFrame) -> list[str]:
     A side counts as bounded if its subtree contains a LIMIT
     (GlobalLimit / TakeOrderedAndProject / CollectLimit — the hash-rank
     fixed-count sample idiom), a keyless aggregate (<=1 row), a literal
-    LocalTableScan, or a Range below {bound} rows (a spine).
+    LocalTableScan, or a Range below {bound} rows (a spine). ``plan`` is a
+    DataFrame or its formatted plan.
     """.format(bound=_RANGE_BOUND)
-    outline, details = _parse_plan_tree(explain_str(df))
+    outline, details = _parse_plan_tree(_formatted(plan))
     offenders: list[str] = []
     for i, (nid, depth, name) in enumerate(outline):
         if name.split()[0] not in _NESTED_LOOP_NODES:
@@ -338,7 +350,7 @@ def _unbounded_witnesses(
             # fact side with many rows per key grows with the corpus even
             # behind a K-row keyset. Emit a distinguishable witness class so
             # callers can sanction the genuinely-unique cases per query with
-            # a documented rationale (tests/test_no_unbounded_broadcast.py
+            # a documented rationale (tests/test_plan_guards.py
             # ALLOWED_JOIN_MULTIPLICITY), mirroring the LogicalRDD pattern.
             grown = [w for ws in child_ws for w in ws]
             return [
@@ -350,7 +362,7 @@ def _unbounded_witnesses(
     return [w for ws in child_ws for w in ws]
 
 
-def unbounded_broadcast_hints(df: DataFrame) -> list[str]:
+def unbounded_broadcast_hints(plan: DataFrame | str) -> list[str]:
     """Broadcast-hint nodes in the ANALYZED logical plan whose hinted side
     can GROW with the corpus — no aggregate, limit, literal, small range,
     or bounded-join cap between the hint and a growing-table scan. This is
@@ -366,14 +378,14 @@ def unbounded_broadcast_hints(df: DataFrame) -> list[str]:
     and adjudicated in docstrings/PLANS.md, not here. LogicalRDD
     (checkpoint) leaves are reported as witnesses because the truncated
     plan hides what was materialized; per-query sanctions with rationale
-    live in tests/test_no_unbounded_broadcast.py.
+    live in tests/test_plan_guards.py.
 
     Table identity is recovered from each Relation leaf's column names
     (the analyzed tree prints no file path); nation/region enum leaves
-    are always bounded.
+    are always bounded. ``plan`` is a DataFrame or its analyzed plan
+    string.
     """
-    plan = df._jdf.queryExecution().analyzed().toString()
-    nodes = _logical_outline_lines(plan)
+    nodes = _logical_outline_lines(_analyzed(plan))
     offenders: list[str] = []
     for i, (indent, head, line) in enumerate(nodes):
         if head != "ResolvedHint" or "strategy=broadcast" not in line:

@@ -440,7 +440,7 @@ def q_window_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Deliberately GLOBAL window — the literal ``NTILE(4) OVER (ORDER BY
     ...)`` SQL semantics being demonstrated (sanctioned exception in
-    tests/test_no_global_window.py). At 100 TB use the scale-safe
+    tests/test_plan_guards.py). At 100 TB use the scale-safe
     equivalent: ``equi_depth_histogram`` (registry_ext26) computes the
     same ntile bucket rule via a distributed two-phase rank
     (operators/scan_prefix.py) with no single-partition window."""

@@ -61,8 +61,8 @@ def q_training_pack_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     declared semantics (one total order), kept deliberately. The
     production default at 100 TB is ``training_pack_sharded`` below —
     pack within hash-shards, embarrassingly parallel, same packing
-    quality — which is why this query is on the global-window exemption
-    list of ``plans/explain.assert_no_global_window``."""
+    quality — which is why this query is on the global-window sanction
+    list ``ALLOWED_GLOBAL`` in tests/test_plan_guards.py."""
     d = _t(spark, sf_dir, "documents")
     w = Window.orderBy("doc_id").rowsBetween(Window.unboundedPreceding, 0)
     toks = d.select("doc_id", token_count_ws("text").cast("long").alias("n_tok"))

@@ -7,7 +7,7 @@ Scale notes (the 100x question, per query):
   (first event / first purchase / last event), then to one row per
   duration-day — a calendar-bounded frame. Risk sets are ONE suffix
   walk over that day spine (global window over domain-bounded cells,
-  sanctioned in tests/test_no_global_window.py — same category as
+  sanctioned in tests/test_plan_guards.py — same category as
   pettitt_changepoint); every per-cell term is micro-snapped to an
   integer before the final sum, so double summation order never
   differs between engines.

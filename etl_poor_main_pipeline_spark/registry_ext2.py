@@ -159,7 +159,7 @@ def q_window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Deliberately GLOBAL window — the literal ``CUME_DIST()/PERCENT_RANK()
     OVER (ORDER BY ...)`` SQL semantics being demonstrated (sanctioned
-    exception in tests/test_no_global_window.py). At 100 TB run
+    exception in tests/test_plan_guards.py). At 100 TB run
     ``distributed_cume_dist`` (registry_ext37) instead — the
     value-identical twin built on ``operators/scan_prefix.
     global_rank_zero`` (cume_dist = (r0+1)/N, percent_rank = r0/(N-1)),

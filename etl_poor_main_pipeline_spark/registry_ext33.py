@@ -114,7 +114,7 @@ def q_pareto_skyline_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups via the Blelloch scan (scan_prefix.exclusive_prefix_max — no
     unpartitioned window), broadcast the per-price threshold back, filter
     ``day >= prior_max``. The oracle keeps the literal global-window SQL;
-    tests/test_no_global_window.py pins that OUR plan stays
+    tests/test_plan_guards.py pins that OUR plan stays
     partition-parallel."""
     o = _t(spark, sf_dir, "orders").select(
         "o_orderkey",

@@ -226,7 +226,6 @@ def q_streaming_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet. The final state is batch-boundary-INDEPENDENT (argmax over
     a total order), which is exactly what makes it oracle-checkable;
     the read-back aggregates latest event_type frequencies."""
-    from .streaming.events import read_event_stream_parquet
 
     e = _t(spark, sf_dir, "events").select("user_id", "event_id", "ts", "event_type")
     base = scratch_dir(spark, "upsert", os.path.basename(sf_dir.rstrip("/")))

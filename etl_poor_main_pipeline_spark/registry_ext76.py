@@ -203,7 +203,7 @@ def q_blocking_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "try_element_at(filter(split(lower(text), '\\\\s+'), t -> t <> ''), 1) as tok1",
         )
         # no localCheckpoint: it would hide the LIMIT from the quadratic-
-        # join plan guard (tests/test_no_quadratic_selfjoin.py), and the
+        # join plan guard (tests/test_plan_guards.py), and the
         # recompute it saves is two 1000-row tokenizations — negligible
     )
     a, b = d.alias("a"), d.alias("b")

@@ -12,7 +12,7 @@ Scale stances (shared by all three queries):
   pairwise quantity is a product of cell counts.
 - The cell pair join is EQUI-keyed on lang (SortMergeJoin; the triangular
   (sx, sy) condition is a post-filter), so the quadratic-join plan guard
-  (tests/test_no_quadratic_selfjoin.py) stays clean by construction.
+  (tests/test_plan_guards.py) stays clean by construction.
 - Spearman needs no pair join at all: average ranks of tied values come
   from a partitioned cumulative over the per-axis value cells, and the
   correlation is one exact-integer moment aggregate over the docs.

@@ -1,1 +1,1 @@
-from .read import load_table, load_tables, read_events, read_partition, read_table  # noqa: F401
+from .read import load_table, read_events, read_partition, read_table  # noqa: F401

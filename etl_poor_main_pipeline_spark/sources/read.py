@@ -209,10 +209,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_parquet(spark, f"{sf_dir.rstrip('/')}/{name}.parquet")
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
-    return tuple(load_table(spark, sf_dir, n) for n in names)
-
-
 def _format_available(spark: SparkSession, fmt: str) -> bool:
     """True when a pluggable DataSource format can be resolved by this
     deployment (Iceberg ships as an external module — present on a real

@@ -1,1 +1,1 @@
-from .events import read_event_stream, sessionize_stream, windowed_event_counts  # noqa: F401
+from .events import sessionize_stream, windowed_event_counts  # noqa: F401

@@ -31,11 +31,6 @@ EVENT_SCHEMA = T.StructType(
 )
 
 
-def read_event_stream(spark: SparkSession, source_dir: str, fmt: str = "json") -> DataFrame:
-    """File-based event stream (each dropped file = a micro-batch)."""
-    return spark.readStream.schema(EVENT_SCHEMA).format(fmt).load(source_dir)
-
-
 def windowed_event_counts(
     events: DataFrame,
     window: str = "1 hour",
@@ -255,4 +250,3 @@ def drain_to_table(
         if pinned:
             spark.conf.set("spark.sql.shuffle.partitions", old)
     return spark.table(name)
-

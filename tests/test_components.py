@@ -1,7 +1,5 @@
 """Connected-components collapse pinned against a driver-side union-find."""
 
-from pyspark.sql import functions as F
-
 from etl_poor_main_pipeline_spark.operators.dedup import connected_components
 
 

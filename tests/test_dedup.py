@@ -1,5 +1,3 @@
-from pyspark.sql import functions as F
-
 from etl_poor_main_pipeline_spark.operators.dedup import (
     fingerprint_dedup,
     jaccard_token_sets,

@@ -50,8 +50,11 @@ def _public_defs() -> dict[str, str]:
 
 
 def _referenced_names() -> set[str]:
-    """Names used as a bare name, an attribute or an import anywhere in
-    non-test code. The ``def`` line itself is not a use."""
+    """Names used as a bare name or an attribute anywhere in non-test code.
+    Neither the ``def`` line nor an import is a use: a package
+    ``__init__.py`` re-export would otherwise keep alive a helper that
+    nothing calls (tests/test_unused_imports.py makes every other import
+    a use of its own)."""
     names: set[str] = set()
     for path in _non_test_sources():
         for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
@@ -59,8 +62,6 @@ def _referenced_names() -> set[str]:
                 names.add(node.id)
             elif isinstance(node, ast.Attribute):
                 names.add(node.attr)
-            elif isinstance(node, ast.ImportFrom):
-                names.update(a.name for a in node.names)
     return names
 
 

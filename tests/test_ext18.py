@@ -7,7 +7,6 @@ from etl_poor_main_pipeline_spark.registry_ext18 import (
     q_anomaly_zscore,
     q_bm25_topk,
     q_embedding_covariance,
-    q_inverted_index,
     q_mixture_temperature,
     q_winsorize,
 )

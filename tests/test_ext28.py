@@ -1,7 +1,5 @@
 """Wave 29: quality-aware dedup representative, classifier eval."""
 
-from pyspark.sql import functions as F
-
 from etl_poor_main_pipeline_spark.registry_ext28 import (
     q_classifier_eval_metrics,
     q_dedup_keep_best,

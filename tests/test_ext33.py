@@ -9,7 +9,6 @@ from etl_poor_main_pipeline_spark.plans.explain import (
     assert_no_python_udf,
 )
 from etl_poor_main_pipeline_spark.registry_ext33 import (
-    _BPE_MERGES,
     q_bpe_apply_merges,
     q_jsonl_round_trip,
     q_pareto_skyline_2d,

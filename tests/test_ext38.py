@@ -1,8 +1,6 @@
 """Wave 39: retrieval eval metrics, event paths, incremental dedup,
 quality-reason bitmap."""
 
-from pyspark.sql import functions as F
-
 from etl_poor_main_pipeline_spark.plans.explain import (
     assert_no_global_window,
     assert_no_python_udf,

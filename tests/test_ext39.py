@@ -1,7 +1,5 @@
 """Wave 40: BFS reachability, exclusion funnel, RLE advisor."""
 
-from pyspark.sql import functions as F
-
 from etl_poor_main_pipeline_spark.plans.explain import (
     assert_no_global_window,
     assert_no_python_udf,

@@ -2,7 +2,6 @@
 
 import math
 
-from pyspark.sql import functions as F
 
 from etl_poor_main_pipeline_spark.plans.explain import (
     assert_no_global_window,

@@ -9,7 +9,6 @@ from etl_poor_main_pipeline_spark.plans.explain import (
     assert_no_python_udf,
 )
 from etl_poor_main_pipeline_spark.registry_ext46 import (
-    _COMPACT_CAPACITY,
     _GEO_AX,
     _GEO_AY,
     _GEO_AZ,

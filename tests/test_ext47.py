@@ -1,7 +1,5 @@
 """Wave 48: matryoshka overlap, silhouette margin, int8 recall."""
 
-from pyspark.sql import functions as F
-
 from etl_poor_main_pipeline_spark.operators import similarity
 from etl_poor_main_pipeline_spark.plans.explain import (
     assert_no_global_window,

@@ -1,7 +1,5 @@
 """Wave 58: Markov eval, weekday seasonality, join fanout."""
 
-from pyspark.sql import functions as F
-
 from etl_poor_main_pipeline_spark.plans.explain import (
     assert_no_global_window,
     assert_no_python_udf,

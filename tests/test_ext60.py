@@ -1,7 +1,5 @@
 """Wave 61: batch assignment, stem classes, 2-D equi-depth grid."""
 
-from pyspark.sql import functions as F
-
 from etl_poor_main_pipeline_spark.plans.explain import (
     assert_no_global_window,
     assert_no_python_udf,

@@ -1,7 +1,5 @@
 """Wave 65: LATERAL top-N, DCT projection, RFM segmentation."""
 
-import math
-
 from pyspark.sql import functions as F
 
 from etl_poor_main_pipeline_spark.plans.explain import (

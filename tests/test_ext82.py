@@ -7,7 +7,6 @@ from etl_poor_main_pipeline_spark.plans.explain import (
 )
 from etl_poor_main_pipeline_spark.registry_ext82 import (
     _PERM_N,
-    _WIN_K,
     _WIN_W,
     q_isotonic_calibration_pava,
     q_permutation_test_hashed,

@@ -69,6 +69,6 @@ def test_wave89_plans_are_scale_safe(spark):
         if fn is not q_group_sequential_obf:
             # OBF's cumulative runs over the calendar-bounded daily frame —
             # the sanctioned bounded-frame global window (see
-            # test_no_global_window.ALLOWED_GLOBAL)
+            # test_plan_guards.ALLOWED_GLOBAL)
             assert_no_global_window(df)
         assert not unbounded_nested_loop_joins(df)

@@ -1,28 +1,8 @@
-"""Mechanized guard against the round-7 defect class: an explicit
-``F.broadcast`` pinned on a side that GROWS with the corpus (filtered
-orders, customer projections, supplier keysets). Spark honors explicit
-broadcast hints regardless of actual size and AQE cannot demote them, so
-each such pin is a driver/executor OOM at 100 TB — correct and fast at
-sf0.1, scale-killer at 100x (VERDICT r7 "What's wrong #2").
-
-Policy enforced here (see fastpath.broadcast_if_small and
-plans.explain.unbounded_broadcast_hints):
-  * the sweep runs with the size gate FORCED SHUT (threshold 0 = any
-    corpus is 'too big'), so it audits the AT-SCALE plan: every
-    ``broadcast_if_small`` pin disappears and only unconditional pins
-    remain;
-  * an unconditional pin must be bounded BY CONSTRUCTION — an aggregate
-    (bounds to its key domain), a LIMIT, a literal relation, a small
-    range, or a join against such a side (the fixed-holdout idiom) must
-    cap the hinted subtree before any growing-table scan;
-  * whether an aggregate's KEY DOMAIN itself grows with the corpus (user
-    keys vs event-type enums) is semantic, adjudicated in query
-    docstrings/PLANS.md — out of mechanical reach here;
-  * ``localCheckpoint`` truncates the logical plan, so a broadcast of a
-    checkpointed frame is unknowable mechanically (LogicalRDD witness).
-    Each such query carries a sanction below naming the REDUCED frame
-    that was materialized; a sanction never waives a raw growing SCAN —
-    Relation witnesses fail even for sanctioned names.
+"""The broadcast size gate (``fastpath.broadcast_if_small``): at bench
+scale the gated pins apply, with the gate shut only the enum pins remain,
+and the gate keys off the source tables' on-disk bytes. The registry-wide
+unbounded-broadcast guard itself runs in tests/test_plan_guards.py, with
+the gate forced shut.
 """
 
 from __future__ import annotations
@@ -36,151 +16,6 @@ from etl_poor_main_pipeline_spark.plans.explain import (
 )
 
 SF = "/root/testdata/sf0.001"
-
-STREAM_PREFIXES = ("streaming_", "stream_")
-
-#: Queries that broadcast a CHECKPOINTED frame (LogicalRDD hides the
-#: producing plan). Each rationale names the reduced structure that was
-#: materialized — bounded by a key domain or an explicit cap, never a raw
-#: corpus scan. The honesty twin below asserts each still plans a
-#: checkpoint-under-hint (drop stale entries); raw Relation witnesses
-#: still FAIL for these names.
-ALLOWED_CHECKPOINT: dict[str, str] = {
-    "dedup_keep_best": (
-        "broadcasts the driver-side union-find component map, already "
-        "COLLECTED to the driver by construction (operators/dedup.py "
-        "connected_components) — its size is the map the driver holds, "
-        "capped by the verified candidate-pair population, not the corpus"
-    ),
-    "dedup_collapse_components": (
-        "same collected union-find component map as dedup_keep_best"
-    ),
-    "text_sentiment_lexicon": (
-        "broadcasts a LITERAL driver-built lexicon (createDataFrame "
-        "prints as LogicalRDD): constant term/weight table"
-    ),
-    "null_safe_join": (
-        "broadcasts the checkpointed DISTINCT order-priority dim (5 enum "
-        "values + NULL); checkpoint exists only to break self-join lineage"
-    ),
-    "retrieval_eval_metrics": (
-        "broadcasts the checkpointed head-K ranked eval lists (LIMIT-ed "
-        "upstream; checkpointed because two join sides consume them)"
-    ),
-    "shapley_attribution": (
-        "broadcasts the LITERAL 2^k channel-subset bit table "
-        "(createDataFrame, constant for the fixed channel set)"
-    ),
-    "isotonic_calibration_pava": (
-        "broadcasts the checkpointed B-row calibration-bin frame "
-        "(B is a query constant; bins are a keyed aggregate upstream)"
-    ),
-    "levene_brown_forsythe": (
-        "broadcasts the per-event-type exact median (row_number-at-rank "
-        "cut over checkpointed value cells): one row per type enum"
-    ),
-}
-
-#: Queries whose broadcast hint covers a JOIN of a bounded keyset against a
-#: growing side — bounded only if the growing side is UNIQUE per join key,
-#: which the plan cannot prove (explain.py emits a 'join-multiplicity'
-#: witness). Each rationale states the uniqueness argument; the honesty
-#: twin below asserts each still plans the pattern (drop stale entries).
-ALLOWED_JOIN_MULTIPLICITY: dict[str, str] = {
-    "knn_label_vote": (
-        "broadcasts the LIMIT-ed holdout keyset inner-joined back to "
-        "embeddings ON vec_id — the embeddings PRIMARY KEY, so the join "
-        "output is exactly the holdout rows (<= _KNN_QN) at any corpus size"
-    ),
-    "conformal_interval_calibration": (
-        "broadcasts the per-event-type interval half-width: the calibration "
-        "join is bounded above it by the rk == ceil((n_cal+1)*(1-alpha)) "
-        "row_number cut under a type-partitioned window — exactly one row "
-        "per event_type enum survives, regardless of corpus size"
-    ),
-}
-
-
-#: Witness-class PREFIXES as emitted by unbounded_broadcast_hints (each
-#: witness leads with 'broadcast hint over <class> ...'). Matching the
-#: leading class marker — not substring containment — keeps the two
-#: sanction lists from absorbing each other's witness classes (ADVICE
-#: r9: a join-multiplicity witness embeds the grown child's text, which
-#: can mention LogicalRDD).
-_CKPT_WITNESS = "broadcast hint over checkpoint barrier"
-_JM_WITNESS = "broadcast hint over join-multiplicity"
-
-
-def _flagged(fn, spark) -> list[str]:
-    return unbounded_broadcast_hints(fn(spark, SF))
-
-
-def test_no_unbounded_broadcast_across_registry(spark, monkeypatch):
-    # gate shut = the 100 TB posture: size-gated pins vanish, the sweep
-    # sees exactly the pins a real cluster plan would carry
-    monkeypatch.setattr(fastpath, "BROADCAST_GATE_THRESHOLD_BYTES", 0)
-    from _sweep import sweep
-
-    qs = registry.queries()
-
-    # Each sanction strips ONLY its own witness CLASS (leading
-    # prefix, not substring containment — ADVICE r9: a
-    # join-multiplicity witness embeds the grown child's text, so a
-    # substring match on 'LogicalRDD' would let the checkpoint
-    # sanction absorb an unsanctioned join-multiplicity witness
-    # whose growing side is checkpointed). A raw growing scan under
-    # a hint fails regardless of either sanction.
-    def probe(name, fn):
-        bad = _flagged(fn, spark)
-        if name in ALLOWED_CHECKPOINT:
-            bad = [w for w in bad if not w.startswith(_CKPT_WITNESS)]
-        if name in ALLOWED_JOIN_MULTIPLICITY:
-            bad = [w for w in bad if not w.startswith(_JM_WITNESS)]
-        return bad
-
-    items = [
-        (name, fn)
-        for name, fn in qs.items()
-        if not name.startswith(STREAM_PREFIXES)
-    ]
-    raw_offenders, build_errors = sweep(items, probe)
-    offenders = {n: a[0][:200] for n, a in raw_offenders.items()}
-    assert not build_errors, f"queries failed to build: {build_errors}"
-    assert not offenders, (
-        f"{len(offenders)} unbounded broadcast hints: "
-        + "; ".join(f"{n}: {a}" for n, a in offenders.items())
-    )
-
-
-def test_sanctioned_join_multiplicity_still_flagged(spark, monkeypatch):
-    """The join-multiplicity sanction list must stay honest: if a
-    sanctioned query stops planning a bounded-keyset-vs-growing-side join
-    under a hint (someone bounded it mechanically), drop the entry."""
-    monkeypatch.setattr(fastpath, "BROADCAST_GATE_THRESHOLD_BYTES", 0)
-    qs = registry.queries()
-    for name in ALLOWED_JOIN_MULTIPLICITY:
-        bad = _flagged(qs[name], spark)
-        assert any(w.startswith(_JM_WITNESS) for w in bad), (
-            f"{name} no longer plans a join-multiplicity broadcast; remove "
-            "it from ALLOWED_JOIN_MULTIPLICITY"
-        )
-
-
-def test_sanctioned_checkpoints_still_flagged(spark, monkeypatch):
-    """The sanction list must stay honest: if a sanctioned query stops
-    planning a checkpoint-under-hint (someone un-checkpointed or bounded
-    it mechanically), drop it from ALLOWED_CHECKPOINT."""
-    monkeypatch.setattr(fastpath, "BROADCAST_GATE_THRESHOLD_BYTES", 0)
-    qs = registry.queries()
-    for name in ALLOWED_CHECKPOINT:
-        bad = _flagged(qs[name], spark)
-        assert any(w.startswith(_CKPT_WITNESS) for w in bad), (
-            f"{name} no longer broadcasts a checkpointed frame; remove it "
-            "from ALLOWED_CHECKPOINT"
-        )
-
-
-# --- the size gate itself -------------------------------------------------
 
 GATED_QUERIES = ("tpch_q3_shipping_priority", "tpch_q5_star_join")
 #: enum pins that legitimately survive the shut gate (nation, region)

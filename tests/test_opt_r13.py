@@ -20,7 +20,6 @@ from __future__ import annotations
 
 import itertools
 
-import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"

@@ -13,7 +13,6 @@ wave can't reintroduce the class.
 from __future__ import annotations
 
 import duckdb
-import pytest
 
 from tests.conftest import SF_DIR
 

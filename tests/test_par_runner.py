@@ -4,6 +4,7 @@ run, naming the missing test."""
 
 from __future__ import annotations
 
+import json
 import os
 import subprocess
 import sys
@@ -74,3 +75,13 @@ def test_worker_skipping_an_item_fails_the_run(tmp_path):
     assert r.returncode == 1, r.stdout
     assert "FAILED test_b.py::test_b_parent_only" in r.stdout
     assert "1 failed, 2 passed" in r.stdout
+
+
+def test_durations_cover_every_test_file():
+    """The shard packer weighs files by tests/.test_durations.json: every
+    test file needs an entry, and a deleted file's entry must go."""
+    here = Path(__file__).parent
+    files = {p.name for p in here.glob("test_*.py")}
+    recorded = set(json.loads((here / ".test_durations.json").read_text()))
+    assert not files - recorded, f"no duration entry: {sorted(files - recorded)}"
+    assert not recorded - files, f"stale duration entry: {sorted(recorded - files)}"

@@ -4,7 +4,6 @@
 import sqlite3
 
 import pytest
-from pyspark.sql import functions as F
 
 from etl_poor_main_pipeline_spark.pipelines import bronze, gold, silver
 from etl_poor_main_pipeline_spark.pipelines.bronze import BRONZE_TABLE

@@ -3,8 +3,6 @@ side against the same expressions Spark executes, via small literal
 DataFrames batched per example set (hypothesis + Spark would be slow
 row-by-row, so examples are collected then evaluated in one job)."""
 
-import math
-
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 

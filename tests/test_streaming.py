@@ -7,8 +7,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_poor_main_pipeline_spark.streaming.events import (
+    EVENT_SCHEMA,
     enrich_stream,
-    read_event_stream,
     sessionize_stream,
     windowed_event_counts,
 )
@@ -46,7 +46,7 @@ def event_dir(spark, tmp_path):
 
 
 def test_windowed_counts_match_batch(spark, event_dir):
-    stream = read_event_stream(spark, event_dir)
+    stream = spark.readStream.schema(EVENT_SCHEMA).json(event_dir)
     q = (
         windowed_event_counts(stream, window="1 hour")
         .writeStream.format("memory")
@@ -73,7 +73,7 @@ def test_windowed_counts_match_batch(spark, event_dir):
 
 
 def test_stateful_sessionization_matches_batch(spark, event_dir):
-    stream = read_event_stream(spark, event_dir)
+    stream = spark.readStream.schema(EVENT_SCHEMA).json(event_dir)
     q = (
         sessionize_stream(stream, gap_minutes=30)
         .writeStream.format("memory")
@@ -97,7 +97,7 @@ def test_stream_static_enrichment(spark, event_dir):
     dim = spark.createDataFrame(
         [(0, "free"), (1, "pro"), (2, "pro")], ["user_id", "tier"]
     )
-    stream = read_event_stream(spark, event_dir)
+    stream = spark.readStream.schema(EVENT_SCHEMA).json(event_dir)
     q = (
         enrich_stream(stream, dim)
         .writeStream.format("memory")
@@ -250,7 +250,7 @@ def test_watermark_drops_late_rows(spark, tmp_path):
         # one drain per arrival wave: the checkpoint carries the watermark
         # across restarts, exactly like a production incremental job (the
         # memory sink can't recover a checkpoint; the file sink can)
-        stream = read_event_stream(spark, str(src))
+        stream = spark.readStream.schema(EVENT_SCHEMA).json(str(src))
         agg = windowed_event_counts(stream, window="1 hour", watermark="2 hours")
         q = (
             agg.writeStream.format("parquet")
