@@ -25,7 +25,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .registry import QuerySpec, _t
-from .session import barrier
 
 # --------------------------------------------------------------------------
 # Cross-source duplicate leakage (X1/X7 [EXT])
@@ -203,6 +202,21 @@ FROM slopes CROSS JOIN pooled
 
 _BT_ITERS = 3
 
+#: Exact accumulator for the MM sums. The oracle SUMs decimal(38,16)
+#: terms; inside an aggregate() lambda decimal(38,16) + decimal(38,16)
+#: types as decimal(38,15), so the fold carries decimal(36,16) and casts
+#: back after each add. Every term has the same value at scale 16.
+_BT_DEC = "decimal(36,16)"
+
+
+def _bt_exact_sum(arr: str, term: str) -> str:
+    """Exact decimal sum of ``term`` (over lambda variable ``s``) across
+    the array expression ``arr``."""
+    return (
+        f"aggregate({arr}, cast(0 as {_BT_DEC}),"
+        f" (t, s) -> cast(t + cast({term} as {_BT_DEC}) as {_BT_DEC}))"
+    )
+
 
 def q_bradley_terry_strengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[EXT] X7/X9 Bradley-Terry strengths from implicit pairwise
@@ -214,9 +228,10 @@ def q_bradley_terry_strengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapped to the micro grid before the next round (cross-engine
     determinism rule). The corpus pass is one user-day-keyed bounded
     self-join reduced to an item x item games table (items = the
-    event-type enum); iterations run on that tiny frame. Output per
-    item: games, wins, and the final strength normalized to sum 1e6
-    over items."""
+    event-type enum, so the table is bounded by the enum squared); that
+    table is collected into ONE row and the MM rounds run as array
+    expressions on it, with no per-round joins. Output per item: games,
+    wins, and the final strength normalized to sum 1e6 over items."""
     e = _t(spark, sf_dir, "events").selectExpr(
         "user_id",
         "unix_micros(ts) div 86400000000 as day",
@@ -227,7 +242,7 @@ def q_bradley_terry_strengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     obs = e.groupBy("user_id", "day", "event_type").agg(F.max("vk").alias("vk"))
     a = obs.selectExpr("user_id", "day", "event_type as ia", "vk as va")
     b = obs.selectExpr("user_id", "day", "event_type as ib", "vk as vb")
-    games = barrier(
+    games = (
         a.join(b, ["user_id", "day"])
         .where(F.col("ia") < F.col("ib"))
         .where(F.col("va") != F.col("vb"))  # ties carry no BT information
@@ -240,50 +255,38 @@ def q_bradley_terry_strengths(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # symmetric per-item view: games and wins per (item, opponent)
-    sym = games.selectExpr(
-        "ia as i", "ib as j", "n_games", "wins_a as wins"
-    ).unionAll(
-        games.selectExpr("ib as i", "ia as j", "n_games", "n_games - wins_a as wins")
+    row = games.agg(
+        F.expr(
+            "concat(collect_list(struct(ia as i, ib as j, n_games as n, wins_a as wins)),"
+            " collect_list(struct(ib as i, ia as j, n_games as n, n_games - wins_a as wins)))"
+        ).alias("sym")
+    ).selectExpr("sym", "array_sort(array_distinct(transform(sym, s -> s.i))) as items")
+    mine = "filter(sym, s -> s.i = i)"
+    row = row.selectExpr(
+        "sym",
+        "items",
+        f"transform(items, i -> aggregate({mine}, 0L, (t, s) -> t + s.n)) as games",
+        f"transform(items, i -> aggregate({mine}, 0L, (t, s) -> t + s.wins)) as wins",
+        "transform(items, i -> 1D) as w",
     )
-    items = sym.groupBy("i").agg(
-        F.sum("n_games").cast("bigint").alias("games"),
-        F.sum("wins").cast("bigint").alias("wins"),
-    )
-    w = items.select("i", F.lit(1.0).alias("w"))
+    state = ["sym", "items", "games", "wins"]
+    d = _bt_exact_sum(mine, "cast(s.n as double) / (m[s.i] + m[s.j])")
     for _ in range(_BT_ITERS):
-        denom = (
-            sym.join(w.selectExpr("i", "w as wi"), "i")
-            .join(w.selectExpr("i as j", "w as wj"), "j")
-            .groupBy("i")
-            .agg(
-                F.sum(
-                    (
-                        F.col("n_games").cast("double")
-                        / (F.col("wi") + F.col("wj"))
-                    ).cast("decimal(38,16)")
-                ).alias("d")
-            )
+        # micro-snap each iterate: floor(1e6*x+0.5)/1e6 in both engines
+        row = row.selectExpr(*state, "map_from_arrays(items, w) as m").selectExpr(
+            *state,
+            "zip_with(items, wins, (i, wi) -> floor(1e6 * (cast(wi as double)"
+            f" / cast({d} as double)) + 0.5) / 1e6) as w",
         )
-        w = (
-            items.join(denom, "i")
-            .selectExpr(
-                "i",
-                # micro-snap each iterate: floor(1e6*x+0.5)/1e6 in both engines
-                "floor(1e6 * (cast(wins as double) / cast(d as double)) + 0.5)"
-                " / 1e6 as w",
-            )
-        )
-    tot = w.agg(F.sum(F.col("w").cast("decimal(38,16)")).alias("tw"))
+    tw = f"cast({_bt_exact_sum('w', 's')} as double)"
     return (
-        items.join(w, "i")
-        .crossJoin(F.broadcast(tot))
-        .selectExpr(
-            "i as event_type",
+        row.selectExpr(
+            "items as event_type",
             "games",
             "wins",
-            "cast(floor(1e6 * w / cast(tw as double) + 0.5) as bigint)"
-            " as strength_micro",
+            f"transform(w, x -> cast(floor(1e6 * x / {tw} + 0.5) as bigint)) as strength_micro",
         )
+        .selectExpr("inline(arrays_zip(event_type, games, wins, strength_micro))")
         .orderBy("event_type")
     )
 

@@ -1,99 +1,39 @@
 """PLANS.md must cover every query above the slow-ledger bar — the
-round-5..7 recurring staleness (hand-maintained audit list lagging the
-ledger) is closed mechanically: tools/explain_audit.py derives its
-section list from the committed idle ledger, and this test asserts the
-committed PLANS.md actually covers it (same sync pattern as
-tools/sync_counts.py).
+recurring staleness of a hand-maintained audit list lagging the ledger
+is closed mechanically: tools/explain_audit.py derives its section list
+from the committed idle ledger, and this test asserts the committed
+PLANS.md actually covers it (same sync pattern as tools/sync_counts.py).
 
-Round-11 structural hardening (VERDICT r10 Next #1, fourth recurrence
-of the red-suite coupling, now at the margin-test level): sections are
-GENERATED at GEN_LEDGER_SEC (below SLOW_LEDGER_SEC/1.25²) while this
-test ASSERTS at SLOW_LEDGER_SEC (1.0s), so a +25% driver refresh of an
-ungenerated query cannot cross even the perturbed bar.
+Sections are GENERATED at GEN_LEDGER_SEC (below SLOW_LEDGER_SEC/1.25²)
+while this test ASSERTS at SLOW_LEDGER_SEC (1.0s), so a +25% refresh of
+an ungenerated query cannot cross even the perturbed bar.
 
-Round-13 (VERDICT r12 What's wrong #1, FIFTH recurrence): BOTH tests
-now read the ledger AS OF THE COMMIT THAT LAST TOUCHED PLANS.md — the
-literal artifact PLANS.md was generated from. r11's `git show
-HEAD:BENCH_QUERIES.json` was not enough: the driver COMMITS its
-marathon refresh in its round commit (2424d82 touched the ledger but
-not PLANS.md, with isolated 1.9–14.7× spikes, e.g. kmv_set_ops
-0.50→7.38s), so even HEAD's copy is the driver's instrument. Margins
-cannot absorb 14×; only the paired read can, and it is robust to every
-future driver round-commit by construction. The builder's measured
-block always commits PLANS.md and BENCH_QUERIES.json together
-(enforced by test_plans_and_ledger_committed_together below), so the
-paired ledger is always the builder's idle instrument.
+Both tests read the ledger walls PLANS.md records it was generated from
+(the fenced ``ledger-walls`` block explain_audit writes at its end), not
+the working-tree BENCH_QUERIES.json: a later ledger refresh (isolated
+1.9–14.7× spikes have been seen, e.g. kmv_set_ops 0.50→7.38s) is a
+different instrument from the one PLANS.md was generated from, and no
+margin absorbs 14×. Reading the recorded walls needs no git history, so
+the tests hold in a shallow checkout or an exported tree.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import re
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _plans_commit() -> str | None:
-    """Hash of the commit that last touched PLANS.md (None if git is
-    unavailable, e.g. an exported tree)."""
-    import subprocess
-
-    try:
-        out = subprocess.run(
-            ["git", "log", "-1", "--format=%H", "--", "PLANS.md"],
-            cwd=REPO,
-            capture_output=True,
-            text=True,
-            timeout=30,
-        )
-        return out.stdout.strip() or None if out.returncode == 0 else None
-    except (OSError, subprocess.SubprocessError):
-        return None
-
-
-def _load(committed: bool = True):
-    """Load (ledger, PLANS.md sections, registry names).
-
-    committed=True (the default — VERDICT r12 What's wrong #1, fifth
-    recurrence) reads BENCH_QUERIES.json from the commit that last
-    touched PLANS.md: the literal artifact PLANS.md was generated
-    from. Both the working-tree copy AND HEAD's copy can be the
-    driver's post-round marathon refresh (noise up to 14.7× on
-    isolated queries; the driver commits its refresh), so NO coverage
-    test may read either. Falls back to the on-disk file if git is
-    unavailable (e.g. an exported tree).
-    """
-    ledger = None
-    if committed:
-        import subprocess
-
-        ref = _plans_commit()
-        if ref:
-            try:
-                out = subprocess.run(
-                    ["git", "show", f"{ref}:BENCH_QUERIES.json"],
-                    cwd=REPO,
-                    capture_output=True,
-                    text=True,
-                    timeout=30,
-                )
-                if out.returncode == 0:
-                    ledger = json.loads(out.stdout)
-            except (
-                OSError,
-                subprocess.SubprocessError,
-                json.JSONDecodeError,
-            ):
-                ledger = None
-    if ledger is None:
-        with open(os.path.join(REPO, "BENCH_QUERIES.json")) as fh:
-            ledger = json.load(fh)
-    with open(os.path.join(REPO, "PLANS.md")) as fh:
-        sections = set(re.findall(r"^## (\S+)", fh.read(), flags=re.M))
+def _load():
+    """Load (recorded ledger walls, PLANS.md sections, registry names)."""
     from etl_poor_main_pipeline_spark.registry import queries
+    from tools.explain_audit import recorded_walls
 
-    return ledger, sections, set(queries())
+    with open(os.path.join(REPO, "PLANS.md")) as fh:
+        text = fh.read()
+    sections = set(re.findall(r"^## (\S+)", text, flags=re.M))
+    return recorded_walls(text), sections, set(queries())
 
 
 def test_plans_md_covers_every_slow_ledger_query():
@@ -102,9 +42,7 @@ def test_plans_md_covers_every_slow_ledger_query():
 
     # only queries that still exist can be audited (renames drop out of
     # the ledger at the next refresh)
-    slow = {
-        n for n, w in ledger.items() if w > SLOW_LEDGER_SEC and n in names
-    }
+    slow = {n for n, w in ledger.items() if w > SLOW_LEDGER_SEC and n in names}
     missing = sorted(slow - sections)
     assert not missing, (
         f"{len(missing)} queries above {SLOW_LEDGER_SEC:g}s idle lack a "
@@ -114,57 +52,24 @@ def test_plans_md_covers_every_slow_ledger_query():
 
 
 def test_plans_md_survives_ledger_refresh_noise():
-    """Simulated driver refresh: +25% on every wall. Any query whose
-    perturbed wall crosses the 1.0s test bar must already have a section
-    — i.e. the committed PLANS.md was generated at the 0.55s bar, not
-    the cliff edge. Reads the COMMITTED ledger (PLANS.md's actual
-    input); the working-tree copy is the driver's post-round refresh
-    instrument and red-flagged the suite in rounds 7–10 before this
-    fix."""
-    ledger, sections, names = _load(committed=True)
+    """Simulated ledger refresh: +25% on every recorded wall. Any query
+    whose perturbed wall crosses the 1.0s test bar must already have a
+    section — i.e. the committed PLANS.md was generated at the 0.50s bar,
+    not the cliff edge."""
+    ledger, sections, names = _load()
     from tools.explain_audit import GEN_LEDGER_SEC, SLOW_LEDGER_SEC
 
     assert GEN_LEDGER_SEC * 1.25 * 1.25 <= SLOW_LEDGER_SEC, (
         "generation bar must sit below SLOW_LEDGER_SEC/1.25^2 so a +25% "
-        "driver refresh of a just-under-bar query cannot cross even the "
+        "refresh of a just-under-bar query cannot cross even the "
         "perturbed test bar"
     )
     perturbed_slow = {
-        n
-        for n, w in ledger.items()
-        if w * 1.25 > SLOW_LEDGER_SEC and n in names
+        n for n, w in ledger.items() if w * 1.25 > SLOW_LEDGER_SEC and n in names
     }
     missing = sorted(perturbed_slow - sections)
     assert not missing, (
         f"{len(missing)} queries would lack a PLANS.md section after a "
         f"+25% ledger refresh (regenerate at the {GEN_LEDGER_SEC:g}s bar: "
         f"python tools/explain_audit.py): {missing}"
-    )
-
-
-def test_plans_and_ledger_committed_together():
-    """The paired read above is only sound if the measured-block
-    discipline holds: every commit that regenerates PLANS.md must carry
-    the BENCH_QUERIES.json it was generated from. Assert the last
-    PLANS.md commit also touched the ledger (skip on exported trees
-    without git)."""
-    import subprocess
-
-    ref = _plans_commit()
-    if ref is None:
-        import pytest
-
-        pytest.skip("git unavailable")
-    files = subprocess.run(
-        ["git", "show", "--name-only", "--format=", ref],
-        cwd=REPO,
-        capture_output=True,
-        text=True,
-        timeout=30,
-    ).stdout.split()
-    assert "BENCH_QUERIES.json" in files, (
-        f"PLANS.md was last regenerated in {ref[:10]} without its input "
-        "ledger — commit tools/explain_audit.py output and bench.py's "
-        "BENCH_QUERIES.json refresh together (memory: round-workflow "
-        "step 6)"
     )

@@ -23,6 +23,7 @@ JOB_BUDGET = {
     "dedup_exact": 0,
     "window_lag_lead": 0,
     "text_tf_idf": 0,
+    "bradley_terry_strengths": 0,
     "similarity_ivf_topk": 2,
 }
 

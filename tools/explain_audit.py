@@ -11,6 +11,7 @@ absence of Python in row paths that should be JVM-only.
 
 from __future__ import annotations
 
+import json
 import re
 import sys
 
@@ -193,7 +194,7 @@ AUDITED = [
     ),
     (
         "bradley_terry_strengths",
-        "Bradley-Terry: user-day-keyed bounded self-join reduces to the event-type-enum games matrix; MM iterations on that tiny frame",
+        "Bradley-Terry: user-day-keyed bounded self-join reduces to the event-type-enum games matrix, collected into one row; MM rounds are array expressions on it, no per-round joins",
     ),
     (
         "fellegi_sunter_linkage",
@@ -272,24 +273,30 @@ SLOW_LEDGER_SEC = 1.0
 GEN_LEDGER_SEC = 0.50
 
 
-def audited_names() -> list[tuple[str, str]]:
-    """Hand-annotated queries first (stable order), then every ledger
-    query above GEN_LEDGER_SEC not already hand-annotated, auto-annotated
-    from its wall (generation bar sits 30% below the test bar so ledger
-    refresh noise cannot create uncovered >1s queries)."""
-    import json
+def ledger_walls() -> dict[str, float]:
+    """Walls (s) of every query above GEN_LEDGER_SEC in the committed idle
+    ledger BENCH_QUERIES.json — the input the section list is derived
+    from, recorded in PLANS.md by main()."""
     import os
 
-    entries = list(AUDITED)
-    have = {n for n, _ in entries}
     ledger_path = os.path.join(os.path.dirname(__file__), "..", "BENCH_QUERIES.json")
     try:
         with open(ledger_path) as fh:
             ledger = json.load(fh)
     except OSError:
-        return entries
-    for name, wall in sorted(ledger.items(), key=lambda kv: -kv[1]):
-        if wall > GEN_LEDGER_SEC and name not in have:
+        return {}
+    return {n: w for n, w in ledger.items() if w > GEN_LEDGER_SEC}
+
+
+def audited_names(walls: dict[str, float]) -> list[tuple[str, str]]:
+    """Hand-annotated queries first (stable order), then every ledger
+    query in ``walls`` not already hand-annotated, auto-annotated from its
+    wall (generation bar sits 30% below the test bar so ledger refresh
+    noise cannot create uncovered >1s queries)."""
+    entries = list(AUDITED)
+    have = {n for n, _ in entries}
+    for name, wall in sorted(walls.items(), key=lambda kv: -kv[1]):
+        if name not in have:
             entries.append(
                 (
                     name,
@@ -302,6 +309,17 @@ def audited_names() -> list[tuple[str, str]]:
     return entries
 
 
+#: Opens the fenced block in which PLANS.md records the ledger walls it
+#: was generated from (read back by :func:`recorded_walls`).
+WALLS_FENCE = "```json ledger-walls"
+
+
+def recorded_walls(plans_text: str) -> dict[str, float]:
+    """The ledger walls a PLANS.md text records it was generated from."""
+    start = plans_text.index(WALLS_FENCE) + len(WALLS_FENCE)
+    return json.loads(plans_text[start : plans_text.index("```", start)])
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     from etl_poor_main_pipeline_spark.plans.explain import explain_str
@@ -311,6 +329,7 @@ def main() -> None:
     spark = get_spark(master="local[8]")
     spark.sparkContext.setLogLevel("ERROR")
     qs = queries()
+    walls = ledger_walls()
 
     out = [
         "# PLANS — physical-plan audit (generated by tools/explain_audit.py)",
@@ -324,10 +343,11 @@ def main() -> None:
         f"above {GEN_LEDGER_SEC:g}s in the committed idle ledger",
         f"(BENCH_QUERIES.json); tests/test_plans_coverage.py asserts at the",
         f"{SLOW_LEDGER_SEC:g}s bar, so the 30% margin absorbs driver-refresh",
-        "noise.",
+        "noise. The walls this file was generated from are recorded at its",
+        "end; the coverage test reads them, not the ledger's current copy.",
         "",
     ]
-    for name, why in audited_names():
+    for name, why in audited_names(walls):
         if name not in qs:  # stale ledger entry (renamed/removed query)
             continue
         plan = explain_str(qs[name](spark, sf_dir))
@@ -351,6 +371,15 @@ def main() -> None:
                 for h in uniq[:4]:
                     out.append(f"- {label}: `{h}`")
         out.append("")
+    out += [
+        "---",
+        "",
+        f"Ledger walls (s) above {GEN_LEDGER_SEC:g}s this file was generated from:",
+        "",
+        WALLS_FENCE,
+        json.dumps(walls, indent=0, sort_keys=True),
+        "```",
+    ]
     text = "\n".join(out) + "\n"
     with open("PLANS.md", "w") as f:
         f.write(text)

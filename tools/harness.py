@@ -185,8 +185,9 @@ def timed_count(
     per-stage driver round-trips and a 32-wide shuffle fan-out are pure
     floor; the committed 702-query idle A/B (tools/ab_fastpath.py ->
     AB_FASTPATH.json, RATIO.md "fastpath A/B") shows 2 queries regress
-    >1.5x (bradley_terry 3.9x) and 10 total show >=1.28x regressions —
-    iterative tiny-join loops that rely on AQE coalescing; given its
+    >1.5x (closeness_centrality_types, collocation_llr_bigrams) and
+    9 total show >=1.28x regressions — iterative tiny-join loops that
+    rely on AQE coalescing; given its
     ``name``, such a query keeps AQE via the MEASURED opt-out list
     AQE_KEEP_QUERIES (two-way-tested against the committed A/B). At
     cluster scale the posture is a no-op and AQE stays on for everything.
